@@ -3694,8 +3694,8 @@ def _entity_clusters_sql() -> str:
     """DuckDB twin of entities.entity_clusters: transitive closure
     (WITH RECURSIVE min-label reachability) over the ACCEPTED pair
     graph — deliberately a different closure algorithm than the Spark
-    side's pointer jumping (the dedup_clusters adjudication), with
-    the same truth-purity columns."""
+    side's per-block label-map fold (the dedup_clusters adjudication),
+    with the same truth-purity columns."""
     return f"""
 WITH RECURSIVE {_er_base_ctes()},
 edges AS (

@@ -439,31 +439,33 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out: dict[str, float] = {}
     spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-    for name, (build, mode) in drains.items():
-        glob = (
-            "documents.parquet"
-            if name == "streaming_priority_sample"
-            else "events.parquet"
-        )
-        tmp = tempfile.mkdtemp(prefix=f"bench_{name}_")
-        start = time.perf_counter()
-        query = (
-            build(stream_events_from_parquet(spark, sf_dir, glob=glob))
-            .writeStream.format("memory")
-            .queryName(f"bench_{name}")
-            .outputMode(mode)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        out[name] = round(time.perf_counter() - start, 4)
-        spark.catalog.dropTempView(f"bench_{name}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        print(f"# {name}: {out[name]:.3f}s", file=sys.stderr)
-    spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
+    try:
+        for name, (build, mode) in drains.items():
+            glob = (
+                "documents.parquet"
+                if name == "streaming_priority_sample"
+                else "events.parquet"
+            )
+            tmp = tempfile.mkdtemp(prefix=f"bench_{name}_")
+            start = time.perf_counter()
+            query = (
+                build(stream_events_from_parquet(spark, sf_dir, glob=glob))
+                .writeStream.format("memory")
+                .queryName(f"bench_{name}")
+                .outputMode(mode)
+                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                .start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
+            out[name] = round(time.perf_counter() - start, 4)
+            spark.catalog.dropTempView(f"bench_{name}")
+            shutil.rmtree(tmp, ignore_errors=True)
+            print(f"# {name}: {out[name]:.3f}s", file=sys.stderr)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
     return out
 
 

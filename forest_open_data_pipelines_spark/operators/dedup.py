@@ -985,6 +985,14 @@ def dedup_simhash(
     return simhash_pairs(sigs, bits, max_hamming)
 
 
+def _cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
+    """6-dp cosine from a dot product and two norms; NULL when either
+    norm is zero (``try_divide``: a zero vector has no direction, and
+    the DuckDB oracle's division yields NULL too), so such a pair
+    fails every threshold instead of raising or scoring NaN."""
+    return ratio(F.try_divide(dot, norm_a * norm_b))
+
+
 def dedup_embedding(embeddings: DataFrame, threshold: float = 0.45) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ threshold) — the
     EXACT all-pairs baseline, kept as the oracle/recall anchor only.
@@ -1008,7 +1016,7 @@ def dedup_embedding(embeddings: DataFrame, threshold: float = 0.45) -> DataFrame
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    cos = ratio(dot / (F.col("a.norm") * F.col("b.norm")))
+    cos = _cosine(dot, F.col("a.norm"), F.col("b.norm"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -1070,15 +1078,18 @@ def dedup_embedding_lsh(
     verification across cores.
 
     Verification re-attaches the vectors by id and computes the exact
-    cosine in an ``mapInArrow`` numpy kernel (guide §4.2) whose
+    dot product in an ``mapInArrow`` numpy kernel (guide §4.2) whose
     accumulation is SEQUENTIAL ACROSS DIMS and vectorized across pairs
     — the ``banded_signatures`` trick — so every double is
     bit-identical to ``dedup_embedding``'s Catalyst
     ``zip_with``/``aggregate`` fold (same left-to-right addition from
-    0.0, same float32→double promotion per term); the 6-dp ``ratio``
-    round and threshold filter stay in Catalyst on the kernel's raw
-    double. Re-adjudicated r13 (VERDICT r12 item 5): on Spark 4.1 the
-    Arrow round-trip of the 0.82M candidate pairs costs LESS than the
+    0.0, same float32→double promotion per term); the division by the
+    norms, the 6-dp ``ratio`` round and the threshold filter stay in
+    Catalyst (``_cosine``: a zero-norm pair scores NULL, as in
+    ``dedup_embedding``). Vectors whose length is not ``dim`` (or
+    null) are dropped before hashing and never pair. Re-adjudicated
+    r13 (VERDICT r12 item 5): on Spark 4.1 the Arrow round-trip of
+    the 0.82M candidate pairs costs LESS than the
     interpreted fold it replaces (higher-order lambdas are
     CodegenFallback) — 3.3 → 2.7 s at sf0.1, reversing the r3/r5
     rejection. A flat 64-term codegen Add chain was also measured and
@@ -1102,9 +1113,13 @@ def dedup_embedding_lsh(
     norm = F.sqrt(
         F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x)
     )
-    e = embeddings.select("vec_id", "embedding", norm.alias("norm"))
+    # Only ``dim``-long vectors can be hashed against the ``dim``-wide
+    # hyperplanes or reshaped by the verify kernel; any other length
+    # (or a null vector) never pairs, as its cosine would be NULL.
+    valid = embeddings.where(F.size("embedding") == dim)
+    e = valid.select("vec_id", "embedding", norm.alias("norm"))
     banded = _persist(
-        banded_signatures(embeddings, "vec_id", "embedding", n_planes, bands, dim)
+        banded_signatures(valid, "vec_id", "embedding", n_planes, bands, dim)
     )
     if max_bucket is not None:
         # Per-bucket size cap — the hot-shingle stop-list convention
@@ -1157,7 +1172,10 @@ def dedup_embedding_lsh(
     # docstring): dims accumulate sequentially (bit-identical to the
     # zip_with/aggregate fold), pairs vectorize across the batch.
     # Explicit select keeps the Arrow boundary to exactly the columns
-    # the kernel reads (guide §4.1 column-pruning caveat).
+    # the kernel reads (guide §4.1 column-pruning caveat). The kernel
+    # returns the raw dot product only; the division stays in Catalyst
+    # (``_cosine``) so a zero norm yields NULL, never a NaN that would
+    # pass ``>= threshold``.
     def _verify(batches):
         import numpy as np
         import pyarrow as pa
@@ -1178,8 +1196,6 @@ def dedup_embedding_lsh(
                 .reshape(n, dim)
                 .astype(np.float64)
             )
-            na = batch.column("norm_a").to_numpy(zero_copy_only=False)
-            nb = batch.column("norm_b").to_numpy(zero_copy_only=False)
             acc = np.zeros(n, dtype=np.float64)
             for i in range(dim):
                 acc += ea[:, i] * eb[:, i]
@@ -1187,16 +1203,27 @@ def dedup_embedding_lsh(
                 [
                     batch.column("vec_a"),
                     batch.column("vec_b"),
-                    pa.array(acc / (na * nb), type=pa.float64()),
+                    batch.column("norm_a"),
+                    batch.column("norm_b"),
+                    pa.array(acc, type=pa.float64()),
                 ],
-                names=["vec_a", "vec_b", "cos_raw"],
+                names=["vec_a", "vec_b", "norm_a", "norm_b", "dot"],
             )
 
     scored = joined.select(
         "vec_a", "vec_b", "emb_a", "emb_b", "norm_a", "norm_b"
-    ).mapInArrow(_verify, "vec_a bigint, vec_b bigint, cos_raw double")
+    ).mapInArrow(
+        _verify,
+        "vec_a bigint, vec_b bigint, norm_a double, norm_b double, dot double",
+    )
     return (
-        scored.select("vec_a", "vec_b", ratio(F.col("cos_raw")).alias("cosine"))
+        scored.select(
+            "vec_a",
+            "vec_b",
+            _cosine(F.col("dot"), F.col("norm_a"), F.col("norm_b")).alias(
+                "cosine"
+            ),
+        )
         .where(F.col("cosine") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
@@ -1266,7 +1293,7 @@ def dedup_semantic(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    cos = ratio(dot / (F.col("a.norm") * F.col("b.norm")))
+    cos = _cosine(dot, F.col("a.norm"), F.col("b.norm"))
     a_beats_b = (F.col("a.cent_cos") < F.col("b.cent_cos")) | (
         (F.col("a.cent_cos") == F.col("b.cent_cos"))
         & (F.col("a.vec_id") < F.col("b.vec_id"))
@@ -1487,7 +1514,11 @@ def dedup_clusters(
     scale the large-star/small-star variant bounds per-key fan-in; at
     this geometry the plain doubling scheme's skew is already handled
     by AQE). The per-pass count() is an aggregate action, not a
-    driver-side data collect.
+    driver-side data collect. The closure is global because near-dup
+    pairs are not confined to any key: a component can span every
+    partition. ``entities.entity_clusters``, whose pairs all come from
+    one block equi-join, closes each block in a single aggregation
+    instead and does not use this loop.
     """
     if pairs is None:
         # Default pair source: the prefix-filtered (ppjoin) EXACT

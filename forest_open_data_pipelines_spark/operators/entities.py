@@ -29,9 +29,14 @@ letters of both name tokens) gives ≤ 256 blocks whose sizes are
 uniform by construction (custkey arithmetic) — the candidate-pair
 mass is Σ_b |b|², quadratic per block but equi-join-shaped (shuffle
 on block_key, no cartesian — plan-guarded), and the verify predicate
-is one integer Levenshtein on short strings per candidate.  At 100 TB
-the same plan holds with a finer key (more initials, phonetic codes);
-skewed blocks follow the documented salting path.
+is one integer Levenshtein on short strings per candidate.  Because
+every accepted pair lies inside one block, so does every cluster:
+``entity_clusters`` closes components per block in one aggregation,
+O(|b|²) per block like the candidate join, with no global iterative
+closure.  At 100 TB the same plan holds with a finer key (more
+initials, phonetic codes); skewed blocks follow the documented salting
+path, and a block too large for one row's label map would need the
+global ``dedup.connected_components`` closure instead.
 """
 
 from __future__ import annotations
@@ -122,12 +127,19 @@ def _block_key(name: Column) -> Column:
     )
 
 
+def _keyed(customer: DataFrame) -> DataFrame:
+    """Records + block key.  A null ``c_custkey`` has no name and no
+    rec_id, so it can never pair; it is dropped here, before any
+    grouping keys a map on rec_id."""
+    return er_records(customer.where(F.col("c_custkey").isNotNull())).withColumn(
+        "block_key", _block_key(F.col("name"))
+    )
+
+
 def _keyed_records(customer: DataFrame) -> DataFrame:
     """Records + block key, persisted once — the self-join and the
     eval's truth join both re-read THIS frame, not the dim table."""
-    return _persist(
-        er_records(customer).withColumn("block_key", _block_key(F.col("name")))
-    )
+    return _persist(_keyed(customer))
 
 
 def _resolve_pairs(recs: DataFrame, max_edit: int) -> DataFrame:
@@ -168,7 +180,6 @@ def _resolve_pairs(recs: DataFrame, max_edit: int) -> DataFrame:
                 "is_true_match"
             ),
         )
-        .orderBy("left_rec_id", "right_rec_id")
     )
 
 
@@ -178,7 +189,9 @@ def entity_resolution(
     """Candidate pairs from the block equi-join, verified by
     lowercase Levenshtein ≤ ``max_edit``, labelled against the
     closed-form ground truth (``is_true_match``: same entity)."""
-    return _resolve_pairs(_keyed_records(customer), max_edit)
+    return _resolve_pairs(_keyed_records(customer), max_edit).orderBy(
+        "left_rec_id", "right_rec_id"
+    )
 
 
 def entity_clusters(
@@ -192,43 +205,104 @@ def entity_clusters(
     ER failure mode this report exists to surface), and the
     component's min rec_id is the canonical survivor.
 
-    Reuses the corpus dedup closure verbatim (``connected_components``
-    — pointer jumping + hot-label broadcast split; see dedup_clusters
-    for the scale argument); the oracle is the deliberately different
-    recursive-CTE closure (the dedup_clusters adjudication: closure-
-    by-recursion cannot share a convergence bug with closure-by-
-    doubling)."""
-    from .dedup import _PERSISTED, connected_components
+    Block confinement: every accepted pair comes from the equi-join on
+    ``block_key``, so both ends of every edge share a block and every
+    component lies inside ONE block.  The closure therefore needs no
+    global iteration (``dedup.connected_components``' pointer jumping
+    is for pair graphs not confined to a key): each block's records
+    are grouped into one row with the block's pairs, and one
+    ``aggregate`` folds the edges over a ``rec_id → label`` map,
+    relabelling the larger of an edge's two labels to the smaller, so
+    every label ends as its component's min rec_id whatever the edge
+    order.  The two labels are read once per edge (the one-element
+    ``transform`` binds them; inlined into ``transform_values`` they
+    would be looked up once per map entry), so an edge costs
+    O(|block|) and a block O(|block|²) — the order the candidate join
+    already pays.  It is all one lazy plan: no loop, no persist, no
+    checkpoint, no job while the frame is built; the cluster stats are
+    windows over rows already partitioned by ``block_key``.
 
-    recs = _keyed_records(customer)
-    pairs = _persist(
-        _resolve_pairs(recs, max_edit).select(
-            F.col("left_rec_id").alias("doc_a"),
-            F.col("right_rec_id").alias("doc_b"),
+    The oracle is still a different algorithm: a recursive-CTE
+    reachability closure over the global edge list (the
+    dedup_clusters adjudication — closure-by-recursion cannot share a
+    bug with closure-by-fold)."""
+    recs = _keyed(customer)
+    edges = (
+        _resolve_pairs(recs, max_edit)
+        .groupBy("block_key")
+        .agg(
+            F.collect_list(
+                F.struct(
+                    F.col("left_rec_id").alias("a"),
+                    F.col("right_rec_id").alias("b"),
+                )
+            ).alias("edges")
         )
     )
-    nodes = recs.select(F.col("rec_id").alias("doc_id"))
-    labels = connected_components(nodes, pairs)
-    withent = labels.join(
-        recs.select(F.col("rec_id").alias("doc_id"), "entity_id"), "doc_id"
+    blocks = (
+        recs.groupBy("block_key")
+        .agg(
+            F.collect_list(F.struct("rec_id", "entity_id")).alias("members")
+        )
+        .join(edges, "block_key", "left")
     )
-    stats = withent.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size"),
-        F.count_distinct("entity_id").alias("n_entities"),
+    ids = F.array_distinct(F.col("members.rec_id"))
+
+    def merge(labels: Column, edge: Column) -> Column:
+        ends = F.struct(
+            labels[edge["a"]].alias("la"), labels[edge["b"]].alias("lb")
+        )
+        return F.element_at(
+            F.transform(
+                F.array(ends),
+                lambda e: F.transform_values(
+                    labels,
+                    lambda _, v: F.when(
+                        v == F.greatest(e["la"], e["lb"]),
+                        F.least(e["la"], e["lb"]),
+                    ).otherwise(v),
+                ),
+            ),
+            1,
+        )
+
+    closed = F.aggregate(
+        F.coalesce(F.col("edges"), F.array().cast(edges.schema["edges"].dataType)),
+        F.map_from_arrays(ids, ids),
+        merge,
     )
-    out = (
-        withent.join(stats, "label")
+    # the closed map is staged as a column: inlined into the member
+    # lambda below it would be re-folded once per member. Rows come
+    # from the members, not the map's keys, so a duplicated custkey
+    # still yields one row per record.
+    rows = (
+        blocks.select("block_key", "members", closed.alias("labels"))
         .select(
-            F.col("doc_id").alias("rec_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-            "n_entities",
-            (F.col("doc_id") == F.col("label")).alias("is_canonical"),
+            "block_key",
+            F.inline(
+                F.transform(
+                    "members",
+                    lambda m: F.struct(
+                        m["rec_id"].alias("rec_id"),
+                        m["entity_id"].alias("entity_id"),
+                        F.col("labels")[m["rec_id"]].alias("cluster_id"),
+                    ),
+                )
+            ),
         )
-        .orderBy("rec_id")
     )
-    _PERSISTED.append(labels)
-    return out
+    from pyspark.sql import Window
+
+    cluster = Window.partitionBy("block_key", "cluster_id")
+    return rows.select(
+        "rec_id",
+        "cluster_id",
+        F.count(F.lit(1)).over(cluster).alias("cluster_size"),
+        F.size(F.collect_set("entity_id").over(cluster))
+        .cast("long")
+        .alias("n_entities"),
+        (F.col("rec_id") == F.col("cluster_id")).alias("is_canonical"),
+    ).orderBy("rec_id")
 
 
 #: Holdout channel for the incremental classifier: entities with

@@ -75,9 +75,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         pass  # conf marked non-modifiable on this deployment
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
     cache = spark.__dict__.setdefault("_fodp_table_cache", {})
-    # abspath-normalized key (ADVICE r12): relative vs absolute
-    # spellings of one directory must share an entry.
-    key = (os.path.abspath(sf_dir), name, tz)
+    key = (_memo_dir(sf_dir), name, tz)
     hit = cache.get(key)
     if hit is not None:
         return hit
@@ -100,6 +98,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", ntz_as_utc_instant(spark, F.col("ts")))
     cache[key] = df
     return df
+
+
+def _memo_dir(sf_dir: str) -> str:
+    """The ``load_table`` memo's directory key: local paths are
+    abspath-normalized so relative and absolute spellings of one
+    directory share an entry; a URI with a scheme (``s3a://``,
+    ``hdfs://``) is kept as written, since abspath would collapse its
+    ``//`` and prepend the working directory."""
+    if "://" in sf_dir:
+        return sf_dir.rstrip("/")
+    return os.path.abspath(sf_dir)
 
 
 def clear_table_cache(spark: SparkSession) -> int:

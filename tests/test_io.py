@@ -48,6 +48,19 @@ def test_detect_delimiter(sample, suffix, expected):
     assert detect_delimiter(sample, suffix) == expected
 
 
+def test_load_table_memo_key_keeps_uri_scheme(monkeypatch, tmp_path):
+    """Local directories share one memo key however they are spelled;
+    a URI with a scheme keeps its ``//`` and gains no working
+    directory."""
+    from forest_open_data_pipelines_spark.sources.tables import _memo_dir
+
+    assert _memo_dir("s3a://bucket/sf") == "s3a://bucket/sf"
+    assert _memo_dir("hdfs://nn:8020/data/sf0.1/") == "hdfs://nn:8020/data/sf0.1"
+    monkeypatch.chdir(tmp_path)
+    assert _memo_dir("sf0.1") == _memo_dir(str(tmp_path / "sf0.1/"))
+    assert _memo_dir("sf0.1") == str(tmp_path / "sf0.1")
+
+
 # ── delimited / json round-trips ───────────────────────────────────────
 
 

@@ -4959,6 +4959,43 @@ def test_dedup_embedding_lsh_bucket_cap(spark):
         assert cos == loose[pair]
 
 
+def test_dedup_embedding_lsh_zero_and_wrong_length_vectors(spark):
+    """Degenerate vectors never pair: two zero vectors collide in every
+    band but score a NULL cosine (not a NaN that passes the threshold),
+    and wrong-length or null vectors are dropped instead of crashing
+    the verify kernel. The clean pairs keep their cosines, and the
+    output stays a subset of the exact variant, which also scores zero
+    norms NULL instead of raising."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    clean = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in dedup.dedup_embedding_lsh(emb).collect()
+    }
+    first = emb.orderBy("vec_id").first()
+    vec = list(first["embedding"])
+    odd = [
+        (10**9 + 0, [0.0] * 64, 0),
+        (10**9 + 1, [0.0] * 64, 0),
+        (10**9 + 2, vec[:-1], 0),
+        (10**9 + 3, vec + [0.0], 0),
+        (10**9 + 4, None, 0),
+    ]
+    bad = emb.unionByName(spark.createDataFrame(odd, emb.schema))
+    lsh = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in dedup.dedup_embedding_lsh(bad).collect()
+    }
+    assert lsh == clean
+    exact = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in dedup.dedup_embedding(bad).collect()
+    }
+    zero = {10**9, 10**9 + 1}
+    assert not any({a, b} & zero for a, b in exact)
+    for pair, cos in lsh.items():
+        assert cos == exact[pair]
+
+
 def test_approx_percentile_variants_error_bounds(spark):
     """exact=False swaps the exact percentile aggregates for
     percentile_approx (the billion-row-group path): the approx value
@@ -7849,6 +7886,88 @@ def test_entity_clusters_purity_and_canonical(spark):
     assert cl[0] == cl[2400]
     purities = {r["n_entities"] for r in rows}
     assert min(purities) == 1 and max(purities) > 1
+
+
+@pytest.mark.parametrize("lo,hi", [(0, 300), (3700, 4300)])
+def test_entity_clusters_match_union_find_over_accepted_pairs(spark, lo, hi):
+    """The per-block closure equals a plain union-find over every pair
+    ``entity_resolution`` accepts: same label (the component's min
+    rec_id), size and entity count for every record, on the
+    Silva/Silvas chain range and on an offset range whose custkeys
+    cross a ``div 256`` suffix boundary."""
+    from forest_open_data_pipelines_spark.operators.dedup import (
+        release_persisted,
+    )
+    from forest_open_data_pipelines_spark.operators.entities import (
+        entity_clusters,
+        entity_resolution,
+    )
+
+    cust = spark.range(lo, hi).selectExpr("id AS c_custkey")
+    try:
+        rows = entity_clusters(cust).collect()
+        pairs = [
+            (r["left_rec_id"], r["right_rec_id"])
+            for r in entity_resolution(cust).collect()
+        ]
+    finally:
+        release_persisted()
+
+    parent = {r["rec_id"]: r["rec_id"] for r in rows}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    members: dict[int, list[int]] = {}
+    for rec in parent:
+        members.setdefault(find(rec), []).append(rec)
+    assert any(len(m) > 2 for m in members.values())
+    for r in rows:
+        root = find(r["rec_id"])
+        assert r["cluster_id"] == root == min(members[root]), r
+        assert r["cluster_size"] == len(members[root]), r
+        assert r["n_entities"] == len({m // 10 for m in members[root]}), r
+        assert r["is_canonical"] == (r["rec_id"] == root), r
+
+
+def test_entity_clusters_persists_nothing(spark):
+    """The closure is one lazy plan: materializing it leaves no
+    persisted or checkpointed RDD behind, without any
+    ``release_persisted()`` call."""
+    from forest_open_data_pipelines_spark.operators.entities import (
+        entity_clusters,
+    )
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    cust = spark.range(300).selectExpr("id AS c_custkey")
+    assert len(entity_clusters(cust).collect()) == 460
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert after - before == set()
+
+
+def test_entity_clusters_null_and_empty_customers(spark):
+    """A null ``c_custkey`` has no name or rec_id and is dropped (it
+    would otherwise be a null map key); an empty customer table gives
+    no rows."""
+    from forest_open_data_pipelines_spark.operators.entities import (
+        entity_clusters,
+    )
+
+    cust = spark.createDataFrame(
+        [(i,) for i in range(30)] + [(None,)], "c_custkey long"
+    )
+    rows = entity_clusters(cust).collect()
+    # 30 canonical + 10 typo (ck % 3 == 0) + 6 case (ck % 5 == 0)
+    assert len(rows) == 46
+    assert all(r["rec_id"] is not None for r in rows)
+    assert entity_clusters(cust.limit(0)).count() == 0
 
 
 def test_overlapping_session_pairs_semantics(spark):
