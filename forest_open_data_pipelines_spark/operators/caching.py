@@ -42,6 +42,8 @@ import json
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 #: bdqueimadas_incremental.py:19
 CACHE_SCHEMA_VERSION = 2
 
@@ -192,9 +194,7 @@ def incremental_cache_plan(orders: DataFrame) -> DataFrame:
     (rebuilding) is delegated to the partitioned writer for exactly
     the rebuild rows.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    fp = _persist(year_source_fingerprints(orders))
+    fp = persist(year_source_fingerprints(orders))
     mf = cached_year_manifests(orders, fp=fp).select(
         "year",
         "cache_schema_version",

@@ -33,6 +33,7 @@ from forest_open_data_pipelines_spark.operators.dedup import (
     hashed_shingle_table,
 )
 from forest_open_data_pipelines_spark.operators.textops import clean_text
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist
 from forest_open_data_pipelines_spark.sources.tables import spread
 
 CURATION_MIN_TOKENS = 20
@@ -120,9 +121,7 @@ def corpus_curation(
     # scans per run; round-8 scan audit — persist() alone does not
     # reliably substitute into every branch). The checkpointed frame
     # is the compact per-doc audit projection (no text column).
-    base = base.withColumn("canonical_doc_id", canonical).localCheckpoint(
-        eager=False
-    )
+    base = checkpoint(base.withColumn("canonical_doc_id", canonical))
     exact_ok = surv & (F.col("doc_id") == F.col("canonical_doc_id"))
 
     norm = F.sqrt(
@@ -139,13 +138,12 @@ def corpus_curation(
         from forest_open_data_pipelines_spark.operators.dedup import (
             EMB_LSH_BANDS,
             EMB_LSH_PLANES,
-            _persist,
         )
         from forest_open_data_pipelines_spark.operators.similarity import (
             banded_signatures,
         )
 
-        banded = _persist(
+        banded = persist(
             banded_signatures(
                 pool, "doc_id", "embedding", EMB_LSH_PLANES, EMB_LSH_BANDS
             )
@@ -320,12 +318,10 @@ def decontaminate_ngram(
     the corpus gram stream; the only wide exchange is the final
     per-doc count (map-side combinable). Never all-pairs.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     # persist: the gram table feeds BOTH the benchmark-split distinct
     # and the corpus stream — without it the n-term zip_with gram
     # builder (the expensive part at n=8) runs once per branch
-    grams = _persist(hashed_shingle_table(documents, n))
+    grams = persist(hashed_shingle_table(documents, n))
     is_bench = F.col("doc_id") % bench_mod == 0
     bench_grams = (
         grams.where(is_bench)
@@ -448,12 +444,10 @@ def _dsir_model(
     frozen-model collect. The ratio table is ≤ n_buckets rows; the
     token frame is persisted because it feeds both the histogram and
     the batch scoring join."""
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     term = F.explode(F.split(F.lower(clean_text(F.col("text"))), " ")).alias(
         "term"
     )
-    tok = _persist(
+    tok = persist(
         spread(documents)
         .select("doc_id", "lang", term)
         .where(F.col("term") != "")
@@ -634,12 +628,10 @@ def _mixture_rates(documents: DataFrame) -> DataFrame:
     the per-language allocation table. Token counts use the whitespace
     tokenizer every other text operator shares; arithmetic is integer
     until the final 6-dp rate so both engines agree bit-for-bit."""
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     toks = F.size(F.split(F.lower(clean_text(F.col("text"))), " "))
     # persist: per_lang feeds the total re-aggregation AND the rate
     # rows — without it each consumer re-runs the corpus token scan
-    per_lang = _persist(
+    per_lang = persist(
         spread(documents)
         .select("lang", toks.cast("long").alias("n_toks"))
         .groupBy("lang")
@@ -1335,7 +1327,6 @@ def corpus_shard_plan(documents: DataFrame, n_shards: int = SHARD_PLAN_DEFAULT) 
     (two scans for one report — visible in the executed plan).
     """
     from forest_open_data_pipelines_spark.functions.columns import micro_div
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     toks = F.size(F.split(F.lower(clean_text(F.col("text"))), " "))
     shard = F.pmod(
@@ -1356,7 +1347,7 @@ def corpus_shard_plan(documents: DataFrame, n_shards: int = SHARD_PLAN_DEFAULT) 
             F.sum("n_bytes").alias("n_bytes"),
         )
     )
-    per = _persist(per)
+    per = persist(per)
     total = per.agg(F.sum("n_tokens").alias("total_tokens"))
     return (
         per.join(F.broadcast(total))

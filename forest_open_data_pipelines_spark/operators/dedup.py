@@ -26,34 +26,11 @@ from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
 from forest_open_data_pipelines_spark.operators.textops import clean_text
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist, unpersist
+# re-exported: perfbench/workloads.py imports release_persisted from here
+from forest_open_data_pipelines_spark.runtime import release_persisted  # noqa: F401
 from forest_open_data_pipelines_spark.sources.tables import spread
 
-# LSH operators persist their signature tables across self-joins. The
-# returned results are lazy, so the operators themselves cannot
-# unpersist; instead every persist is tracked here (strong refs — the
-# JVM cache outlives the Python wrapper) and callers that run many
-# queries in one session (bench.py, the driver) reclaim blocks via
-# release_persisted() after materializing results.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> int:
-    """Unpersist every signature table persisted by dedup operators in
-    this session; returns how many were released. Safe to call after
-    results are collected/written."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
 
 # 60-bit integer from the first 15 hex chars of md5 — portable across
 # engines (fits signed 64-bit everywhere).
@@ -120,13 +97,6 @@ def shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
     return spread(documents).select("doc_id", toks.alias("toks")).select(
         "doc_id", _shingles_from_tokens(F.col("toks"), n).alias("shingles")
     )
-
-
-def _shingles(text: Column, n: int = 3) -> Column:
-    """Single-expression shingle column (kept for expression-level use;
-    prefer ``shingle_table`` which evaluates the tokenizer once)."""
-    toks = F.split(F.lower(clean_text(text)), " ")
-    return _shingles_from_tokens(toks, n)
 
 
 def hashed_shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -258,14 +228,14 @@ def _ngram_pair_commons(
     operator FAILS FAST with remediation instead of running the bad
     shape silently. Results are unchanged when the guard passes.
     """
-    sh = _persist(hashed_shingle_table(documents, n))
+    sh = persist(hashed_shingle_table(documents, n))
     n_docs = sh.agg(F.count("*").alias("n_docs"))
     # Persist AFTER the df window: four consumers (both join sides +
     # the hot-array aggregate + the cold filter) read the windowed
     # frame, and without the persist each one re-runs the explode +
     # s-shuffle + window (4× the dominant shuffle, visible in the
     # executed plan).
-    ex = _persist(
+    ex = persist(
         sh.select(
             "doc_id", F.size("hashes").alias("n_sh"), F.explode("hashes").alias("s")
         )
@@ -413,12 +383,12 @@ def dedup_winnowing(
     sets on both engines) — never all-pairs. Both per-doc windows
     (gram count, winnow min) share one doc_id exchange and sort.
     """
-    base = _persist(
+    base = persist(
         spread(documents).select(
             "doc_id", F.lower(clean_text(F.col("text"))).alias("t")
         )
     )
-    fps = _persist(winnowing_fingerprint_frame(base, k, w))
+    fps = persist(winnowing_fingerprint_frame(base, k, w))
     n_docs = F.broadcast(base.agg(F.count(F.lit(1)).alias("n_docs")))
     cap_ok = F.col("df") <= F.greatest(F.lit(8.0), F.lit(max_df) * F.col("n_docs"))
     keep = (
@@ -428,7 +398,7 @@ def dedup_winnowing(
         .where(cap_ok)
         .select("fp")
     )
-    kept = _persist(fps.join(keep, "fp"))
+    kept = persist(fps.join(keep, "fp"))
     counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nfp"))
     a = kept.select(F.col("doc_id").alias("doc_a"), "fp")
     b = kept.select(F.col("doc_id").alias("doc_b"), "fp")
@@ -485,7 +455,7 @@ def build_winnowing_index(
     # the r12 zero-shuffle rewrite) TWICE per index build. One pinned
     # (doc_id, fp) pass serves both; released by release_persisted()
     # like every other signature table.
-    fp_base = _persist(winnowing_fingerprint_frame(cleaned, k, w))
+    fp_base = persist(winnowing_fingerprint_frame(cleaned, k, w))
     n_base = F.broadcast(
         base_docs.select("doc_id").agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -596,7 +566,7 @@ def winnowing_incremental(
     """
     base_k, hot = build_winnowing_index(base_docs, k, w, max_df)
     return classify_against_winnowing_index(
-        new_docs, _persist(base_k), _persist(hot), k, w, tau_micro, min_shared
+        new_docs, persist(base_k), persist(hot), k, w, tau_micro, min_shared
     )
 
 
@@ -630,30 +600,6 @@ def dedup_containment(
         .where(F.col("containment") >= threshold)
         .orderBy("doc_a", "doc_b")
     )
-
-
-def minhash_signatures(
-    documents: DataFrame, num_hashes: int = 16, n: int = 3
-) -> DataFrame:
-    """MinHash signatures: sig[i] = min over shingles of
-    (a_i·base(s) + b_i) mod p, base(s) = md5_int(s) mod p.
-
-    One md5 per shingle (the bases column), then num_hashes cheap
-    affine passes over the in-memory array — computed with array
-    lambdas, one row per doc, no explode, map-side only."""
-    bases = F.transform(F.col("hashes"), lambda h: h % MINHASH_P)
-    with_bases = hashed_shingle_table(documents, n).select("doc_id", bases.alias("bases"))
-
-    def _affine(a: int, b: int):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
-
-    sigs = F.array(
-        *[
-            F.array_min(F.transform(F.col("bases"), _affine(a, b)))
-            for a, b in minhash_coeffs(num_hashes)
-        ]
-    )
-    return with_bases.select("doc_id", sigs.alias("signature"))
 
 
 def minhash_band_frame(
@@ -733,8 +679,8 @@ def dedup_minhash(
     is the standard materialize-the-signature-table step of every LSH
     dedup pipeline.
     """
-    sh = _persist(hashed_shingle_table(documents, n))
-    sigs = _persist(minhash_band_frame(sh, num_hashes, bands))
+    sh = persist(hashed_shingle_table(documents, n))
+    sigs = persist(minhash_band_frame(sh, num_hashes, bands))
     cand = (
         sigs.alias("x")
         .join(sigs.alias("y"), ["band_id", "band_hash"])
@@ -875,7 +821,7 @@ def dedup_simhash64(
     probability per block stays ~2^-8 — and the measured P/R
     (SIMHASH64_MAX_HAMMING note) dominates the 32-bit variant.
     Signatures persist across the self-join as one long/doc."""
-    sigs = _persist(simhash_signatures64(documents))
+    sigs = persist(simhash_signatures64(documents))
     return simhash_pairs(sigs, 64, max_hamming)
 
 
@@ -981,7 +927,7 @@ def dedup_simhash(
     Signatures are persisted across the bucket self-join — one long per
     doc, trivially cacheable, and it stops the 32-bit-aggregation
     signature pipeline from running once per join side."""
-    sigs = _persist(simhash_signatures(documents, bits))
+    sigs = persist(simhash_signatures(documents, bits))
     return simhash_pairs(sigs, bits, max_hamming)
 
 
@@ -1118,7 +1064,7 @@ def dedup_embedding_lsh(
     # (or a null vector) never pairs, as its cosine would be NULL.
     valid = embeddings.where(F.size("embedding") == dim)
     e = valid.select("vec_id", "embedding", norm.alias("norm"))
-    banded = _persist(
+    banded = persist(
         banded_signatures(valid, "vec_id", "embedding", n_planes, bands, dim)
     )
     if max_bucket is not None:
@@ -1276,7 +1222,7 @@ def dedup_semantic(
     centroids = train_ivf_centroids(embeddings, n_cells, 0)
     cell_scored = _cell_scored(_centroid_literal(centroids))
     best = F.array_max(cell_scored)
-    assigned = _persist(
+    assigned = persist(
         spread(embeddings)
         .select("vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm"))
         .select(
@@ -1414,7 +1360,7 @@ def dedup_ngram_ppjoin(
     ppjoin bound — orders of magnitude below the all-shared-shingle
     join — and every step is windows/joins Catalyst handles with AQE.
     """
-    sh = _persist(hashed_shingle_table(documents, n))
+    sh = persist(hashed_shingle_table(documents, n))
     ex = sh.select(
         "doc_id", F.size("hashes").alias("n_sh"), F.explode("hashes").alias("s")
     ).withColumn("df", F.count("*").over(Window.partitionBy("s")))
@@ -1431,7 +1377,7 @@ def dedup_ngram_ppjoin(
     )
     # Persisted: both equi-join sides consume the prefix — without it
     # each side re-runs the explode + df window + rank window.
-    prefix = _persist(
+    prefix = persist(
         ex.withColumn("pos", F.row_number().over(order_w))
         .where(F.col("pos") <= prefix_len)
         .select("doc_id", "n_sh", "s")
@@ -1483,7 +1429,6 @@ def dedup_clusters(
     threshold: float = 0.8,
     max_iters: int = 20,
     pairs: DataFrame | None = None,
-    closure: str = "doubling",
 ) -> DataFrame:
     """Connected components over the near-duplicate pair graph: one row
     per document with its cluster id (the component's min doc_id), the
@@ -1504,17 +1449,16 @@ def dedup_clusters(
     the O(log d) doubling scheme — a chain of length d converges in
     ~log₂(d) passes instead of d. Each pass is two shuffles over the
     labels table (one row per doc, 16 bytes) plus one over the edge
-    list — never the corpus text. Convergence is checked with a
-    changed-row count per pass; near-dup components are shallow, so
+    list — never the corpus text. Convergence is checked with one
+    label-mass aggregate per pass; near-dup components are shallow, so
     2–3 passes close the fixpoint in practice.
 
     Scale: the labels/edges tables are O(n_docs) rows independent of
     document size; everything is equi-joins on long keys (AQE-split on
-    skew — a mega-cluster's hub label is a hot key, and at corpus
-    scale the large-star/small-star variant bounds per-key fan-in; at
-    this geometry the plain doubling scheme's skew is already handled
-    by AQE). The per-pass count() is an aggregate action, not a
-    driver-side data collect. The closure is global because near-dup
+    skew — a mega-cluster's hub label is resolved through the
+    hot-label broadcast in ``connected_components``). The per-pass
+    mass check is an aggregate action, not a driver-side data
+    collect. The closure is global because near-dup
     pairs are not confined to any key: a component can span every
     partition. ``entities.entity_clusters``, whose pairs all come from
     one block equi-join, closes each block in a single aggregation
@@ -1532,23 +1476,10 @@ def dedup_clusters(
         # pairs for the approximate generators — the closure is
         # agnostic to where edges came from.
         pairs = dedup_ngram_ppjoin(documents, n=n, threshold=threshold)
-    pairs = _persist(pairs.select("doc_a", "doc_b"))
+    pairs = persist(pairs.select("doc_a", "doc_b"))
     nodes = documents.select("doc_id")
-    # ``closure`` picks the transitive-closure engine: "doubling" (the
-    # measured default — pointer jump + hot-label broadcast split) or
-    # "star" (alternating large-star/small-star, Kiveris et al.) — the
-    # labels are identical (asserted in tests + tools/cc_ab.py); see
-    # connected_components_star's docstring for the A/B verdict.
-    engines = {
-        "doubling": connected_components,
-        "star": connected_components_star,
-    }
-    if closure not in engines:
-        raise ValueError(
-            f"closure={closure!r}: expected one of {sorted(engines)}"
-        )
-    cc = engines[closure]
-    labels = cc(nodes, pairs, max_iters=max_iters)
+    labels = connected_components(nodes, pairs, max_iters=max_iters)
+    unpersist(pairs)  # the returned labels are materialized
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     out = (
         labels.join(sizes, "label")
@@ -1560,7 +1491,6 @@ def dedup_clusters(
         )
         .orderBy("doc_id")
     )
-    _PERSISTED.append(labels)
     return out
 
 
@@ -1586,9 +1516,10 @@ def connected_components(
     (doc_id, label) where label is the component's min doc_id.
     Iterative min-neighbor propagation + pointer jumping (see
     ``dedup_clusters`` for the scale argument); each intermediate
-    labels table is persisted for the pass and unpersisted when the
-    next one lands — only the final table stays cached (tracked in
-    ``_PERSISTED`` for ``release_persisted``).
+    labels table is checkpointed for the pass and freed once the next
+    pass's label-mass check has materialized its successor — only the
+    final table stays cached (tracked by ``runtime`` until
+    ``release_persisted``).
 
     MEGA-CLUSTER HARDENING (the large-star/small-star concern): every
     member of a viral duplicate cluster carries the SAME label, so the
@@ -1604,7 +1535,7 @@ def connected_components(
     is partially aggregated map-side, so hub fan-in combines before
     the shuffle.
     """
-    edges = _persist(
+    edges = persist(
         pairs.select("doc_a", "doc_b").union(
             pairs.select(
                 F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
@@ -1616,9 +1547,9 @@ def connected_components(
     # nests one join-tree per pass and Catalyst re-analysis dominates
     # wall-clock by ~pass 5 (measured: sf0.1 ran past 500 s with
     # persist-only lineage; sub-second per pass with checkpoints).
-    labels = nodes.select(
-        "doc_id", F.col("doc_id").alias("label")
-    ).localCheckpoint()
+    labels = checkpoint(
+        nodes.select("doc_id", F.col("doc_id").alias("label")), eager=True
+    )
     # Convergence via the monotone label-mass invariant (optimization
     # r12, guide §2.4): every step can only DECREASE a label
     # (stepped = least(label, nbr_min); the jump target is the
@@ -1648,7 +1579,7 @@ def connected_components(
         # one materialization per pass serves the hot-label count, the
         # jump join and the changed-count (checkpoint also truncates
         # lineage — see above)
-        stepped = stepped.localCheckpoint(eager=False)
+        stepped = checkpoint(stepped)
         parents = stepped.select(
             F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
         )
@@ -1673,131 +1604,17 @@ def connected_components(
         jumped = cold_rows.unionByName(hot_rows)
         # lazy: the label-mass action below materializes the
         # checkpoint — one job per pass instead of two
-        new_labels = jumped.localCheckpoint(eager=False)
+        new_labels = checkpoint(jumped)
         mass = new_labels.agg(label_mass).collect()[0]["mass"]
+        # that action materialized new_labels, so this pass's inputs
+        # are read no more
+        unpersist(labels)
+        unpersist(stepped)
         labels = new_labels
         if mass == prev_mass:
             break
         prev_mass = mass
-    return labels
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    max_iters: int = 30,
-) -> DataFrame:
-    """Min-label connected components via alternating large-star /
-    small-star rounds (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014) — the bounded-fan-in alternative
-    to ``connected_components``' pointer-jump doubling loop.
-
-    Same contract as ``connected_components``: ``nodes`` has
-    ``doc_id``, ``pairs`` has ``doc_a``/``doc_b`` (undirected), output
-    is (doc_id, label) with label = the component's min doc_id.
-
-    WHY A SECOND CLOSURE EXISTS: the doubling loop's pointer-jump join
-    probes on the label column, and every member of a viral cluster
-    carries the SAME label — the hot-key population is exactly the
-    clusters the operator exists to find (mitigated there by the
-    hot-label broadcast split + AQE). The star scheme instead rewrites
-    the EDGE LIST each round:
-
-    - large-star: for each node u, attach every strictly-greater
-      neighbor to m = min(Γ(u) ∪ {u});
-    - small-star: orient edges child=max/parent=min; for each u,
-      attach u and its smaller neighbors to their min.
-
-    Both rounds are groupBy-min (map-side combinable — a hub's fan-in
-    combines before the shuffle) plus one equi-join of the edge list
-    against the bounded per-node min table, and the rewrite provably
-    SHRINKS mega-star fan-in instead of re-shuffling it: a viral
-    component converges to one star in O(log n) rounds with per-round
-    cost O(|E|). The trade is ~2 shuffled jobs per round over the
-    edge list vs the doubling loop's jobs over the (smaller) labels
-    table — measured A/B in ``tools/cc_ab.py`` (2026-08-15, SURVEY
-    §3): ~10% FASTER than doubling on the production rotation corpus
-    at 1-8× (3.00 vs 3.31 s at 8×, both near-flat), ~9% slower on a
-    synthetic 200k-node viral mega-cluster (11.26 vs 10.33 s) where
-    the doubling loop's hot-label broadcast split already neutralizes
-    the label-probe hot key. Doubling therefore stays the
-    ``dedup_clusters`` default; pick this closure when the edge list
-    is the cheaper table to re-shuffle or when a driver-side
-    hot-parent broadcast is unwanted (this path needs none at any
-    cluster-size distribution).
-
-    Convergence: a round that leaves the (child, parent) edge set
-    unchanged is a fixpoint (all stars, parents = component minima).
-    Each round's edge list is localCheckpoint-ed — same lineage-
-    truncation lesson as the doubling loop (dedup.py:1152).
-    """
-    edges = (
-        pairs.select(
-            F.least("doc_a", "doc_b").alias("u"),
-            F.greatest("doc_a", "doc_b").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        # large-star over the bidirectional view: node x sees Γ(x);
-        # m(x) = min(Γ(x) ∪ {x}); every neighbor y > x re-attaches to
-        # m(x). Edges already oriented (u < v), so Γ is u→v ∪ v→u.
-        bi = edges.select(
-            F.col("u").alias("x"), F.col("v").alias("y")
-        ).unionByName(edges.select(F.col("v").alias("x"), F.col("u").alias("y")))
-        mins = bi.groupBy("x").agg(F.min("y").alias("nbr_min"))
-        mins = mins.select(
-            "x", F.least("nbr_min", F.col("x")).alias("m")
-        )
-        large = (
-            bi.where(F.col("y") > F.col("x"))
-            .join(mins, "x")
-            .select(F.col("m").alias("u"), F.col("y").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: edges are (parent=u < child=v); for each child v,
-        # m = min of its parents; v and its non-min parents attach to
-        # m. The edge (m, v) itself maps to (m, v) through the
-        # u == m branch, so one pass over ``large`` emits the whole
-        # star — no separate child-attach union needed.
-        pmins = large.groupBy("v").agg(F.min("u").alias("m"))
-        small = (
-            large.join(pmins, "v")
-            .select(
-                F.col("m").alias("u"),
-                F.when(F.col("u") != F.col("m"), F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        new_edges = small.localCheckpoint()
-        same_size = new_edges.count() == edges.count()
-        if same_size and new_edges.exceptAll(edges).count() == 0:
-            edges = new_edges
-            break
-        edges = new_edges
-    else:
-        # Exhausting max_iters before the star fixpoint means the
-        # groupBy-min below would read a NON-converged edge list and
-        # return silently-wrong labels — fail fast instead (the
-        # doubling loop has the same guard philosophy: correctness
-        # over partial output).
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint within "
-            f"max_iters={max_iters} rounds; raise max_iters "
-            f"(components converge in O(log n) rounds)"
-        )
-    parents = edges.groupBy(F.col("v").alias("doc_id")).agg(
-        F.min("u").alias("parent")
-    )
-    labels = nodes.join(parents, "doc_id", "left").select(
-        "doc_id", F.coalesce("parent", F.col("doc_id")).alias("label")
-    )
+    unpersist(edges)
     return labels
 
 
@@ -1840,7 +1657,7 @@ def dedup_method_eval(documents: DataFrame) -> DataFrame:
     single-row aggregates unioned — no O(n²) anything beyond what the
     detectors themselves do.
     """
-    truth = _persist(dedup_ngram_jaccard(documents).select("doc_a", "doc_b"))
+    truth = persist(dedup_ngram_jaccard(documents).select("doc_a", "doc_b"))
     methods = {
         "minhash": dedup_minhash(documents).select("doc_a", "doc_b"),
         "simhash": dedup_simhash(documents).select("doc_a", "doc_b"),
@@ -1850,7 +1667,7 @@ def dedup_method_eval(documents: DataFrame) -> DataFrame:
     }
     outs = []
     for name, m in methods.items():
-        m = _persist(m)
+        m = persist(m)
         inter = m.join(truth, ["doc_a", "doc_b"]).agg(
             F.count("*").alias("n_hit")
         )
@@ -1902,8 +1719,8 @@ def dedup_incremental(
     Never new×base all-pairs.
     """
     norm = F.lower(clean_text(F.col("text")))
-    sh_new = _persist(hashed_shingle_table(new_docs, n))
-    sh_base = _persist(hashed_shingle_table(base_docs, n))
+    sh_new = persist(hashed_shingle_table(new_docs, n))
+    sh_base = persist(hashed_shingle_table(base_docs, n))
     fp_base = (
         base_docs.select(F.md5(norm).alias("content_fingerprint"))
         .distinct()
@@ -2078,7 +1895,7 @@ def edit_distance_pairs(
     """
     k = max_dist
     t = F.lower(clean_text(F.col("text")))
-    base = _persist(
+    base = persist(
         spread(documents)
         .select("doc_id", t.alias("t"))
         .select("doc_id", "t", F.length("t").alias("len"))
@@ -2118,7 +1935,7 @@ def edit_distance_pairs(
     gram_df = tagged.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     with_df = tagged.join(gram_df, "s")
     order_w = Window.partitionBy("doc_id").orderBy("df", "s")
-    prefix = _persist(
+    prefix = persist(
         with_df.withColumn("rn", F.row_number().over(order_w))
         .where(F.col("rn") <= q * k + 1)
         .select("doc_id", "len", "s")
@@ -2288,7 +2105,7 @@ def edit_distance_topk(
     candidate id for engine-independent ranking.
     """
     t = F.lower(clean_text(F.col("text")))
-    base = _persist(
+    base = persist(
         spread(documents)
         .select("doc_id", t.alias("t"))
         .select("doc_id", "t", F.length("t").alias("len"))
@@ -2363,10 +2180,10 @@ def dedup_threshold_sweep(
     stated here rather than silently implied).
     """
     lo = min(thresholds)
-    truth = _persist(dedup_ngram_jaccard(documents, n=n, threshold=lo))
+    truth = persist(dedup_ngram_jaccard(documents, n=n, threshold=lo))
     sh = hashed_shingle_table(documents, n)
     banded = minhash_band_frame(sh, num_hashes, bands)
-    cand = _persist(
+    cand = persist(
         banded.alias("x")
         .join(
             banded.alias("y"),
@@ -2521,13 +2338,13 @@ def simhash_budget_sweep(
     curve prices. h=7 stays the promoted default.
     """
     hi = max(budgets)
-    truth = _persist(
+    truth = persist(
         dedup_ngram_jaccard(documents)
         .select("doc_a", "doc_b")
         .withColumn("is_truth", F.lit(True))
     )
-    sigs = _persist(simhash_signatures64(documents))
-    pairs = _persist(simhash_pairs(sigs, 64, hi))
+    sigs = persist(simhash_signatures64(documents))
+    pairs = persist(simhash_pairs(sigs, 64, hi))
     spark = documents.sparkSession
     thr = F.broadcast(
         spark.createDataFrame([(h,) for h in budgets], "max_hamming int")
@@ -2590,7 +2407,7 @@ def cluster_size_histogram(
         F.count_distinct("cluster_id").alias("n_clusters"),
         F.count("*").alias("n_docs"),
     )
-    per = _persist(per)
+    per = persist(per)
     totals = per.agg(
         F.sum("n_clusters").alias("t_clusters"),
         F.sum("n_docs").alias("t_docs"),

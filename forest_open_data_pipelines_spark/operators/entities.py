@@ -44,7 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _persist
+from forest_open_data_pipelines_spark.runtime import persist
+
 
 #: 16×16 deterministic name parts.  First letters are pairwise
 #: distinct within each list (16 first-initials × 16 last-initials =
@@ -139,7 +140,7 @@ def _keyed(customer: DataFrame) -> DataFrame:
 def _keyed_records(customer: DataFrame) -> DataFrame:
     """Records + block key, persisted once — the self-join and the
     eval's truth join both re-read THIS frame, not the dim table."""
-    return _persist(_keyed(customer))
+    return persist(_keyed(customer))
 
 
 def _resolve_pairs(recs: DataFrame, max_edit: int) -> DataFrame:

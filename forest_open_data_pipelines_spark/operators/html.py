@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 # CTA/boilerplate paragraph filter — text_cleanup.py:9-13 (_CTA_LINE),
 # re-derived with the same markers.
 CTA_PATTERN = (
@@ -1055,8 +1057,6 @@ def ckan_resource_select(
     cluster scale this is one extra in-memory materialization of the
     resource list, negligible next to any fact-table stage.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     r = wrap_documents_as_ckan_resources(documents)
     scheme_host = F.regexp_extract(F.col("url"), r"^(https?)://([^/]+)", 2)
     allowed_host = (F.col("url") != "") & F.lower(scheme_host).isin(
@@ -1084,7 +1084,7 @@ def ckan_resource_select(
         F.concat(safe, F.lit("."), fmt),
     ).otherwise(safe)
     filename = F.when(keep_path_name, path_name).otherwise(safe)
-    named = _persist(
+    named = persist(
         r.select(
             "doc_id",
             "url",
@@ -2317,13 +2317,12 @@ def cvm_fund_picks(documents: DataFrame) -> DataFrame:
             )
         )
     )
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     # persist: the data-cut and meta branches both read this frame —
     # without the barrier the union recomputes the distinct + the
     # 12-branch classification per branch (measured 2.2 → 1.3 s at
     # sf0.1); the table is bounded by |distinct urls|
-    classified = _persist(
+    classified = persist(
         rows.select(
             "dataset", "url", is_meta.alias("is_meta"), period.alias("period")
         )

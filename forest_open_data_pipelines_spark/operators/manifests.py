@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 MIN_FEED_ITEMS = 24  # validate_feed_for_stable_publish(min_items=...)
 MAX_REPORT_EXCERPT_CHARS = 260  # catalog/build.py:23
 MIN_TRUNCATED_HEAD_CHARS = 48  # catalog/build.py:157
@@ -462,8 +464,6 @@ def reports_catalog(documents: DataFrame) -> DataFrame:
     broadcast branch. The reference's python loop over config entries,
     as one catalog-sized plan.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     e = report_entries_from_documents(documents)
     required_missing = sum(
         F.when(
@@ -489,7 +489,7 @@ def reports_catalog(documents: DataFrame) -> DataFrame:
             F.lit("' para enriquecer catalogo"),
         ),
     )
-    shaped = _persist(e.select(
+    shaped = persist(e.select(
         "report_id",
         "slug",
         "title",

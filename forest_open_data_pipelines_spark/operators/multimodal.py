@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 if TYPE_CHECKING:
     import pandas as pd
 
@@ -811,13 +813,10 @@ def media_ahash_dedup(
     self-join; bucket width/budget trade-offs are the measured
     simhash64 ones.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        _persist,
-        simhash_pairs,
-    )
+    from forest_open_data_pipelines_spark.operators.dedup import simhash_pairs
 
     media = as_media_table(documents).where(F.length("payload") > 0)
-    sigs = _persist(
+    sigs = persist(
         ahash_signatures(media).select(
             F.col("media_id").alias("doc_id"),
             F.col("ahash").alias("simhash"),
@@ -859,13 +858,11 @@ def classify_against_ahash_index(
     registry persists would accumulate across the stream (the
     classify_against_winnowing_index no-persists rationale).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     new_sigs = ahash_signatures(
         as_media_table(new_docs).where(F.length("payload") > 0)
     ).select("media_id", "ahash", "n_bytes")
     if persist_new:
-        new_sigs = _persist(new_sigs)
+        new_sigs = persist(new_sigs)
     from forest_open_data_pipelines_spark.operators.dedup import (
         signature_blocks,
     )
@@ -928,9 +925,7 @@ def media_ahash_incremental(
     (the pure per-batch classifier) — the identical pieces the
     streaming gate (streaming/ahash_gate.py) runs per micro-batch.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    base_sigs = _persist(
+    base_sigs = persist(
         ahash_signatures(
             as_media_table(base_docs).where(F.length("payload") > 0)
         )

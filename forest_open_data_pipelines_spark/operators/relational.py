@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, money, ratio, scaled_round
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist, unpersist
 
 
 def q1_pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
@@ -593,14 +594,12 @@ def part_revenue_concentration(
     and broadcasts back as a one-row cross join — the canonical
     two-pass global-threshold plan, no fact rescan.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
     # persist: the per-part aggregate feeds BOTH the totals
     # re-aggregation and the threshold filter — without it the "no
     # fact rescan" claim is false (Spark recomputes the scan per
     # consumer; caught via tools/explain.py)
-    per_part = _persist(
+    per_part = persist(
         lineitem.groupBy("l_partkey").agg(F.sum(rev).alias("revenue_d"))
     )
     totals = per_part.agg(
@@ -760,11 +759,10 @@ def top_supplier_by_revenue(
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(18,4)"
     )
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     # persisted for the same two-consumer reason as
     # part_revenue_concentration (max re-aggregation + the filter)
-    per_supp = _persist(
+    per_supp = persist(
         lineitem.where(
             (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
@@ -1079,8 +1077,6 @@ def q20_dominant_suppliers(
     the supplier-part aggregate; the surviving supplier keys collapse
     via distinct and join the broadcast supplier⋈nation dim.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     parts = F.broadcast(
         part.where(F.col("p_name").contains(name_token)).select("p_partkey")
     )
@@ -1089,7 +1085,7 @@ def q20_dominant_suppliers(
         lineitem.where(F.year("l_shipdate") == year)
         .join(parts, F.col("l_partkey") == F.col("p_partkey"))
     )
-    per_sp = _persist(
+    per_sp = persist(
         fact.groupBy("l_partkey", "l_suppkey").agg(F.sum(qty).alias("qty_sp"))
     )
     per_part = per_sp.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
@@ -1263,13 +1259,11 @@ def part_affinity_pairs(lineitem: DataFrame, min_support: int = 5) -> DataFrame:
     per-part counts and the order total are map-side-combinable
     aggregates, and the scalar N rides a one-row broadcast.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     # five plan branches read this frame (pair self-join a/b, per-part
     # counts, the order total) — persisted, the fact scans ONCE and the
     # distinct shuffle never repeats (the Q20 shared-aggregate pattern;
     # unpersisted the executed plan showed 5 lineitem scans)
-    lines = _persist(lineitem.select("l_orderkey", "l_partkey").distinct())
+    lines = persist(lineitem.select("l_orderkey", "l_partkey").distinct())
     a = lines.select("l_orderkey", F.col("l_partkey").alias("part_a"))
     b = lines.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     pair_counts = (
@@ -1393,9 +1387,7 @@ def co_order_edges(lineitem: DataFrame, min_support: int) -> DataFrame:
     materialized so every node has outdegree ≥ 1. Returns the
     PERSISTED (src, dst) edge frame; the DuckDB twins share the
     matching CTE text via one generator the same way."""
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    lines = _persist(lineitem.select("l_orderkey", "l_partkey").distinct())
+    lines = persist(lineitem.select("l_orderkey", "l_partkey").distinct())
     a = lines.select("l_orderkey", F.col("l_partkey").alias("part_a"))
     b = lines.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     pairs = (
@@ -1405,7 +1397,7 @@ def co_order_edges(lineitem: DataFrame, min_support: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .where(F.col("n_ab") >= min_support)
     )
-    return _persist(
+    return persist(
         pairs.select(
             F.col("part_a").alias("src"), F.col("part_b").alias("dst")
         ).unionByName(
@@ -1457,17 +1449,15 @@ def part_pagerank(
     iteration count FIXED (5) and each round's rank frame
     localCheckpoint-ed — NOT merely persisted: the plan must TRUNCATE
     at the previous round or the analyzed lineage nests exponentially
-    (the connected-components discipline, dedup.py:1503; persist-only
+    (the ``dedup.connected_components`` discipline; persist-only
     compiled to an 878 KB plan tree here). The static edge/degree
     frames stay persisted. The pair
     generation itself is the order-key self-join (fan-out bounded by
     lines-per-order), never a part×part cartesian. N is one bounded
     driver scalar (≤ distinct parts), the seed-centroid convention.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     edges = co_order_edges(lineitem, min_support)
-    deg = _persist(
+    deg = persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     )
     n_nodes = deg.count()
@@ -1479,11 +1469,13 @@ def part_pagerank(
             F.lit(0.0).alias("rank"),
         )
     base = (PAGERANK_SCALE * (100 - PAGERANK_DAMP_PCT)) // (100 * n_nodes)
-    edges_deg = _persist(edges.join(deg, "src"))
-    pr = deg.select(
-        F.col("src").alias("node"),
-        F.lit(PAGERANK_SCALE // n_nodes).cast("long").alias("pr"),
-    ).localCheckpoint(eager=False)
+    edges_deg = persist(edges.join(deg, "src"))
+    pr = checkpoint(
+        deg.select(
+            F.col("src").alias("node"),
+            F.lit(PAGERANK_SCALE // n_nodes).cast("long").alias("pr"),
+        )
+    )
     for _ in range(iters):
         contrib = (
             edges_deg.join(pr, edges_deg["src"] == pr["node"])
@@ -1496,16 +1488,14 @@ def part_pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        pr = (
-            deg.join(contrib, deg["src"] == contrib["dst"], "left")
-            .select(
+        pr = checkpoint(
+            deg.join(contrib, deg["src"] == contrib["dst"], "left").select(
                 F.col("src").alias("node"),
                 (
                     F.lit(base).cast("long")
                     + F.coalesce(F.col("s"), F.lit(0).cast("long"))
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=False)
         )
     return (
         pr.join(deg, pr["node"] == deg["src"])
@@ -1546,13 +1536,9 @@ def part_communities(
     is localCheckpoint-ed (the lineage discipline part_pagerank and
     connected_components share).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     edges = co_order_edges(lineitem, min_support)
-    nodes = _persist(edges.select(F.col("src").alias("node")).distinct())
-    labels = nodes.select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint(eager=False)
+    nodes = persist(edges.select(F.col("src").alias("node")).distinct())
+    labels = checkpoint(nodes.select("node", F.col("node").alias("label")))
     w = Window.partitionBy("dst").orderBy(
         F.desc("n_votes"), F.col("label")
     )
@@ -1567,7 +1553,7 @@ def part_communities(
             .where(F.col("rn") == 1)
             .select(F.col("dst").alias("node"), "label")
         )
-        labels = winner.localCheckpoint(eager=False)
+        labels = checkpoint(winner)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
     return (
         labels.join(sizes, "label")
@@ -1604,10 +1590,8 @@ def part_triangles(lineitem: DataFrame, min_support: int = 2) -> DataFrame:
     per-corner explode is 3 rows per triangle, and the final
     aggregate is map-side combinable on part_id.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     edges = co_order_edges(lineitem, min_support)
-    deg = _persist(
+    deg = persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     )
     pairs = edges.where(F.col("src") < F.col("dst"))
@@ -1616,7 +1600,7 @@ def part_triangles(lineitem: DataFrame, min_support: int = 2) -> DataFrame:
     first_is_smaller = (F.col("dega") < F.col("degb")) | (
         (F.col("dega") == F.col("degb")) & (F.col("src") < F.col("dst"))
     )
-    oriented = _persist(
+    oriented = persist(
         pairs.join(da, pairs["src"] == da["pa"])
         .join(db, pairs["dst"] == db["pb"])
         .select(
@@ -1700,9 +1684,7 @@ def part_skyline(part: DataFrame, price_bucket_width: float = 100.0) -> DataFram
     part scan, caught by the plan guard).  The trailing part probe is
     the row-recovery scan, filtered by the broadcast frontier.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    groups = _persist(
+    groups = persist(
         part.groupBy("p_retailprice").agg(F.max("p_size").alias("gmax"))
     )
     bucketed = groups.withColumn(
@@ -1784,7 +1766,7 @@ def part_bfs_hops(
             F.lit(0).cast("int").alias("hop"),
         )
     )
-    visited = visited.localCheckpoint()
+    visited = checkpoint(visited, eager=True)
     for d in range(1, max_hops + 1):
         frontier = (
             visited.where(F.col("hop") == d - 1)
@@ -1794,5 +1776,10 @@ def part_bfs_hops(
             .join(visited.select("part_id"), "part_id", "left_anti")
             .select("part_id", F.lit(d).cast("int").alias("hop"))
         )
-        visited = visited.unionByName(frontier).localCheckpoint()
+        # eager: the new visited set is materialized here, so the
+        # previous round's checkpoint is read no more
+        prev, visited = visited, checkpoint(
+            visited.unionByName(frontier), eager=True
+        )
+        unpersist(prev)
     return visited.orderBy("hop", "part_id")

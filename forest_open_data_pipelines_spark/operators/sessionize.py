@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, money, ratio, scaled_round
+from forest_open_data_pipelines_spark.runtime import persist
 
 SESSION_GAP_MINUTES = 30
 
@@ -309,10 +310,8 @@ def daily_event_counts(events: DataFrame) -> DataFrame:
     aggregate, fill join, NULL-day passthrough) would otherwise each
     re-scan the event fact (audit showed 4 scans; the counts frame is
     types×days rows)."""
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     return spine_fill(
-        _persist(
+        persist(
             events.groupBy("event_type", F.to_date("ts").alias("day")).agg(
                 F.count(F.lit(1)).alias("n_events")
             )
@@ -829,14 +828,12 @@ def overlapping_session_pairs(events: DataFrame) -> DataFrame:
     without the pin each side re-runs the sessionize shuffle — a
     second full events scan (was events×2 in the plan audit).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     iv = events_sessionize(events).select(
         "user_id",
         F.col("session_start").alias("s"),
         F.col("session_end").alias("e"),
     )
-    buckets = _persist(
+    buckets = persist(
         iv.withColumn(
             "bucket",
             F.explode(
@@ -912,8 +909,6 @@ def cuped_ab_metrics(
     persisted — pooled moments and arm sums both consume it), a 2-row
     arm aggregate joined to a 1-row pooled-moment broadcast.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     per_user = events.groupBy("user_id").agg(
         F.round(
             F.sum(
@@ -940,7 +935,7 @@ def cuped_ab_metrics(
         .cast("long")
         .alias("y_cents"),
     )
-    per_user = _persist(per_user)
+    per_user = persist(per_user)
     pooled = per_user.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x_cents").alias("sx"),
@@ -1030,9 +1025,7 @@ def survival_churn_curve(
     horizon+labels, totals+risk — that would otherwise re-run the
     fact aggregation; was events×4 in the plan audit).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    last = _persist(
+    last = persist(
         events.groupBy("user_id").agg(
             F.max(F.to_date("ts")).alias("last_day")
         )
@@ -1044,7 +1037,7 @@ def survival_churn_curve(
             F.col("last_day") > F.date_sub(F.col("h"), censor_days)
         ).alias("censored"),
     )
-    per_day = _persist(
+    per_day = persist(
         lab.groupBy("last_day").agg(
             F.sum(F.when(~F.col("censored"), 1).otherwise(0)).alias(
                 "n_churned"
@@ -1266,9 +1259,8 @@ def markov_next_event_eval(events: DataFrame) -> DataFrame:
         .where(F.col("cur_type").isNotNull())
         .select("cur_type", "next_type", "day")
     )
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    bigrams = _persist(bigrams)
+    bigrams = persist(bigrams)
     split = bigrams.agg(
         F.date_sub(F.max("day"), MARKOV_TEST_DAYS).alias("split_day")
     )

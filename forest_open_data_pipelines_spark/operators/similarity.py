@@ -18,11 +18,13 @@ Python UDFs — it compiles to JVM codegen.
 from __future__ import annotations
 
 import hashlib
+import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
+from forest_open_data_pipelines_spark.runtime import persist
 from forest_open_data_pipelines_spark.sources.tables import spread
 
 
@@ -264,15 +266,28 @@ IVF_KMEANS_ITERS = 2
 # reading the same data hash alike, a different corpus misses.
 _CENTROID_CACHE: dict[tuple[int, int, int], list[tuple[int, list[float]]]] = {}
 
+# Guards every check-then-fill of the three trained-index memos, so
+# concurrent ANN arm threads train a missing entry once. Reentrant:
+# the PQ trainer fills the seed memo while holding it.
+_MEMO_LOCK = threading.RLock()
+
+
+def _memo(cache: dict, key: tuple, train):
+    with _MEMO_LOCK:
+        if key not in cache:
+            cache[key] = train()
+        return cache[key]
+
 
 def clear_centroid_cache() -> int:
     """Drop all cached trained quantizers — IVF centroids AND PQ
     codebooks (tests / corpus swaps); returns how many entries were
     released."""
-    n = len(_CENTROID_CACHE) + len(_PQ_CB_CACHE) + len(_PQ_SEED_CACHE)
-    _CENTROID_CACHE.clear()
-    _PQ_CB_CACHE.clear()
-    _PQ_SEED_CACHE.clear()
+    with _MEMO_LOCK:
+        n = len(_CENTROID_CACHE) + len(_PQ_CB_CACHE) + len(_PQ_SEED_CACHE)
+        _CENTROID_CACHE.clear()
+        _PQ_CB_CACHE.clear()
+        _PQ_SEED_CACHE.clear()
     return n
 
 
@@ -370,9 +385,14 @@ def train_ivf_centroids(
     ``_CENTROID_CACHE`` — train once, reuse as index metadata.
     """
     key = (embeddings.semanticHash(), n_cells, iters)
-    cached = _CENTROID_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _memo(
+        _CENTROID_CACHE, key, lambda: _train_ivf_centroids(embeddings, n_cells, iters)
+    )
+
+
+def _train_ivf_centroids(
+    embeddings: DataFrame, n_cells: int, iters: int
+) -> list[tuple[int, list[float]]]:
     seed_rows = sorted(
         embeddings.where(F.col("vec_id") < n_cells)
         .select("vec_id", "embedding")
@@ -419,7 +439,6 @@ def train_ivf_centroids(
             )
             for cell_id, prev in centroids
         ]
-    _CENTROID_CACHE[key] = centroids
     return centroids
 
 
@@ -756,9 +775,12 @@ def _pq_codebook(
     collect: ks rows, once per corpus (memoized per corpus like the
     IVF centroids)."""
     key = (embeddings.semanticHash(), m, ks, dim)
-    cached = _PQ_SEED_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _memo(_PQ_SEED_CACHE, key, lambda: _seed_pq_codebook(embeddings, m, ks, dim))
+
+
+def _seed_pq_codebook(
+    embeddings: DataFrame, m: int, ks: int, dim: int
+) -> list[list[list[float]]]:
     sub = dim // m
     rows = sorted(
         embeddings.where(F.col("vec_id") < ks)
@@ -770,12 +792,10 @@ def _pq_codebook(
         raise ValueError(
             f"pq codebook needs vec_ids 0..{ks - 1}; got {len(rows)} rows"
         )
-    cb = [
+    return [
         [[float(x) for x in r.embedding[s * sub : (s + 1) * sub]] for r in rows]
         for s in range(m)
     ]
-    _PQ_SEED_CACHE[key] = cb
-    return cb
 
 
 #: Lloyd passes for the trained PQ codebook — fixed like
@@ -821,9 +841,14 @@ def train_pq_codebook(
     collect. Training cost stays out of the bench via the memo cache.
     """
     key = (embeddings.semanticHash(), m, ks, dim, iters)
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _memo(
+        _PQ_CB_CACHE, key, lambda: _train_pq_codebook(embeddings, m, ks, dim, iters)
+    )
+
+
+def _train_pq_codebook(
+    embeddings: DataFrame, m: int, ks: int, dim: int, iters: int
+) -> list[list[list[float]]]:
     import numpy as np
 
     sub = dim // m
@@ -874,7 +899,6 @@ def train_pq_codebook(
         for r in means:
             new_cb[r["s"]][r["code"]][r["j"]] = float(r["mv"])
         cb = new_cb
-    _PQ_CB_CACHE[key] = cb
     return cb
 
 
@@ -1294,9 +1318,7 @@ def ann_method_eval(
     themselves compute. At corpus scale this is the standard
     index-acceptance gate run on a sampled query set.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    truth = _persist(
+    truth = persist(
         ann_topk_bruteforce(embeddings, n_queries, k).select(
             "query_id", "cand_id"
         )
@@ -1307,7 +1329,7 @@ def ann_method_eval(
     # (guide §2.6 — see retrieval_rank_eval for the r13 measurement
     # showing construction-only threading left the arm subtrees
     # evaluating sequentially in the final union action)
-    enc = _persist(
+    enc = persist(
         _pq_encoded(embeddings, _pq_codebook(embeddings), PQ_M, PQ_KS, 64)
     )
     from concurrent.futures import ThreadPoolExecutor
@@ -1321,7 +1343,7 @@ def ann_method_eval(
     }
 
     def _arm(fn):
-        m = _persist(fn().select("query_id", "cand_id"))
+        m = persist(fn().select("query_id", "cand_id"))
         m.count()
         return m
 
@@ -1407,9 +1429,7 @@ def retrieval_rank_eval(
     truth, per-query state is a bounded window over ≤k hit rows, and
     the output is one row per method.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    truth = _persist(
+    truth = persist(
         ann_topk_bruteforce(embeddings, n_queries, k).select(
             "query_id", "cand_id"
         )
@@ -1418,7 +1438,7 @@ def retrieval_rank_eval(
     # (optimization r12): without it the final union action computes
     # the Arrow encode pass once per branch. Bounded rows (m ints + 2
     # doubles per vector), persisted like the truth set.
-    enc = _persist(
+    enc = persist(
         _pq_encoded(embeddings, _pq_codebook(embeddings), PQ_M, PQ_KS, 64)
     )
     # Build AND MATERIALIZE the five method frames CONCURRENTLY
@@ -1447,7 +1467,7 @@ def retrieval_rank_eval(
     }
 
     def _arm(fn):
-        m = _persist(fn().select("query_id", "cand_id", "rank"))
+        m = persist(fn().select("query_id", "cand_id", "rank"))
         m.count()
         return m
 
@@ -1529,9 +1549,7 @@ def ann_recall_vs_dim(
     per dim. The full-dim entry (d = native dim) must score recall
     1.0 — asserted in tests, which pins the harness itself.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    truth = _persist(
+    truth = persist(
         ann_topk_bruteforce(embeddings, n_queries, k).select(
             "query_id", "cand_id"
         )
@@ -1541,7 +1559,7 @@ def ann_recall_vs_dim(
         trunc = embeddings.select(
             "vec_id", F.slice("embedding", 1, d).alias("embedding")
         )
-        m = _persist(
+        m = persist(
             ann_topk_bruteforce(trunc, n_queries, k).select(
                 "query_id", "cand_id"
             )
@@ -1798,8 +1816,6 @@ def embedding_drift_report(embeddings: DataFrame) -> DataFrame:
     the per-label average uses integer micro-cosines so summation
     order cannot drift the 6-dp result.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     ex = embeddings.select(
         "label", F.posexplode("embedding").alias("pos", "v")
     )
@@ -1814,7 +1830,7 @@ def embedding_drift_report(embeddings: DataFrame) -> DataFrame:
     glob = ex.groupBy("pos").agg(
         ratio(F.avg(F.col("v").cast("double"))).alias("g")
     )
-    glob_arr = _persist(
+    glob_arr = persist(
         glob.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "g"))),
@@ -1850,7 +1866,7 @@ def embedding_drift_report(embeddings: DataFrame) -> DataFrame:
     # the ≤-labels-row frame keeps the member scoring scan to ONE pass
     # (unpersisted, Catalyst re-runs the branch for the total as a
     # label-only scan — column-pruned but still a full table pass)
-    per = _persist(
+    per = persist(
         member.groupBy("label").agg(
             F.count("*").alias("n_vecs"),
             (F.round(F.avg(micro), 0) / 1e6).alias(
@@ -2089,8 +2105,6 @@ def bitext_mining(
     6 dp, and every rank window tie-breaks on ids — the same
     conventions as the rest of the embedding family.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     langs = documents.select(F.col("doc_id").alias("vec_id"), "lang")
     tagged = embeddings.join(langs, "vec_id")
     src = tagged.where(F.col("lang") == src_lang).select(
@@ -2123,7 +2137,7 @@ def bitext_mining(
     te = tgt.select(
         "tgt_id", "t_emb", _norm(F.col("t_emb")).alias("t_norm")
     )
-    pairs = _persist(
+    pairs = persist(
         cand.join(se, "src_id")
         .join(te, "tgt_id")
         .select("src_id", "tgt_id", cos.alias("cosine"))
@@ -2155,7 +2169,7 @@ def bitext_mining(
         / 1e6
     )
     margin = ratio(F.col("cosine") / F.nullif(den, F.lit(0.0)))
-    scored = _persist(
+    scored = persist(
         pairs.join(knn_src, "src_id")
         .join(knn_tgt, "tgt_id")
         .select("src_id", "tgt_id", "cosine", margin.alias("margin"))
@@ -2208,8 +2222,6 @@ def embedding_outlier_report(
     over the persisted per-vector stats frame, nothing corpus-sized
     shuffles.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     ex = embeddings.select(F.posexplode("embedding").alias("pos", "v"))
     glob = ex.groupBy("pos").agg(
         ratio(F.avg(F.col("v").cast("double"))).alias("g")
@@ -2236,7 +2248,7 @@ def embedding_outlier_report(
 
     gnorm = _norm("gcent")
     vnorm = _norm("embedding")
-    stats = _persist(
+    stats = persist(
         embeddings.join(F.broadcast(glob_arr)).select(
             "vec_id",
             "label",

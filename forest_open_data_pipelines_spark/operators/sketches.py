@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 SPACESAVING_K = 8
 SPACESAVING_SHARDS = 4
 
@@ -566,7 +568,6 @@ def kmv_distinct_rollup(events: DataFrame, k: int = KMV_K) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from .dedup import _persist
     from ..functions.columns import ratio
 
     hashed = events.select(
@@ -577,7 +578,7 @@ def kmv_distinct_rollup(events: DataFrame, k: int = KMV_K) -> DataFrame:
     )
     # one map-side-combinable distinct on (group, day, hash); persisted
     # so the exact branch re-reads THIS frame, not the fact
-    grp = _persist(
+    grp = persist(
         hashed.groupBy("event_type", "month", "day", "h").agg(
             F.count(F.lit(1)).alias("_n")
         )

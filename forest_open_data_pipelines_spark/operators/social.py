@@ -28,6 +28,7 @@ from forest_open_data_pipelines_spark.functions.columns import (
     ratio,
     safe_pct_change,
 )
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist
 
 # Reference: social/bdqueimadas_monthly_chart.py MONTH_LABELS_PT.
 MONTH_LABELS_PT = (
@@ -331,9 +332,8 @@ def nation_series_with_other(
     # the cohort rank and the recent-window filter all read nm, and
     # without the persist each re-runs the enriched fact scan +
     # aggregate (4 fact scans — round-8 scan audit).
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    nm = _persist(
+    nm = persist(
         enriched.groupBy(
             F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
             "n_name",
@@ -850,7 +850,7 @@ def monthly_chart_spec_scoped(enriched: DataFrame) -> DataFrame:
     # lineage, so every consumer reads the materialized rows by
     # construction — the dedup_clusters lesson applied to the report
     # chain.
-    agg = carousel_scope_aggregate(enriched).localCheckpoint(eager=False)
+    agg = checkpoint(carousel_scope_aggregate(enriched))
     ref = (
         agg.where(F.col("scope") == NATIONAL_SLUG)
         .agg(F.max(F.struct("year", "month")).alias("mx"))
@@ -1054,9 +1054,8 @@ def anp_panel_payloads(
     # result — round-8 scan audit). The latest-month share aggregate
     # still scans the fact table once itself (it needs order-level
     # rows), so the operator costs exactly two fact scans.
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    m = _persist(m)
+    m = persist(m)
     w = Window.orderBy("period")
     combo = m.select(
         "period",

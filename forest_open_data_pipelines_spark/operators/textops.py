@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist, unpersist
 from forest_open_data_pipelines_spark.sources.tables import spread
 
 # Boilerplate/CTA prefixes, mirroring text_cleanup.py:10-14 (_CTA_LINE).
@@ -950,33 +951,6 @@ def gopher_repetition_rules(
     )
 
 
-def quality_repetition_projection(documents: DataFrame) -> DataFrame:
-    """``quality_repetition`` on the ZERO-SHUFFLE projection plan —
-    same rows, same columns, same 6-dp values as the aggregate twin
-    (pinned column-for-column by
-    ``test_repetition_gates_row_cols_match_aggregate_twins`` and by
-    matching oracle hashes at three SFs).
-
-    NOT the catalog plan: the r12 A/B measured 0.64 s (aggregate) vs
-    1.38 s (projection) at sf0.1 — this gate's gram stream is only ~3×
-    the token mass and its shuffle is map-side combinable, so the
-    per-row array sorts cost more than the exchange they remove at
-    bench scale. Kept for corpora where the scan→shuffle byte ratio
-    flips (the gopher twin, at ~9× mass, DOES win — see
-    ``gopher_repetition_rules_projection``) and for zero-state
-    streaming use."""
-    row = repetition_gates_row_cols(staged_repetition_arrays(documents))
-    return row.select(
-        "doc_id",
-        "n_tokens",
-        "distinct_ratio",
-        "top_unigram_frac",
-        "top_bigram_frac",
-        "dup_trigram_frac",
-        "passes_repetition",
-    ).orderBy("doc_id")
-
-
 def gopher_repetition_rules_projection(documents: DataFrame) -> DataFrame:
     """``gopher_repetition_rules`` on the ZERO-SHUFFLE projection plan
     (optimization r12, guide §2.4): the aggregate formulation explodes
@@ -1399,12 +1373,9 @@ def boilerplate_ngrams(
     ``n_docs`` threshold is the two-pass scalar-broadcast shape used
     throughout the repo, not a driver collect.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        _persist,
-        shingle_table,
-    )
+    from forest_open_data_pipelines_spark.operators.dedup import shingle_table
 
-    ex = _persist(
+    ex = persist(
         shingle_table(documents).select(
             "doc_id", F.explode("shingles").alias("s")
         )
@@ -1645,9 +1616,8 @@ def token_histogram(documents: DataFrame) -> DataFrame:
         .select(n.alias("n"))
         .select(F.floor(F.log2("n")).cast("int").alias("bucket_exp"), "n")
     )
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    per = _persist(
+    per = persist(
         bucketed.groupBy("bucket_exp").agg(
             F.count("*").alias("n_docs"), F.sum("n").alias("n_tokens")
         )
@@ -1699,12 +1669,10 @@ def tfidf_top_terms(documents: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     one row per term, so the SKEW is on the tf side only); the top-k
     window partitions by doc_id.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     term = F.explode(F.split(F.lower(clean_text(F.col("text"))), " ")).alias(
         "term"
     )
-    tf = _persist(
+    tf = persist(
         spread(documents)
         .select("doc_id", term)
         .where(F.col("term") != "")
@@ -1945,9 +1913,9 @@ def perplexity_buckets(documents: DataFrame) -> DataFrame:
     # flagged). persist() is NOT enough here: the broadcast-threshold
     # branch plans before the cache substitutes and the recompute then
     # misses charlm's internal pins too (measured WORSE than no pin).
-    scores = charlm_perplexity(documents).select(
-        "doc_id", "n_bigrams", "entropy_bits"
-    ).localCheckpoint(eager=False)
+    scores = checkpoint(
+        charlm_perplexity(documents).select("doc_id", "n_bigrams", "entropy_bits")
+    )
     th = scores.where(F.col("entropy_bits").isNotNull()).agg(
         scaled_round(F.expr("percentile(entropy_bits, 1.0/3)"), 6).alias("t1"),
         scaled_round(F.expr("percentile(entropy_bits, 2.0/3)"), 6).alias("t2"),
@@ -2009,7 +1977,7 @@ def bpe_train(documents: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    syms = wc.select("n", F.split("w", "").alias("s")).localCheckpoint()
+    syms = checkpoint(wc.select("n", F.split("w", "").alias("s")), eager=True)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pair_structs = F.zip_with(
@@ -2037,9 +2005,15 @@ def bpe_train(documents: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
         # strictly longer — so overlaps resolve exactly like the
         # reference implementation). The fold is shared with the
         # encoder (_bpe_apply below).
-        syms = syms.select(
-            "n", _bpe_apply(F.col("s"), l, r, merged).alias("s")
-        ).localCheckpoint()
+        # eager: the merged symbols are materialized here, so the
+        # previous round's checkpoint is read no more
+        prev, syms = syms, checkpoint(
+            syms.select("n", _bpe_apply(F.col("s"), l, r, merged).alias("s")),
+            eager=True,
+        )
+        unpersist(prev)
+    # the merge table is built on the driver: nothing reads syms again
+    unpersist(syms)
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, merged string, freq long"
     ).orderBy("merge_rank")
@@ -2091,10 +2065,9 @@ def bpe_encode(documents: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
         (r["left"], r["right"], r["merged"])
         for r in bpe_train(documents, n_merges).collect()
     ]
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     toks = F.split(F.lower(clean_text(F.col("text"))), " ")
-    words = _persist(
+    words = persist(
         spread(documents)
         .select("doc_id", F.explode(toks).alias("w"))
         .where(F.col("w") != "")
@@ -2210,9 +2183,8 @@ def unigram_lm_step(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    wc = _persist(wc)
+    wc = persist(wc)
     subs = (
         f"flatten(transform(sequence(1, {max_piece_len}),"
         " l -> CASE WHEN length(w) >= l THEN"
@@ -2320,10 +2292,9 @@ def unigram_encode(
         r["piece"]: math.log(max(r["em_count"], 1) / em_total)
         for r in pieces
     }
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     toks = F.split(F.lower(clean_text(F.col("text"))), " ")
-    words = _persist(
+    words = persist(
         spread(documents)
         .select("doc_id", F.explode(toks).alias("w"))
         .where(F.col("w") != "")
@@ -2447,16 +2418,14 @@ def charlm_perplexity(
     scoring explode; one groupBy(doc_id) aggregates exact longs.
     Documents shorter than 2 chars carry NULL entropy and pass.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     t = F.lower(clean_text(F.col("text")))
     # base feeds the bigram explode, the vocab count, AND the final
     # left join; ex feeds both the model counts and the scoring join —
     # persist both so the clean_text regex chain and the explode run
     # ONCE over the corpus instead of 2-4 times (the signature-table
     # pattern of the dedup siblings)
-    base = _persist(spread(documents).select("doc_id", t.alias("t")))
-    ex = _persist(
+    base = persist(spread(documents).select("doc_id", t.alias("t")))
+    ex = persist(
         base.select("doc_id", F.explode(charlm_bigrams()).alias("bg"))
     )
     model = F.broadcast(_charlm_model(base, ex))
@@ -2529,15 +2498,13 @@ def kn_bigram_perplexity(
     equi-join + one exact-long groupBy(doc_id).  Docs with < 2 tokens
     carry NULL entropy and pass (the charlm contract).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     toks = F.split(F.lower(clean_text(F.col("text"))), " ")
     bigrams = F.expr(
         "CASE WHEN size(ts) >= 2 THEN transform(sequence(1, size(ts) - 1),"
         " i -> concat(ts[i - 1], ' ', ts[i])) ELSE array() END"
     )
-    base = _persist(spread(documents).select("doc_id", toks.alias("ts")))
-    ex = _persist(base.select("doc_id", F.explode(bigrams).alias("bg")))
+    base = persist(spread(documents).select("doc_id", toks.alias("ts")))
+    ex = persist(base.select("doc_id", F.explode(bigrams).alias("bg")))
 
     c12 = ex.groupBy("bg").agg(F.count(F.lit(1)).alias("n12"))
     sp = c12.select(
@@ -2781,8 +2748,6 @@ def token_zipf_fit(
     (the charlm micro-bit convention). Ties in frequency rank by
     token string so row_number is engine-independent.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     toks = documents.select(
         "lang",
         F.explode(F.split(F.lower(clean_text(F.col("text"))), " ")).alias(
@@ -2792,7 +2757,7 @@ def token_zipf_fit(
     # freq feeds BOTH the totals branch and the rank-head branch;
     # persisting the vocabulary-sized frame keeps the corpus explode
     # to ONE pass (the signature-table convention)
-    freq = _persist(
+    freq = persist(
         toks.groupBy("lang", "tok").agg(F.count("*").alias("n"))
     )
     totals = freq.groupBy("lang").agg(
@@ -2957,14 +2922,12 @@ def bm25_topk(
     then a bounded merge), so a stopword-heavy query can never pull
     its whole match set into one sort task.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     spark = documents.sparkSession
     wanted = sorted({t for _, terms in queries for t in terms})
     toks = F.filter(
         F.split(F.lower(clean_text(F.col("text"))), " "), lambda x: x != ""
     )
-    per = _persist(
+    per = persist(
         spread(documents)
         .select("doc_id", toks.alias("_t"))
         .select(

@@ -32,6 +32,7 @@ from forest_open_data_pipelines_spark.functions.columns import (
     ratio,
     safe_pct_change,
 )
+from forest_open_data_pipelines_spark.runtime import checkpoint, persist
 
 
 def orders_enriched(
@@ -746,13 +747,11 @@ def nation_month_matrix_augmented(
     audit: 42 parquet scans → 8). Both frames are post-aggregation
     bounded (≤ |nation|·|month| and ≤ |nation| rows), so caching them
     is metadata-sized at any fact scale; lifecycle via
-    ``dedup.release_persisted`` like the LSH signature tables.
+    ``runtime.release_persisted`` like the LSH signature tables.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     return augment_with_mensal(
-        _persist(nation_month_matrix(enriched)),
-        _persist(mensal_counts_from_events(events, customer, nation)),
+        persist(nation_month_matrix(enriched)),
+        persist(mensal_counts_from_events(events, customer, nation)),
         "n_name",
     )
 
@@ -789,11 +788,9 @@ def monthly_by_region_augmented(
     ``nation_month_matrix_augmented``
     (bdqueimadas_overview.py:1400-1430
     ``_augment_monthly_by_biome_with_mensal``)."""
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     return augment_with_mensal(
-        _persist(monthly_by_region(enriched)),
-        _persist(mensal_counts_from_events_by_region(events, customer, nation, region)),
+        persist(monthly_by_region(enriched)),
+        persist(mensal_counts_from_events_by_region(events, customer, nation, region)),
         "r_name",
     )
 
@@ -841,20 +838,18 @@ def effective_monthly_series(
     the ≤12-row period set — no extra shuffle of either series at any
     fact scale.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
     offset = 0 if reference_month_mode == "current" else 1
-    zip_series = _persist(monthly_series(enriched))
+    zip_series = persist(monthly_series(enriched))
     # the 1-row reference instant is consumed by the mensal aggregate
     # AND (twice, via the currency flag) by the merge branches —
     # persisted so the ts-pruned events scan underneath runs once
-    ref = _persist(
+    ref = persist(
         events.agg(
             F.year(F.max("ts")).alias("cal_year"),
             (F.month(F.max("ts")) - F.lit(offset)).alias("ref_month"),
         )
     )
-    mensal = _persist(
+    mensal = persist(
         events.join(F.broadcast(ref))
         .where(
             (F.year("ts") == F.col("cal_year"))
@@ -958,9 +953,7 @@ def effective_overview_metrics(
     bitwise-identical, same oracle). The unpartitioned window is the
     rolling_12m precedent — safe on a #months-row frame anywhere.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    eff = _persist(
+    eff = persist(
         effective_monthly_series(enriched, events, reference_month_mode)
     )
     rn = Window.orderBy(F.desc("period"))
@@ -1078,7 +1071,7 @@ def annual_reference_extract(
     # each re-ran the enriched fact scan + aggregate underneath
     # (3 fact scans for a #years-row result; round-8 scan audit —
     # persist() alone does not reliably substitute into every branch).
-    annual = annual.localCheckpoint(eager=False)
+    annual = checkpoint(annual)
     named = annual.select(
         F.concat(
             F.lit("focos_br_ref_"), F.col("year").cast("string"), F.lit(".zip")
@@ -1141,12 +1134,11 @@ def monthly_seasonal_index(monthly: DataFrame) -> DataFrame:
     # row, and a ROWS frame would then span 14+ calendar months —
     # attributing ratios to the wrong season. Fill interior gaps with
     # n=0 so the 13-row window IS 13 calendar months.
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
     # the monthly series feeds the bounds aggregate AND the fill join;
     # unpersisted, the whole enrichment pipeline behind it ran twice
     # (audit: 2 fact scans, 8 parquet scans total)
-    monthly = _persist(monthly)
+    monthly = persist(monthly)
     bounds = monthly.agg(
         F.min(F.to_date(F.concat(F.col("period"), F.lit("-01")))).alias("d0"),
         F.max(F.to_date(F.concat(F.col("period"), F.lit("-01")))).alias("d1"),
@@ -1298,9 +1290,7 @@ def report_fallback_blocks(
     and without the persist each one re-runs the enriched fact scan
     + groupBy underneath (measured 2.6 s → 0.9 s at sf0.1).
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    scal = overview_metric_frame(_persist(monthly), recent_months=recent_months)
+    scal = overview_metric_frame(persist(monthly), recent_months=recent_months)
     latest_mm = F.substring(F.col("latest_period"), 6, 2)
     same_prev_period = F.concat(
         F.col("previous_year").cast("string"), F.lit("-"), latest_mm
@@ -1684,9 +1674,7 @@ def report_prompts(monthly: DataFrame) -> DataFrame:
     frame; the monthly input is persisted for the same four-subtree
     reason as report_fallback_blocks.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
-
-    scal = overview_metric_frame(_persist(monthly))
+    scal = overview_metric_frame(persist(monthly))
     ctx = report_prompt_context_json(scal)
     rows = F.array(
         F.struct(

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from forest_open_data_pipelines_spark.runtime import persist
+
 SNIFF_DELIMITERS = ";,|\t"
 
 
@@ -132,32 +134,16 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-# Cached parent frames of quarantine splits: callers only receive the
-# derived good/bad children, so the parent must be releasable through a
-# registry (the operators/dedup.py _persist/release_persisted
-# convention) or a long-lived app leaks one cached input per ingest.
-_QUARANTINE_CACHED: list[DataFrame] = []
-
-
-def release_quarantine_cache() -> int:
-    """Unpersist every quarantine-split parent cached so far; returns
-    the count released."""
-    n = 0
-    while _QUARANTINE_CACHED:
-        _QUARANTINE_CACHED.pop().unpersist()
-        n += 1
-    return n
-
-
 def _quarantine_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     corrupt = F.col("_corrupt_record")
     # Spark refuses to filter on the corrupt column of a lazily-parsed
     # frame (AnalysisException: internal corrupt record column) — the
     # documented contract is to materialize first. At test/driver scale
-    # cache() is that materialization; at 100 TB land the parsed frame
-    # to parquet once and split from there (same two predicates).
-    parsed = parsed.cache()
-    _QUARANTINE_CACHED.append(parsed)
+    # persist() is that materialization; at 100 TB land the parsed
+    # frame to parquet once and split from there (same two predicates).
+    # Callers only receive the derived good/bad children, so the parent
+    # is tracked by runtime and freed by release_persisted().
+    parsed = persist(parsed)
     good = parsed.where(corrupt.isNull()).drop("_corrupt_record")
     bad = parsed.where(corrupt.isNotNull()).select(
         corrupt.alias("raw_record")

@@ -32,6 +32,7 @@ from forest_open_data_pipelines_spark.operators.textops import (
     quality_metric_cols,
     repetition_row_cols,
 )
+from forest_open_data_pipelines_spark.runtime import persist
 
 
 def curation_gate_stream(
@@ -230,7 +231,6 @@ def charlm_gate_stream(
     would bloat the literal plan — raise and point at the
     stream-static broadcast-join alternative instead of degrading.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
     from forest_open_data_pipelines_spark.operators.textops import (
         CHARLM_MAX_ENTROPY_BITS,
         _charlm_model,
@@ -239,7 +239,7 @@ def charlm_gate_stream(
     )
 
     t = F.lower(clean_text(F.col("text")))
-    base = _persist(reference_corpus.select("doc_id", t.alias("t")))
+    base = persist(reference_corpus.select("doc_id", t.alias("t")))
     ex = base.select("doc_id", F.explode(charlm_bigrams()).alias("bg"))
     model = _charlm_model(base, ex).collect()
     if len(model) > CHARLM_STREAM_MAX_BIGRAMS:

@@ -50,6 +50,7 @@ from forest_open_data_pipelines_spark.operators.timeseries import (
     effective_series_merge,
     monthly_series,
 )
+from forest_open_data_pipelines_spark.runtime import persist
 
 
 def effective_series_stream(
@@ -67,9 +68,8 @@ def effective_series_stream(
     batch operator's own ``effective_series_merge``, and call
     ``sink(series_df, batch_id)``."""
     offset = 0 if reference_month_mode == "current" else 1
-    from forest_open_data_pipelines_spark.operators.dedup import _persist
 
-    zip_series = _persist(monthly_series(enriched))
+    zip_series = persist(monthly_series(enriched))
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

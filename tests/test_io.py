@@ -690,11 +690,9 @@ def test_read_json_lines_quarantined_splits_bad_rows(spark, tmp_path):
         (bad_row,) = bad.collect()
         assert "BROKEN" in bad_row.raw_record
     finally:
-        from forest_open_data_pipelines_spark.sources.formats import (
-            release_quarantine_cache,
-        )
+        from forest_open_data_pipelines_spark.runtime import release_persisted
 
-        assert release_quarantine_cache() >= 1
+        assert release_persisted() >= 1
 
 
 def test_read_delimited_quarantined_bad_casts(spark, tmp_path):
@@ -717,11 +715,9 @@ def test_read_delimited_quarantined_bad_casts(spark, tmp_path):
         (bad_row,) = bad.collect()
         assert "not_a_number" in bad_row.raw_record
     finally:
-        from forest_open_data_pipelines_spark.sources.formats import (
-            release_quarantine_cache,
-        )
+        from forest_open_data_pipelines_spark.runtime import release_persisted
 
-        assert release_quarantine_cache() >= 1
+        assert release_persisted() >= 1
 
 
 def test_read_parquet_merged_schema_evolution(spark, tmp_path):

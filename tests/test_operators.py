@@ -733,6 +733,113 @@ def test_dedup_release_persisted_unpersists_signature_tables(spark):
     assert dedup.release_persisted() >= 2  # shingle table + banded sigs
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _chain_clusters(spark):
+    """dedup_clusters over a 64-node chain: the closure needs ~log2(64)
+    pointer-jump passes, so every pass's checkpoints are exercised."""
+    docs = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+    )
+    out = dedup.dedup_clusters(docs, pairs=pairs)
+    assert {r.cluster_id for r in out.collect()} == {0}
+    return out
+
+
+def _charlm_gate_over_cap(spark, monkeypatch):
+    """charlm_gate_stream persists its reference corpus, then raises on
+    the bigram cap: the persist must still be released."""
+    from forest_open_data_pipelines_spark.streaming import curation as scur
+
+    monkeypatch.setattr(scur, "CHARLM_STREAM_MAX_BIGRAMS", 0)
+    docs = load_table(spark, SF_DIR, "documents")
+    with pytest.raises(ValueError, match="literal-map cap"):
+        scur.charlm_gate_stream(docs, docs)
+    return None
+
+
+def _catalog_entry(name):
+    def run(spark, monkeypatch):
+        from forest_open_data_pipelines_spark.plans.catalog import QUERIES
+
+        return QUERIES[name](spark, SF_DIR)
+
+    return run
+
+
+_LEAK_CASES = {
+    "dedup_clusters_chain64": lambda spark, _mp: _chain_clusters(spark),
+    "charlm_gate_stream_raises": _charlm_gate_over_cap,
+    **{
+        name: _catalog_entry(name)
+        for name in (
+            "part_pagerank",
+            "part_communities",
+            "part_bfs_hops",
+            "bpe_train",
+            "corpus_curation",
+        )
+    },
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LEAK_CASES))
+def test_release_persisted_frees_every_block(spark, monkeypatch, case):
+    """Every persist and local checkpoint an entry makes — including
+    the per-pass checkpoints of iterative loops and a persist made
+    before an exception — is gone from the executors' block registry
+    after release_persisted()."""
+    from forest_open_data_pipelines_spark.runtime import release_persisted
+
+    release_persisted()
+    before = _persistent_rdds(spark)
+    try:
+        out = _LEAK_CASES[case](spark, monkeypatch)
+        if out is not None:
+            out.collect()
+    finally:
+        release_persisted()
+    assert _persistent_rdds(spark) - before == set()
+
+
+def test_memoized_trainers_train_once_under_concurrent_arms(spark, monkeypatch):
+    """ANN arm threads asking for the same cold memo entry train it
+    once: the check-then-fill is one locked step."""
+    import threading
+    import time
+
+    calls = []
+
+    def slow_trainer(*args):
+        calls.append(args)
+        time.sleep(0.5)
+        return [(0, [1.0])]
+
+    monkeypatch.setattr(similarity, "_train_ivf_centroids", slow_trainer)
+    similarity.clear_centroid_cache()
+    emb = load_table(spark, SF_DIR, "embeddings")
+    got = []
+    arms = [
+        threading.Thread(
+            target=lambda: got.append(similarity.train_ivf_centroids(emb))
+        )
+        for _ in range(8)
+    ]
+    try:
+        for t in arms:
+            t.start()
+        for t in arms:
+            t.join(timeout=60)
+    finally:
+        similarity.clear_centroid_cache()
+    assert not any(t.is_alive() for t in arms)
+    assert len(calls) == 1
+    assert got == [[(0, [1.0])]] * 8
+
+
 def test_state_biome_monthly_series_grains_consistent(spark):
     enriched = timeseries.orders_enriched(
         load_table(spark, SF_DIR, "orders"),
@@ -2864,8 +2971,9 @@ def test_lang_id_ngram_separable_corpus(spark):
 
 
 def test_connected_components_random_graphs_vs_union_find(spark):
-    """Seeded random edge lists: the Spark doubling loop must produce
-    exactly the union-find min-label components."""
+    """Seeded random edge lists, a viral star beside a long chain, and
+    an edgeless graph: the Spark doubling loop must produce exactly the
+    union-find min-label components."""
     import random
 
     from forest_open_data_pipelines_spark.operators.dedup import (
@@ -2873,13 +2981,19 @@ def test_connected_components_random_graphs_vs_union_find(spark):
     )
 
     rng = random.Random(42)
-    for trial in range(5):
+    cases = []
+    for _ in range(5):
         n = rng.randint(5, 30)
         m = rng.randint(0, 2 * n)
         edges = [
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]
-        edges = [(a, b) for a, b in edges if a != b]
+        cases.append((n, [(a, b) for a, b in edges if a != b]))
+    # viral star (hub 0) + a disjoint 20-node chain, and an edgeless graph
+    cases.append((60, [(0, i) for i in range(1, 40)] + [(i, i + 1) for i in range(40, 59)]))
+    cases.append((12, []))
+
+    for trial, (n, edges) in enumerate(cases):
         parent = list(range(n))
 
         def find(x):
@@ -2911,67 +3025,6 @@ def test_connected_components_random_graphs_vs_union_find(spark):
             for r in connected_components(nodes, pairs).collect()
         }
         assert got == want, f"trial {trial}"
-
-
-def test_connected_components_star_matches_union_find(spark):
-    """The alternating large-star/small-star closure must produce
-    exactly the union-find min-label components on seeded random
-    graphs — same harness as the doubling-loop test, plus a viral-star
-    and a long-chain worst case."""
-    import random
-
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    cases = []
-    rng = random.Random(97)
-    for _ in range(5):
-        n = rng.randint(5, 30)
-        m = rng.randint(0, 2 * n)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        cases.append((n, [(a, b) for a, b in edges if a != b]))
-    # viral star (hub 0) + a disjoint chain — the two topologies the
-    # two closures disagree on in cost, so both must agree on labels
-    cases.append((60, [(0, i) for i in range(1, 40)] + [(i, i + 1) for i in range(40, 59)]))
-    cases.append((12, []))
-
-    for trial, (n, edges) in enumerate(cases):
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp: dict[int, list[int]] = {}
-        for x in range(n):
-            comp.setdefault(find(x), []).append(x)
-        want = {x: min(members) for members in comp.values() for x in members}
-
-        nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-        pairs = (
-            spark.createDataFrame(edges, ["doc_a", "doc_b"])
-            if edges
-            else spark.createDataFrame([], "doc_a long, doc_b long")
-        )
-        got = {
-            r["doc_id"]: r["label"]
-            for r in connected_components_star(nodes, pairs).collect()
-        }
-        assert got == want, f"trial {trial}"
-        # and the two closures agree with each other bit-for-bit
-        doubling = {
-            r["doc_id"]: r["label"]
-            for r in connected_components(nodes, pairs).collect()
-        }
-        assert got == doubling, f"trial {trial}"
 
 
 def test_user_retention_cohorts_hand_check(spark):

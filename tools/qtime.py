@@ -18,8 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from forest_open_data_pipelines_spark.operators.dedup import release_persisted
 from forest_open_data_pipelines_spark.plans.catalog import QUERIES
+from forest_open_data_pipelines_spark.runtime import release_persisted
 from forest_open_data_pipelines_spark.session import get_spark
 
 

@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.operators import dedup
+from forest_open_data_pipelines_spark.runtime import release_persisted
 from forest_open_data_pipelines_spark.session import get_spark
 from forest_open_data_pipelines_spark.sources import load_table
 
@@ -218,11 +219,11 @@ def main() -> None:
         for op in ops:
             fn = OPS[op]
             fn(docs).count()  # warm plan/codegen for this scale
-            dedup.release_persisted()
+            release_persisted()
             t0 = time.perf_counter()
             rows = fn(docs).count()
             dt = time.perf_counter() - t0
-            dedup.release_persisted()
+            release_persisted()
             results[op].append((n_docs, dt, rows))
             print(f"{op} x{s} docs={n_docs} rows={rows} {dt:.2f}s", flush=True)
     print("\n# scaling summary (time ratio vs doc ratio)")
@@ -295,11 +296,11 @@ def ann_main(max_replicas: int) -> None:
         n_vecs = emb.count()
         for op, fn in ops.items():
             fn(emb).count()
-            dedup.release_persisted()
+            release_persisted()
             t0 = time.perf_counter()
             rows = fn(emb).count()
             dt = time.perf_counter() - t0
-            dedup.release_persisted()
+            release_persisted()
             results[op].append((n_vecs, dt, rows))
             print(f"{op} x{s} vecs={n_vecs} rows={rows} {dt:.2f}s", flush=True)
     print("\n# ann scaling summary")

@@ -59,9 +59,7 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "simple"
     )
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
+    from forest_open_data_pipelines_spark.runtime import release_persisted
 
     flagged = 0
     for name, fn in QUERIES.items():
