@@ -1225,7 +1225,8 @@ FROM seeds ORDER BY doc_id"""
 def _route_nearest_query_sql() -> str:
     """DuckDB twin of similarity.route_nearest_query — argmax over
     integer micro-cosines (0-dp round, the boundary-safe class),
-    lowest query_id on ties; the query-set size and threshold import
+    lowest query_id on ties, no best query when every cosine is NULL
+    (a zero-norm vector); the query-set size and threshold import
     from the operator module so the twins cannot desynchronize."""
     from forest_open_data_pipelines_spark.operators.similarity import (
         ROUTE_N_QUERIES,
@@ -1257,7 +1258,8 @@ ranked AS (
   FROM scored
 )
 SELECT s.vec_id,
-       max(CASE WHEN rnk = 1 THEN query_id END)::INT AS best_query_id,
+       max(CASE WHEN rnk = 1 AND cm IS NOT NULL THEN query_id END)::INT
+         AS best_query_id,
        max(CASE WHEN rnk = 1 THEN cm END) / 1000000.0 AS best_cosine,
        sum(CASE WHEN cm >= {ROUTE_THRESHOLD_MICRO} THEN 1 ELSE 0 END)::INT
          AS n_above_threshold
@@ -2527,7 +2529,8 @@ g AS (
   SELECT vec_id,
          sum(CASE WHEN cos >= {THR} THEN 1 ELSE 0 END)::BIGINT
            AS n_bench_hits,
-         max(struct_pack(c := cos, nb := -bench_id)) AS best
+         max(struct_pack(c := cos, nb := -bench_id))
+           FILTER (WHERE cos IS NOT NULL) AS best
   FROM s GROUP BY vec_id
 )
 SELECT vec_id, n_bench_hits, (best).c AS max_cosine,
@@ -7005,7 +7008,7 @@ FROM keyed GROUP BY url_key ORDER BY url_key""",
 SELECT md5({lclean}) AS content_fingerprint,
        min(doc_id) AS canonical_doc_id, count(*) AS n_docs
 FROM documents GROUP BY 1 ORDER BY content_fingerprint""",
-        # catalog default is method="prefix" (ppjoin) since r9 — the
+        # the catalog entry runs dedup_ngram_ppjoin since r9 — the
         # oracle is the stop-list-free exact twin, which IS the ppjoin
         # output by the prefix-filter recall guarantee
         "dedup_ngram_jaccard": _ngram_exact_sql(),
@@ -9328,12 +9331,12 @@ ORDER BY s.media_id"""
     )
 
     _zf = (
-        "round((round({c} * 1e6) - {s}::DOUBLE / n::DOUBLE)"
-        " / nullif(sqrt((n::DOUBLE * {ss}::DOUBLE"
-        " - {s}::DOUBLE * {s}::DOUBLE) / (n::DOUBLE * n::DOUBLE)), 0), 6)"
+        "round((round({c} * 1e6) - {s}::DOUBLE / {n}::DOUBLE)"
+        " / nullif(sqrt(({n}::DOUBLE * {ss}::DOUBLE"
+        " - {s}::DOUBLE * {s}::DOUBLE) / ({n}::DOUBLE * {n}::DOUBLE)), 0), 6)"
     )
-    _zn = _zf.format(c="norm", s="sn", ss="snn")
-    _zc = _zf.format(c="cos_to_global", s="sc", ss="scc")
+    _zn = _zf.format(c="norm", n="n", s="sn", ss="snn")
+    _zc = _zf.format(c="cos_to_global", n="nc", s="sc", ss="scc")
     out["embedding_outlier_report"] = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
 ex AS (
@@ -9355,6 +9358,7 @@ mom AS (
          sum(round(norm * 1e6)::HUGEINT) AS sn,
          sum(round(norm * 1e6)::HUGEINT * round(norm * 1e6)::HUGEINT)
            AS snn,
+         count(cos_to_global)::HUGEINT AS nc,
          sum(round(cos_to_global * 1e6)::HUGEINT) AS sc,
          sum(round(cos_to_global * 1e6)::HUGEINT
              * round(cos_to_global * 1e6)::HUGEINT) AS scc

@@ -381,12 +381,12 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
     # spark.sql.shuffle.partitions; the batch default (32) means every
     # micro-batch pays 32 state-store open/commit tasks regardless of
     # key volume. Any cluster deployment sizes this PER STREAM to its
-    # steady-state key count/throughput — parameterised here the same
-    # way (VERDICT r12 item 6), applied only within the drain scope so
-    # the batch headline rows keep the session default. AQE cannot do
-    # this for streams (state-store partitioning is pinned by the
-    # checkpoint, so coalescing is disabled there).
-    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    # steady-state key count/throughput — sized here to 8 for the
+    # bench drains (VERDICT r12 item 6), applied only within the drain
+    # scope so the batch headline rows keep the session default. AQE
+    # cannot do this for streams (state-store partitioning is pinned by
+    # the checkpoint, so coalescing is disabled there).
+    stream_parts = "8"
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out: dict[str, float] = {}
     spark.conf.set("spark.sql.shuffle.partitions", stream_parts)

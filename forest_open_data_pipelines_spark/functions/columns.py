@@ -109,6 +109,35 @@ def ratio(col: Column) -> Column:
     return scaled_round(col, RATIO_DP)
 
 
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product of two numeric arrays as a left-to-right fold from
+    0.0, each term promoted to double before the multiply — the same
+    addition order as the DuckDB oracle's ``list_dot_product`` and the
+    Arrow kernels' sequential-across-dims accumulation, so every
+    engine sums the identical doubles."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def norm(a: Column | str) -> Column:
+    """Euclidean norm: sqrt of the left-to-right sum of squares (the
+    ``dot`` fold order)."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x))
+
+
+def cosine(num: Column, norm_a: Column, norm_b: Column) -> Column:
+    """Unrounded cosine ``num / (norm_a · norm_b)``; NULL when either
+    norm is zero. A zero vector has no direction, so every vector
+    operator scores it NULL — it fails every threshold and ranks after
+    every real score — instead of raising DIVIDE_BY_ZERO or producing a
+    NaN. DuckDB's ``x / 0.0`` is NULL too, so the oracles agree. Each
+    caller applies its own rounding (``ratio``, micro or nano units)."""
+    return F.try_divide(num, norm_a * norm_b)
+
+
 def parse_pt_numeric(text: Column) -> Column:
     """Locale-tolerant numeric parse: strings containing a comma are
     read as pt-BR ('1.234,56' — dots are thousand separators, comma is

@@ -27,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
+from forest_open_data_pipelines_spark.functions.columns import (
+    cosine,
+    dot,
+    micro_div,
+    norm,
+    ratio,
+)
 from forest_open_data_pipelines_spark.operators.dedup import (
     _md5_int,
     hashed_shingle_table,
@@ -124,11 +130,8 @@ def corpus_curation(
     base = checkpoint(base.withColumn("canonical_doc_id", canonical))
     exact_ok = surv & (F.col("doc_id") == F.col("canonical_doc_id"))
 
-    norm = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x)
-    )
     emb = embeddings.select(
-        F.col("vec_id").alias("doc_id"), "embedding", norm.alias("norm")
+        F.col("vec_id").alias("doc_id"), "embedding", norm("embedding").alias("norm")
     )
     pool = base.where(exact_ok).select("doc_id").join(emb, "doc_id")
     if near_dup_strategy == "lsh":
@@ -185,17 +188,13 @@ def corpus_curation(
             F.col("norm").alias("norm_b"),
         )
         paired = a.join(b, F.col("doc_a") < F.col("doc_b"))
-    dot = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    cos = cosine(dot("emb_a", "emb_b"), F.col("norm_a"), F.col("norm_b"))
     near_ids = (
         paired
         # 6-dp-rounded cosine before the threshold compare — the same
         # ratio() rounding dedup_embedding applies, so the pair set
         # (and the oracle) can't flip on summation-order ulp drift
-        .where(ratio(dot / (F.col("norm_a") * F.col("norm_b"))) >= cos_threshold)
+        .where(ratio(cos) >= cos_threshold)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
         .withColumn("is_near_dup", F.lit(True))
@@ -381,14 +380,15 @@ def decontaminate_embedding(
     corpus (the ann_topk_bruteforce query-set shape); the per-vector
     reduction is a map-side-combinable groupBy max/count. Never
     corpus×corpus. Cosines use the same Catalyst fold + 6-dp ratio as
-    ``dedup_embedding`` — bit-identical to the DuckDB twin. The
+    ``dedup_embedding`` — bit-identical to the DuckDB twin; a zero-norm
+    vector scores NULL against every benchmark vector, so it gets no
+    hit, a NULL max cosine and no nearest id. The
     nearest-id tie-break rides the SAME aggregate via max(struct(cos,
     -bench_id)), so no second pass or window.
     """
-    norm = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x)
+    e = spread(embeddings).select(
+        "vec_id", "embedding", norm("embedding").alias("norm")
     )
-    e = spread(embeddings).select("vec_id", "embedding", norm.alias("norm"))
     is_bench = F.col("vec_id") % bench_mod == 0
     bench = F.broadcast(
         e.where(is_bench).select(
@@ -397,12 +397,7 @@ def decontaminate_embedding(
             F.col("norm").alias("b_norm"),
         )
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "b_emb", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cos = ratio(dot / (F.col("norm") * F.col("b_norm")))
+    cos = ratio(cosine(dot("embedding", "b_emb"), F.col("norm"), F.col("b_norm")))
     return (
         e.where(~is_bench)
         .crossJoin(bench)
@@ -412,9 +407,13 @@ def decontaminate_embedding(
             F.sum(F.when(F.col("cos") >= threshold, 1).otherwise(0)).alias(
                 "n_bench_hits"
             ),
+            # a NULL cosine (zero-norm vector) names no nearest id
             F.max(
-                F.struct(
-                    F.col("cos").alias("c"), (-F.col("bench_id")).alias("nb")
+                F.when(
+                    F.col("cos").isNotNull(),
+                    F.struct(
+                        F.col("cos").alias("c"), (-F.col("bench_id")).alias("nb")
+                    ),
                 )
             ).alias("best"),
         )

@@ -24,7 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
+from forest_open_data_pipelines_spark.functions.columns import (
+    cosine,
+    dot,
+    micro_div,
+    norm,
+    ratio,
+)
 from forest_open_data_pipelines_spark.operators.textops import clean_text
 from forest_open_data_pipelines_spark.runtime import checkpoint, persist, unpersist
 # re-exported: perfbench/workloads.py imports release_persisted from here
@@ -129,9 +135,9 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     Reference: merge.py:18-64 dedups listings by normalized URL key and
     keeps min rank; same shape with the content hash as the key.
     """
-    norm = F.lower(clean_text(F.col("text")))
+    key = F.lower(clean_text(F.col("text")))
     return (
-        documents.select(F.md5(norm).alias("content_fingerprint"), "doc_id")
+        documents.select(F.md5(key).alias("content_fingerprint"), "doc_id")
         .groupBy("content_fingerprint")
         .agg(F.min("doc_id").alias("canonical_doc_id"), F.count("*").alias("n_docs"))
         .orderBy("content_fingerprint")
@@ -144,20 +150,16 @@ def dedup_ngram_jaccard(
     threshold: float = 0.8,
     max_df: float = NGRAM_MAX_DF,
     max_candidate_pairs: int | None = None,
-    method: str = "count",
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard ≥ threshold, with a
     hot-shingle document-frequency stop-list on candidate generation.
 
-    ``method`` selects the candidate/verify scheme: ``"count"`` (the
-    default below — the oracle-shaped baseline whose count-verify is
-    bound by pairs×shared-shingles and is deliberately kept as the
-    ground-truth formulation) or ``"prefix"``, which delegates to
-    ``dedup_ngram_ppjoin`` — the SAME pair set (equality asserted in
-    tests) through prefix filtering, the corpus-scale plan every
-    downstream consumer already defaults to. At 100 TB call with
-    ``method="prefix"`` (or use the ppjoin entry directly); the flag
-    makes the entry's own 100× plan selectable in place.
+    This count-verify scheme is the oracle-shaped baseline: its verify
+    is bound by pairs×shared-shingles and it is kept as the
+    ground-truth formulation. ``dedup_ngram_ppjoin`` yields the SAME
+    pair set (equality asserted in tests) through prefix filtering —
+    the corpus-scale plan the catalog entry and every downstream
+    consumer run.
 
     Candidate pairs come from a shared-shingle equi-join (never a cross
     join) over COLD shingles only: shingles appearing in more than
@@ -192,12 +194,6 @@ def dedup_ngram_jaccard(
     tradeoff; spill-safe (MEMORY_AND_DISK) and strictly smaller than
     the shuffles it replaces.
     """
-    if method == "prefix":
-        return dedup_ngram_ppjoin(documents, n=n, threshold=threshold)
-    if method != "count":
-        raise ValueError(
-            f"method={method!r}: expected one of ['count', 'prefix']"
-        )
     with_hot, common = _ngram_pair_commons(
         documents, n, max_df, max_candidate_pairs=max_candidate_pairs
     )
@@ -931,14 +927,6 @@ def dedup_simhash(
     return simhash_pairs(sigs, bits, max_hamming)
 
 
-def _cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
-    """6-dp cosine from a dot product and two norms; NULL when either
-    norm is zero (``try_divide``: a zero vector has no direction, and
-    the DuckDB oracle's division yields NULL too), so such a pair
-    fails every threshold instead of raising or scoring NaN."""
-    return ratio(F.try_divide(dot, norm_a * norm_b))
-
-
 def dedup_embedding(embeddings: DataFrame, threshold: float = 0.45) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ threshold) — the
     EXACT all-pairs baseline, kept as the oracle/recall anchor only.
@@ -952,17 +940,11 @@ def dedup_embedding(embeddings: DataFrame, threshold: float = 0.45) -> DataFrame
     same baseline/production split as ``dedup_ngram_jaccard`` (oracle
     shape) vs ``dedup_ngram_ppjoin`` (scale default).
     """
-    norm = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x)
-    )
-    e = embeddings.select("vec_id", "embedding", norm.alias("norm"))
+    e = embeddings.select("vec_id", "embedding", norm("embedding").alias("norm"))
     a, b = e.alias("a"), e.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.embedding", "b.embedding", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    cos = ratio(
+        cosine(dot("a.embedding", "b.embedding"), F.col("a.norm"), F.col("b.norm"))
     )
-    cos = _cosine(dot, F.col("a.norm"), F.col("b.norm"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -1027,11 +1009,11 @@ def dedup_embedding_lsh(
     dot product in an ``mapInArrow`` numpy kernel (guide §4.2) whose
     accumulation is SEQUENTIAL ACROSS DIMS and vectorized across pairs
     — the ``banded_signatures`` trick — so every double is
-    bit-identical to ``dedup_embedding``'s Catalyst
-    ``zip_with``/``aggregate`` fold (same left-to-right addition from
+    bit-identical to ``dedup_embedding``'s Catalyst ``columns.dot``
+    fold (same left-to-right addition from
     0.0, same float32→double promotion per term); the division by the
     norms, the 6-dp ``ratio`` round and the threshold filter stay in
-    Catalyst (``_cosine``: a zero-norm pair scores NULL, as in
+    Catalyst (``columns.cosine``: a zero-norm pair scores NULL, as in
     ``dedup_embedding``). Vectors whose length is not ``dim`` (or
     null) are dropped before hashing and never pair. Re-adjudicated
     r13 (VERDICT r12 item 5): on Spark 4.1 the Arrow round-trip of
@@ -1056,14 +1038,11 @@ def dedup_embedding_lsh(
         banded_signatures,
     )
 
-    norm = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x)
-    )
     # Only ``dim``-long vectors can be hashed against the ``dim``-wide
     # hyperplanes or reshaped by the verify kernel; any other length
     # (or a null vector) never pairs, as its cosine would be NULL.
     valid = embeddings.where(F.size("embedding") == dim)
-    e = valid.select("vec_id", "embedding", norm.alias("norm"))
+    e = valid.select("vec_id", "embedding", norm("embedding").alias("norm"))
     banded = persist(
         banded_signatures(valid, "vec_id", "embedding", n_planes, bands, dim)
     )
@@ -1120,8 +1099,8 @@ def dedup_embedding_lsh(
     # Explicit select keeps the Arrow boundary to exactly the columns
     # the kernel reads (guide §4.1 column-pruning caveat). The kernel
     # returns the raw dot product only; the division stays in Catalyst
-    # (``_cosine``) so a zero norm yields NULL, never a NaN that would
-    # pass ``>= threshold``.
+    # (``columns.cosine``) so a zero norm yields NULL, never a NaN that
+    # would pass ``>= threshold``.
     def _verify(batches):
         import numpy as np
         import pyarrow as pa
@@ -1166,7 +1145,7 @@ def dedup_embedding_lsh(
         scored.select(
             "vec_a",
             "vec_b",
-            _cosine(F.col("dot"), F.col("norm_a"), F.col("norm_b")).alias(
+            ratio(cosine(F.col("dot"), F.col("norm_a"), F.col("norm_b"))).alias(
                 "cosine"
             ),
         )
@@ -1215,7 +1194,6 @@ def dedup_semantic(
     from forest_open_data_pipelines_spark.operators.similarity import (
         _cell_scored,
         _centroid_literal,
-        _norm,
         train_ivf_centroids,
     )
 
@@ -1224,7 +1202,7 @@ def dedup_semantic(
     best = F.array_max(cell_scored)
     assigned = persist(
         spread(embeddings)
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm"))
+        .select("vec_id", "embedding", norm("embedding").alias("v_norm"))
         .select(
             "vec_id",
             "embedding",
@@ -1234,12 +1212,9 @@ def dedup_semantic(
         )
     )
     a, b = assigned.alias("a"), assigned.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.embedding", "b.embedding", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    cos = ratio(
+        cosine(dot("a.embedding", "b.embedding"), F.col("a.norm"), F.col("b.norm"))
     )
-    cos = _cosine(dot, F.col("a.norm"), F.col("b.norm"))
     a_beats_b = (F.col("a.cent_cos") < F.col("b.cent_cos")) | (
         (F.col("a.cent_cos") == F.col("b.cent_cos"))
         & (F.col("a.vec_id") < F.col("b.vec_id"))
@@ -1468,7 +1443,7 @@ def dedup_clusters(
         # Default pair source: the prefix-filtered (ppjoin) EXACT
         # near-dup join — provably the same pair set as
         # dedup_ngram_jaccard (equality asserted in tests), but the
-        # duplicate-heavy scaling probe (tools/scale_probe.py, 8× sf0.1
+        # duplicate-heavy scaling probe (SURVEY §3, 8× sf0.1
         # = 40k docs / 140k true pairs) measured it 12× faster: the
         # count-verify scheme's shared-shingle pair groupBy is bound by
         # pairs×shared-shingles, while the prefix filter touches each
@@ -1718,16 +1693,16 @@ def dedup_incremental(
     into base's key space; verification touches candidates only.
     Never new×base all-pairs.
     """
-    norm = F.lower(clean_text(F.col("text")))
+    key = F.lower(clean_text(F.col("text")))
     sh_new = persist(hashed_shingle_table(new_docs, n))
     sh_base = persist(hashed_shingle_table(base_docs, n))
     fp_base = (
-        base_docs.select(F.md5(norm).alias("content_fingerprint"))
+        base_docs.select(F.md5(key).alias("content_fingerprint"))
         .distinct()
         .withColumn("exact_hit", F.lit(True))
     )
     exact = (
-        new_docs.select("doc_id", F.md5(norm).alias("content_fingerprint"))
+        new_docs.select("doc_id", F.md5(key).alias("content_fingerprint"))
         .join(fp_base, "content_fingerprint", "left")
         .select(
             "doc_id", F.coalesce("exact_hit", F.lit(False)).alias("exact_dup")

@@ -11,33 +11,70 @@ SURVEY.md §2.F. Two tiers:
   only from matching signature buckets, trading recall for a
   bucket-bounded join. Recall vs the baseline is asserted in tests.
 
-Vector math uses Catalyst array lambdas (zip_with/aggregate), not
-Python UDFs — it compiles to JVM codegen.
+Vector math uses the shared Catalyst folds in ``functions.columns``
+(``dot``, ``norm``, ``cosine``), not Python UDFs — it compiles to JVM
+codegen. A zero-norm vector scores a NULL cosine everywhere: it fails
+every threshold and ranks after every real score, never raises.
 """
 
 from __future__ import annotations
 
 import hashlib
 import threading
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from forest_open_data_pipelines_spark.functions.columns import micro_div, ratio
+from forest_open_data_pipelines_spark.functions.columns import (
+    cosine,
+    dot,
+    micro_div,
+    norm,
+    ratio,
+)
 from forest_open_data_pipelines_spark.runtime import persist
 from forest_open_data_pipelines_spark.sources.tables import spread
 
 
-def _dot(a, b) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _rank_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The shared top-k tail of every index: rank each query's scored
+    candidates by ``score_col`` descending (NULL scores last), ties to
+    the lowest cand_id, keep ranks ≤ k. Appends ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.col("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
     )
 
 
-def _norm(a) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x))
+def _bruteforce_scored(embeddings: DataFrame, n_queries: int) -> DataFrame:
+    """(query_id, cand_id, cosine) for every frozen query (vec_id <
+    n_queries, broadcast) against every other vector — one scan of the
+    candidate side, 6-dp cosines."""
+    queries = F.broadcast(
+        embeddings.where(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            norm(F.col("embedding")).alias("q_norm"),
+        )
+    )
+    # Norm computed BEFORE the join: one pass per candidate row, carried
+    # through the n_queries-way fan-out instead of recomputed per pair.
+    cand = spread(embeddings).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("c_emb"),
+        norm(F.col("embedding")).alias("c_norm"),
+    )
+    cos = ratio(cosine(dot("q_emb", "c_emb"), F.col("q_norm"), F.col("c_norm")))
+    return (
+        cand.join(queries)
+        .where(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", cos.alias("cosine"))
+    )
 
 
 def ann_topk_bruteforce(
@@ -46,36 +83,7 @@ def ann_topk_bruteforce(
     """Exact cosine top-k: queries = vec_id < n_queries, candidates =
     all other vectors. Ranking on the rounded similarity with vec_id
     tie-break keeps the result deterministic across engines."""
-    queries = F.broadcast(
-        embeddings.where(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_norm"),
-        )
-    )
-    # Norm computed BEFORE the join: one pass per candidate row, carried
-    # through the n_queries-way fan-out instead of recomputed per pair.
-    cand = spread(embeddings).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-    )
-    cos = ratio(
-        _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    )
-    scored = (
-        cand.join(queries)
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", cos.alias("cosine"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_bruteforce_scored(embeddings, n_queries), "cosine", k)
 
 
 def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
@@ -95,7 +103,7 @@ def lsh_signature(emb: Column, planes: list[list[float]]) -> Column:
     """Bit-packed sign signature of the projections onto the planes."""
     sig = F.lit(0)
     for j, plane in enumerate(planes):
-        proj = _dot(emb, F.array(*[F.lit(w) for w in plane]))
+        proj = dot(emb, F.array(*[F.lit(w) for w in plane]))
         sig = sig + F.when(proj > 0, F.lit(1 << j)).otherwise(0)
     return sig
 
@@ -130,7 +138,7 @@ def banded_signatures(
     Catalyst fold and the DuckDB oracle's ``list_sum`` comprehension, so
     every sign bit — and therefore every band key — is bit-identical to
     both (asserted in tests). Norms use the same sequential
-    sum-of-squares so they bit-match ``_norm``'s fold.
+    sum-of-squares so they bit-match ``columns.norm``'s fold.
 
     Scale: one streaming Arrow pass over the vectors, no shuffle; the
     output is ~20 bytes/row (or bands× the vector when
@@ -232,9 +240,7 @@ def ann_topk_lsh(
         dim,
         carry_embedding=True,
     ).withColumnRenamed("nrm", "c_norm")
-    cos = ratio(
-        _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    )
+    cos = ratio(cosine(dot("q_emb", "c_emb"), F.col("q_norm"), F.col("c_norm")))
     scored = (
         c_banded.join(q_banded, ["band", "key"])
         .where(F.col("cand_id") != F.col("query_id"))
@@ -242,14 +248,7 @@ def ann_topk_lsh(
         .groupBy("query_id", "cand_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 # Fixed k-means refinement passes for the IVF coarse quantizer. Shared
@@ -319,11 +318,11 @@ def _centroid_literal(centroids: list[tuple[int, list[float]]]):
 
     parts = []
     for cell_id, emb in centroids:
-        norm = math.sqrt(sum(float(x) * float(x) for x in emb))
+        cent_norm = math.sqrt(sum(float(x) * float(x) for x in emb))
         parts.append(
             f"named_struct('cell_id', {int(cell_id)}, "
             f"'cent_emb', {_darray_sql(emb)}, "
-            f"'cent_norm', {_dlit(norm)})"
+            f"'cent_norm', {_dlit(cent_norm)})"
         )
     return F.expr("array(" + ",".join(parts) + ")")
 
@@ -346,8 +345,11 @@ def _cell_scored(cent_arr):
         lambda c: F.struct(
             (
                 F.round(
-                    _dot(F.col("embedding"), c["cent_emb"])
-                    / (F.col("v_norm") * c["cent_norm"])
+                    cosine(
+                        dot(F.col("embedding"), c["cent_emb"]),
+                        F.col("v_norm"),
+                        c["cent_norm"],
+                    )
                     * F.lit(1e9),
                     0,
                 )
@@ -412,7 +414,7 @@ def _train_ivf_centroids(
     for _ in range(iters):
         cent_arr = _centroid_literal(centroids)
         e = embeddings.select(
-            "vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm")
+            "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
         )
         # two-step select: a generator (posexplode) in the same select
         # as the lambda-built structs strips their field aliases
@@ -481,14 +483,12 @@ def ann_topk_ivf(
     it, and the cell map is exactly what a bucketed/partitioned-by-cell
     write would persist for reuse.
     """
-    from pyspark.sql import Window
-
     centroids = train_ivf_centroids(embeddings, n_cells, kmeans_iters)
     cell_scored = _cell_scored(_centroid_literal(centroids))
     # spread(): the per-row n_cells·dim assignment fold is the heavy
     # part of this plan — fan single-split sources across cores.
     e = spread(embeddings).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
     )
     cands = e.select(
         F.col("vec_id").alias("cand_id"),
@@ -511,9 +511,7 @@ def ann_topk_ivf(
             "query_id", "q_emb", "q_norm", (-F.col("pc.neg_cell_id")).alias("cell_id")
         )
     )
-    cos = ratio(
-        _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    )
+    cos = ratio(cosine(dot("q_emb", "c_emb"), F.col("q_norm"), F.col("c_norm")))
     # Each candidate lives in exactly one cell and a query's probe cells
     # are distinct, so (query_id, cand_id) pairs are already unique —
     # no distinct() shuffle needed before ranking.
@@ -522,11 +520,24 @@ def ann_topk_ivf(
         .where(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _rank_topk(scored, "cosine", k)
+
+
+def _centroid_arrays(embeddings: DataFrame, keys: list[str], name: str) -> DataFrame:
+    """Centroid array per ``keys`` group (one global row when ``keys``
+    is empty): posexplode → per-(group, dim) mean rounded to 6 dp →
+    values collected in dim order. The rounding makes both engines fold
+    bit-identical centroid inputs; the means are map-side combinable
+    and the output is bounded by groups × dims."""
+    means = (
+        embeddings.select(*keys, F.posexplode("embedding").alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(ratio(F.avg(F.col("v").cast("double"))).alias("c"))
+    )
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
+        ).alias(name)
     )
 
 
@@ -540,40 +551,15 @@ def embedding_label_stats(embeddings: DataFrame) -> DataFrame:
     Scale: the centroid build is a posexplode → (label, dim) avg —
     map-side combinable, output bounded by labels×dims; the per-vector
     scoring joins the BROADCAST centroid table and folds the cosine
-    in-codegen (same zip_with/aggregate shape as dedup_embedding, so
-    the DuckDB twin's list_dot_product agrees at 6 dp). Per-dim
+    in-codegen (the shared ``columns.dot`` fold, so the DuckDB twin's
+    list_dot_product agrees at 6 dp). Per-dim
     centroid means are rounded to 6 dp on both engines BEFORE the
     cosine so the fold inputs are bit-identical.
     """
-    ex = embeddings.select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        ratio(F.avg(F.col("v").cast("double"))).alias("c")
-    )
-    cent_arr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("centroid")
-    )
-    cnorm = F.sqrt(
-        F.aggregate("centroid", F.lit(0.0), lambda a, x: a + x * x)
-    )
-    joined = embeddings.join(F.broadcast(cent_arr), "label")
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "centroid", lambda x, y: x.cast("double") * y
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    vnorm = F.sqrt(
-        F.aggregate(
-            "embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x
-        )
-    )
-    cos = ratio(dot / (vnorm * cnorm))
-    scored = joined.select(
+    cent_arr = _centroid_arrays(embeddings, ["label"], "centroid")
+    cnorm = norm("centroid")
+    cos = ratio(cosine(dot("embedding", "centroid"), norm("embedding"), cnorm))
+    scored = embeddings.join(F.broadcast(cent_arr), "label").select(
         "label", cos.alias("cos"), ratio(cnorm).alias("centroid_norm")
     )
     # Average via integer micro-cosines: the per-row cos values are
@@ -722,22 +708,19 @@ def ann_topk_sq8(
         lambda acc, v: acc + v,
     )
     cos = ratio(
-        idot.cast("double")
-        / (F.sqrt(F.col("q_nsq").cast("double")) * F.sqrt(F.col("c_nsq").cast("double")))
+        cosine(
+            idot.cast("double"),
+            F.sqrt(F.col("q_nsq").cast("double")),
+            F.sqrt(F.col("c_nsq").cast("double")),
+        )
     )
     scored = (
         cand.join(queries)
         .where(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", cos.alias("cosine_q"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine_q")
-        .orderBy("query_id", "rank")
+    return _rank_topk(scored, "cosine_q", k).select(
+        "query_id", "rank", "cand_id", "cosine_q"
     )
 
 
@@ -1013,6 +996,21 @@ def _pq_query_luts(
     )
 
 
+def _adc(m: int) -> Column:
+    """Asymmetric-distance dot ⟨q, x̂⟩ = Σ_s LUT[s][code_s] over the
+    ``lut`` and ``c_codes`` columns, folded in subspace order (the
+    DuckDB twin's order)."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.element_at(F.col("lut"), s + 1),
+            F.element_at(F.col("c_codes"), s + 1) + 1,
+        ),
+    )
+
+
 def embedding_quantize_pq(
     embeddings: DataFrame,
     m: int = PQ_M,
@@ -1134,34 +1132,19 @@ def ann_topk_pq(
         # the Arrow encode pass runs once, not once per index
         enc = _pq_encoded(embeddings, codebook, m, ks, dim)
     queries = F.broadcast(_pq_query_luts(embeddings, codebook, n_queries, m, ks, dim))
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("c_codes"), s + 1) + 1,
-        ),
-    )
     cands = enc.select(
         F.col("vec_id").alias("cand_id"),
         F.col("codes").alias("c_codes"),
         F.col("recon_nsq").alias("c_nsq"),
     )
-    cos = ratio(adc / (F.col("q_norm") * F.sqrt(F.col("c_nsq"))))
+    cos = ratio(cosine(_adc(m), F.col("q_norm"), F.sqrt(F.col("c_nsq"))))
     scored = (
         cands.join(queries)
         .where(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", cos.alias("cosine_pq"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_pq"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine_pq")
-        .orderBy("query_id", "rank")
+    return _rank_topk(scored, "cosine_pq", k).select(
+        "query_id", "rank", "cand_id", "cosine_pq"
     )
 
 
@@ -1202,7 +1185,7 @@ def ann_topk_ivfpq(
         # shared-encode escape hatch — see ann_topk_pq
         enc = _pq_encoded(embeddings, codebook, m, ks, dim)
     e = spread(embeddings).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
     )
     cells = e.select(
         "vec_id", (-F.array_max(cell_scored)["neg_cell_id"]).alias("cell_id")
@@ -1221,30 +1204,14 @@ def ann_topk_ivfpq(
     )
     luts = _pq_query_luts(embeddings, codebook, n_queries, m, ks, dim)
     queries = F.broadcast(probes.join(F.broadcast(luts), "query_id"))
-    sub = dim // m
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("c_codes"), s + 1) + 1,
-        ),
-    )
-    cos = ratio(adc / (F.col("q_norm") * F.sqrt(F.col("c_nsq"))))
+    cos = ratio(cosine(_adc(m), F.col("q_norm"), F.sqrt(F.col("c_nsq"))))
     scored = (
         cands.join(queries, "cell_id")
         .where(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", cos.alias("cosine_pq"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_pq"), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine_pq")
-        .orderBy("query_id", "rank")
+    return _rank_topk(scored, "cosine_pq", k).select(
+        "query_id", "rank", "cand_id", "cosine_pq"
     )
 
 
@@ -1273,7 +1240,7 @@ def embedding_cluster_report(
     centroids = train_ivf_centroids(embeddings, n_cells, kmeans_iters)
     cell_scored = _cell_scored(_centroid_literal(centroids))
     e = spread(embeddings).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
     )
     best = F.array_max(cell_scored)
     assigned = e.select(
@@ -1303,37 +1270,47 @@ def embedding_cluster_report(
     )
 
 
-def ann_method_eval(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 10
-) -> DataFrame:
-    """Evaluation harness as a query: recall@k (and precision) of
-    every approximate ANN index against the exact bruteforce top-k —
-    the ``dedup_method_eval`` pattern applied to similarity search,
-    so the recall numbers that justify each index live in a catalog
-    entry instead of scattered docstrings.
+def _hit_counts(m: DataFrame, truth: DataFrame) -> DataFrame:
+    """One row (n_results, n_truth, n_hit): the size of a result set,
+    of the exact truth set, and of their (query_id, cand_id) overlap."""
+    inter = m.join(truth, ["query_id", "cand_id"]).agg(F.count("*").alias("n_hit"))
+    return (
+        m.agg(F.count("*").alias("n_results"))
+        .join(truth.agg(F.count("*").alias("n_truth")))
+        .join(inter)
+    )
 
-    All result sets are persisted once; hits are equi-joins on
-    (query_id, cand_id) and the final table is one bounded
-    aggregate row per method — nothing beyond what the indexes
-    themselves compute. At corpus scale this is the standard
-    index-acceptance gate run on a sampled query set.
+
+def _eval_arms(
+    embeddings: DataFrame, n_queries: int, k: int, cols: list[str], score
+) -> DataFrame:
+    """Run every approximate ANN index as one arm against the exact
+    bruteforce top-k: ``score(name, arm, truth)`` turns one index's
+    persisted result (``cols`` only) and the persisted truth
+    (query_id, cand_id) into that method's row; the rows come back
+    unioned and ordered by method.
+
+    The arms are built AND materialized concurrently (guide §2.6).
+    Threading only the construction (r12) left the arm subtrees
+    evaluating sequentially inside the one final union action —
+    measured r13: full query 5.31 s ≈ Σ isolated arms 5.42 s, zero
+    overlap. Each thread persists its arm's bounded (≤ n_queries·k
+    rows) frame and counts it, so the arm jobs overlap on the cluster
+    and the final action unions tiny cached frames: wall-clock ≈
+    max(arm), not Σ(arm). Spark's job group, description and tags are
+    thread-local, so every thread target is wrapped in
+    ``inheritable_thread_target``: the arm jobs carry the caller's.
+
+    The pq and ivfpq arms share ONE persisted PQ encode frame
+    (optimization r12; without it the Arrow encode pass runs once per
+    arm). Their threads race to fill it; BlockManager's per-partition
+    cache locking makes one compute and the other wait. Everything
+    persisted here is freed by ``runtime.release_persisted()``.
     """
     truth = persist(
-        ann_topk_bruteforce(embeddings, n_queries, k).select(
-            "query_id", "cand_id"
-        )
+        ann_topk_bruteforce(embeddings, n_queries, k).select("query_id", "cand_id")
     )
-    # same construction shape as retrieval_rank_eval (optimization
-    # r12/r13): one shared persisted PQ encode frame for the pq/ivfpq
-    # branches; method frames built AND materialized concurrently
-    # (guide §2.6 — see retrieval_rank_eval for the r13 measurement
-    # showing construction-only threading left the arm subtrees
-    # evaluating sequentially in the final union action)
-    enc = persist(
-        _pq_encoded(embeddings, _pq_codebook(embeddings), PQ_M, PQ_KS, 64)
-    )
-    from concurrent.futures import ThreadPoolExecutor
-
+    enc = persist(_pq_encoded(embeddings, _pq_codebook(embeddings), PQ_M, PQ_KS, 64))
     builders = {
         "ivf": lambda: ann_topk_ivf(embeddings, n_queries, k),
         "ivfpq": lambda: ann_topk_ivfpq(embeddings, n_queries, k, enc=enc),
@@ -1343,41 +1320,50 @@ def ann_method_eval(
     }
 
     def _arm(fn):
-        m = persist(fn().select("query_id", "cand_id"))
+        m = persist(fn().select(*cols))
         m.count()
         return m
 
+    inherit = inheritable_thread_target(embeddings.sparkSession)
     with ThreadPoolExecutor(max_workers=len(builders) + 1) as pool:
-        tf = pool.submit(truth.count)
-        futures = {
-            name: pool.submit(_arm, fn) for name, fn in builders.items()
-        }
+        tf = pool.submit(inherit(truth.count))
+        arm = inherit(_arm)
+        futures = {name: pool.submit(arm, fn) for name, fn in builders.items()}
         methods = {name: fut.result() for name, fut in futures.items()}
         tf.result()
-    outs = []
-    for name, m in methods.items():
-        inter = m.join(truth, ["query_id", "cand_id"]).agg(
-            F.count("*").alias("n_hit")
+    return reduce(
+        DataFrame.unionByName,
+        [score(name, m, truth) for name, m in methods.items()],
+    ).orderBy("method")
+
+
+def ann_method_eval(
+    embeddings: DataFrame, n_queries: int = 8, k: int = 10
+) -> DataFrame:
+    """Evaluation harness as a query: recall@k (and precision) of
+    every approximate ANN index against the exact bruteforce top-k —
+    the ``dedup_method_eval`` pattern applied to similarity search,
+    so the recall numbers that justify each index live in a catalog
+    entry instead of scattered docstrings.
+
+    All result sets are persisted once (``_eval_arms``); hits are
+    equi-joins on (query_id, cand_id) and the final table is one
+    bounded aggregate row per method — nothing beyond what the indexes
+    themselves compute. At corpus scale this is the standard
+    index-acceptance gate run on a sampled query set.
+    """
+
+    def score(name: str, m: DataFrame, truth: DataFrame) -> DataFrame:
+        return _hit_counts(m, truth).select(
+            F.lit(name).alias("method"),
+            "n_results",
+            "n_truth",
+            "n_hit",
+            ratio(F.expr("n_hit / nullif(n_results, 0)")).alias("precision"),
+            ratio(F.expr("n_hit / nullif(n_truth, 0)")).alias("recall"),
         )
-        outs.append(
-            m.agg(F.count("*").alias("n_results"))
-            .join(truth.agg(F.count("*").alias("n_truth")))
-            .join(inter)
-            .select(
-                F.lit(name).alias("method"),
-                "n_results",
-                "n_truth",
-                "n_hit",
-                ratio(F.expr("n_hit / nullif(n_results, 0)")).alias(
-                    "precision"
-                ),
-                ratio(F.expr("n_hit / nullif(n_truth, 0)")).alias("recall"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("method")
+
+    return _eval_arms(embeddings, n_queries, k, ["query_id", "cand_id"], score)
 
 
 #: Rank-aware retrieval eval: query/k defaults shared with
@@ -1429,65 +1415,16 @@ def retrieval_rank_eval(
     truth, per-query state is a bounded window over ≤k hit rows, and
     the output is one row per method.
     """
-    truth = persist(
-        ann_topk_bruteforce(embeddings, n_queries, k).select(
-            "query_id", "cand_id"
-        )
-    )
-    # ONE shared PQ encode frame for the pq and ivfpq branches
-    # (optimization r12): without it the final union action computes
-    # the Arrow encode pass once per branch. Bounded rows (m ints + 2
-    # doubles per vector), persisted like the truth set.
-    enc = persist(
-        _pq_encoded(embeddings, _pq_codebook(embeddings), PQ_M, PQ_KS, 64)
-    )
-    # Build AND MATERIALIZE the five method frames CONCURRENTLY
-    # (guide §2.6). r12 threaded only the construction (bounded
-    # index-metadata collects + plan building), but the arm SUBTREES
-    # still evaluated sequentially inside the one final union action —
-    # measured r13: full query 5.31 s ≈ Σ isolated arms 5.42 s, zero
-    # overlap. Each thread now persists its arm's bounded
-    # (≤ n_queries·k rows) rank frame and counts it, so the five arm
-    # jobs overlap on the cluster and the final action unions tiny
-    # cached frames; wall-clock ≈ max(arm), not Σ(arm). Everything is
-    # still computed from the parquet inputs inside this call — the
-    # persists are released by release_persisted() like every other
-    # signature table. The pq/ivfpq threads race to fill the shared
-    # ``enc`` cache; BlockManager's per-partition cache locking makes
-    # one compute and the other wait, so the encode pass still runs
-    # once.
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = {
-        "ivf": lambda: ann_topk_ivf(embeddings, n_queries, k),
-        "ivfpq": lambda: ann_topk_ivfpq(embeddings, n_queries, k, enc=enc),
-        "lsh": lambda: ann_topk_lsh(embeddings, n_queries, k),
-        "pq": lambda: ann_topk_pq(embeddings, n_queries, k, enc=enc),
-        "sq8": lambda: ann_topk_sq8(embeddings, n_queries, k),
-    }
-
-    def _arm(fn):
-        m = persist(fn().select("query_id", "cand_id", "rank"))
-        m.count()
-        return m
-
-    with ThreadPoolExecutor(max_workers=len(builders) + 1) as pool:
-        tf = pool.submit(truth.count)
-        futures = {
-            name: pool.submit(_arm, fn) for name, fn in builders.items()
-        }
-        methods = {name: fut.result() for name, fut in futures.items()}
-        tf.result()
     idcg = retrieval_idcg_micro(k)
     w = Window.partitionBy("query_id").orderBy("rank")
     gain = F.round(F.lit(1e6) / F.log2(F.col("rank") + 1), 0).cast("long")
     prec = F.round(F.lit(1e6) * F.col("i") / F.col("rank"), 0).cast("long")
     rr = F.round(F.lit(1e6) / F.col("first_rank"), 0).cast("long")
-    outs = []
-    for name, m in methods.items():
-        hits = m.join(truth, ["query_id", "cand_id"])
+
+    def score(name: str, m: DataFrame, truth: DataFrame) -> DataFrame:
         per_q = (
-            hits.withColumn("i", F.row_number().over(w))
+            m.join(truth, ["query_id", "cand_id"])
+            .withColumn("i", F.row_number().over(w))
             .groupBy("query_id")
             .agg(
                 F.min("rank").alias("first_rank"),
@@ -1495,30 +1432,26 @@ def retrieval_rank_eval(
                 F.sum(prec).alias("ap_micro"),
             )
         )
-        outs.append(
-            per_q.agg(
-                F.count(F.lit(1)).cast("long").alias("n_hit_queries"),
-                F.coalesce(F.sum(rr), F.lit(0)).alias("srr"),
-                F.coalesce(F.sum("dcg_micro"), F.lit(0)).alias("sdcg"),
-                F.coalesce(F.sum("ap_micro"), F.lit(0)).alias("sap"),
-            ).select(
-                F.lit(name).alias("method"),
-                "n_hit_queries",
-                ratio(
-                    F.col("srr") / F.lit(float(n_queries * 10**6))
-                ).alias("mrr"),
-                ratio(F.col("sdcg") / F.lit(float(n_queries * idcg))).alias(
-                    "ndcg_at_k"
-                ),
-                ratio(
-                    F.col("sap") / F.lit(float(n_queries * k * 10**6))
-                ).alias("map_at_k"),
-            )
+        return per_q.agg(
+            F.count(F.lit(1)).cast("long").alias("n_hit_queries"),
+            F.coalesce(F.sum(rr), F.lit(0)).alias("srr"),
+            F.coalesce(F.sum("dcg_micro"), F.lit(0)).alias("sdcg"),
+            F.coalesce(F.sum("ap_micro"), F.lit(0)).alias("sap"),
+        ).select(
+            F.lit(name).alias("method"),
+            "n_hit_queries",
+            ratio(F.col("srr") / F.lit(float(n_queries * 10**6))).alias("mrr"),
+            ratio(F.col("sdcg") / F.lit(float(n_queries * idcg))).alias(
+                "ndcg_at_k"
+            ),
+            ratio(F.col("sap") / F.lit(float(n_queries * k * 10**6))).alias(
+                "map_at_k"
+            ),
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("method")
+
+    return _eval_arms(
+        embeddings, n_queries, k, ["query_id", "cand_id", "rank"], score
+    )
 
 
 # Matryoshka truncation sweep: prefix lengths evaluated against the
@@ -1564,14 +1497,8 @@ def ann_recall_vs_dim(
                 "query_id", "cand_id"
             )
         )
-        inter = m.join(truth, ["query_id", "cand_id"]).agg(
-            F.count("*").alias("n_hit")
-        )
         outs.append(
-            m.agg(F.count("*").alias("n_results"))
-            .join(truth.agg(F.count("*").alias("n_truth")))
-            .join(inter)
-            .select(
+            _hit_counts(m, truth).select(
                 F.lit(d).alias("dim"),
                 "n_results",
                 "n_truth",
@@ -1579,21 +1506,13 @@ def ann_recall_vs_dim(
                 ratio(F.expr("n_hit / nullif(n_truth, 0)")).alias("recall"),
             )
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("dim")
+    return reduce(DataFrame.unionByName, outs).orderBy("dim")
 
 
 # ── Nearest-query routing (the stream-safe ANN scoring shape) ────────────────
 
 ROUTE_THRESHOLD_MICRO = 150_000  # 0.15 at 6 dp, exact integer compare
 ROUTE_N_QUERIES = 8  # frozen routing set size (single-sourced with the oracle)
-# Past this many frozen queries the literal-fold expression tree stops
-# being the right plan (the ckan/lang_id_ngram plan-blowup bound: each
-# query adds a 64-step interpreted fold to every projection) and the
-# Arrow kernel takes over.
-ROUTE_LITERAL_MAX_QUERIES = 32
 
 
 def collect_route_queries(
@@ -1601,8 +1520,8 @@ def collect_route_queries(
 ) -> list[tuple[int, list[float], float]]:
     """(query_id, embedding, norm) for the frozen routing set — a
     BOUNDED collect (n_queries rows, the IVF-centroid pattern); norms
-    fold sequentially in Python exactly like the Catalyst ``_norm``
-    fold so scoring is bit-identical wherever the division happens."""
+    fold sequentially in Python exactly like the Catalyst
+    ``columns.norm`` fold, so they bit-match the oracle's."""
     rows = sorted(
         embeddings.where(F.col("vec_id") < n_queries)
         .select("vec_id", "embedding")
@@ -1625,88 +1544,22 @@ def route_scores_array(
     """array<long> of integer micro-cosines against every frozen query
     (ordered by query_id) — pure per-row folds over literal vectors,
     NO join, NO state: the shape a streaming router needs
-    (lang_id_ngram's joinless-scoring precedent; the bounded
-    expression tree holds for ≤ ~32 queries, past that the
-    broadcast-join fallback applies). Micro-units are
-    embedding_label_stats' convention so rank order cannot drift
-    between engines."""
-    norm = _norm(emb)
+    (lang_id_ngram's joinless-scoring precedent). Each query adds one
+    64-step fold to the projection, so the expression tree suits the
+    small frozen sets routed here (``ROUTE_N_QUERIES``). Micro-units
+    are embedding_label_stats' convention so rank order cannot drift
+    between engines. A zero-norm embedding (or query) scores NULL
+    against every query (``columns.cosine``); ``array_max`` skips the
+    NULLs, so such a vector routes nowhere."""
+    en = norm(emb)
     return F.array(
         *[
             F.round(
-                _dot(emb, F.expr(_darray_sql(q)))
-                / (norm * F.lit(qn))
-                * 1e6,
+                cosine(dot(emb, F.expr(_darray_sql(q))), en, F.lit(qn)) * 1e6,
                 0,
             ).cast("long")
             for _, q, qn in queries
         ]
-    )
-
-
-def route_scores_arrow(embeddings: DataFrame, queries) -> DataFrame:
-    """Arrow-kernel twin of ``route_scores_array`` for routing sets
-    past the ``ROUTE_LITERAL_MAX_QUERIES`` literal-expression-tree
-    bound: one ``mapInPandas`` pass emits the same query_id-ordered
-    ``array<long>`` of integer micro-cosines.
-
-    Bit-identity with the Catalyst path is engineered, not hoped for
-    (the lsh_band_frame precedent): the kernel accumulates dot and
-    norm SEQUENTIALLY ACROSS DIMS (``acc += E[:, j] * Q[:, j]``), the
-    same left-to-right order as ``_dot``/``_norm``'s folds; the scalar
-    chain ``(dot / (norm * qn)) * 1e6`` is evaluated in the same
-    operation order; and the final micro rounding goes through
-    ``Decimal(repr(v))`` + HALF_UP — the same shortest-decimal-repr
-    path as Spark's ``round(double, 0)`` (``BigDecimal.valueOf``).
-    Parity with the literal path is asserted row-for-row in tests.
-
-    Scale: one streaming Arrow pass, no shuffle, no state — the output
-    is id + m longs per row, so the fallback keeps the streaming-twin
-    shape while supporting routing sets of hundreds of centroids.
-    """
-    import numpy as np
-
-    qm = np.array([q for _, q, _ in queries], dtype=np.float64)  # (m, d)
-    qn = np.array([n for _, _, n in queries], dtype=np.float64)  # (m,)
-    id_type = dict(embeddings.dtypes)["vec_id"]
-
-    def gen(batches):
-        import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        one = Decimal("1")
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            acc = np.zeros((n, qm.shape[0]))
-            nsq = np.zeros(n)
-            for j in range(e.shape[1]):  # sequential over dims == fold order
-                acc = acc + e[:, j, None] * qm[:, j]
-                nsq = nsq + e[:, j] * e[:, j]
-            v = acc / (np.sqrt(nsq)[:, None] * qn) * 1e6
-            if not np.isfinite(v).all():
-                bad = pdf["vec_id"].to_numpy()[~np.isfinite(v).all(axis=1)]
-                raise ValueError(
-                    "route_scores_arrow: non-finite cosine for vec_ids "
-                    f"{sorted(bad.tolist())[:5]} (zero-norm or NaN "
-                    "embeddings) — clean or filter them first; the literal "
-                    "path raises DIVIDE_BY_ZERO on the same input under "
-                    "ANSI mode"
-                )
-            cms = [
-                [
-                    int(Decimal(repr(float(x))).quantize(one, rounding=ROUND_HALF_UP))
-                    for x in row
-                ]
-                for row in v
-            ]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "cms": cms})
-
-    return spread(embeddings.select("vec_id", "embedding")).mapInPandas(
-        gen, f"vec_id {id_type}, cms array<bigint>"
     )
 
 
@@ -1724,12 +1577,16 @@ def route_cols_from_scores(
     (measured 2.1 s → interpreted-fold-free at sf0.1).
 
     ``array_position(cms, array_max(cms))`` is FIRST-of-max = lowest
-    query_id, since the array is query_id-ordered."""
-    pos = F.array_position(cms, F.array_max(cms))
-    best_id = F.element_at(
-        F.array(*[F.lit(qid) for qid, _, _ in queries]), pos.cast("int")
-    )
+    query_id, since the array is query_id-ordered. An all-NULL array (a
+    zero-norm vector) has no best query: the explicit guard is needed
+    because codegen'd ``element_at`` over a literal array returns its
+    LAST element for a NULL index (Spark 4.1.2)."""
     best_cm = F.array_max(cms)
+    pos = F.array_position(cms, best_cm)
+    best_id = F.when(
+        best_cm.isNotNull(),
+        F.element_at(F.array(*[F.lit(qid) for qid, _, _ in queries]), pos.cast("int")),
+    )
     n_above = F.size(F.filter(cms, lambda c: c >= F.lit(threshold_micro)))
     return best_id, best_cm, n_above
 
@@ -1738,7 +1595,6 @@ def route_nearest_query(
     embeddings: DataFrame,
     n_queries: int = ROUTE_N_QUERIES,
     threshold_micro: int = ROUTE_THRESHOLD_MICRO,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Route every non-query vector to its nearest frozen query: the
     batch twin of the streaming ANN router (score incoming embeddings
@@ -1750,39 +1606,22 @@ def route_nearest_query(
     is a single-scan pure projection — no join, no shuffle except the
     presentation sort, and the identical expressions serve the
     Structured Streaming twin (streaming/ann_route.py) with zero
-    state. ``strategy``: ``"literal"`` forces the Catalyst literal
-    folds, ``"arrow"`` the mapInPandas kernel, ``"auto"`` picks the
-    kernel past ``ROUTE_LITERAL_MAX_QUERIES`` queries (the literal
-    tree adds one interpreted 64-step fold per query to the scan
-    projection — the ckan plan-blowup class); both paths are
-    bit-identical (asserted in tests), so the switch never moves a
-    hash.
+    state. A zero-norm vector gets NULL ``best_query_id`` and
+    ``best_cosine`` and 0 above the threshold; a zero-norm query is
+    never anyone's best.
     """
-    if strategy not in ("auto", "literal", "arrow"):
-        raise ValueError(
-            f"route_nearest_query: unknown strategy {strategy!r} "
-            "(expected 'auto', 'literal', or 'arrow')"
-        )
     queries = collect_route_queries(embeddings, n_queries)
     best_id, best_cm, n_above = route_cols_from_scores(
         queries, F.col("cms"), threshold_micro
     )
-    use_arrow = strategy == "arrow" or (
-        strategy == "auto" and len(queries) > ROUTE_LITERAL_MAX_QUERIES
+    scored = (
+        spread(embeddings)
+        .where(F.col("vec_id") >= n_queries)
+        .select(
+            "vec_id",
+            route_scores_array(queries, F.col("embedding")).alias("cms"),
+        )
     )
-    if use_arrow:
-        scored = route_scores_arrow(
-            embeddings.where(F.col("vec_id") >= n_queries), queries
-        )
-    else:
-        scored = (
-            spread(embeddings)
-            .where(F.col("vec_id") >= n_queries)
-            .select(
-                "vec_id",
-                route_scores_array(queries, F.col("embedding")).alias("cms"),
-            )
-        )
     return scored.select(
         "vec_id",
         best_id.alias("best_query_id"),
@@ -1816,49 +1655,13 @@ def embedding_drift_report(embeddings: DataFrame) -> DataFrame:
     the per-label average uses integer micro-cosines so summation
     order cannot drift the 6-dp result.
     """
-    ex = embeddings.select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        ratio(F.avg(F.col("v").cast("double"))).alias("c")
-    )
-    cent_arr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("centroid")
-    )
-    glob = ex.groupBy("pos").agg(
-        ratio(F.avg(F.col("v").cast("double"))).alias("g")
-    )
-    glob_arr = persist(
-        glob.agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "g"))),
-                lambda s: s["g"],
-            ).alias("global_centroid")
-        )
-    )
-
-    def _dot(a: Column | str, b: Column | str) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def _norm(a: Column | str) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-            )
-        )
-
-    gnorm = _norm("global_centroid")
+    cent_arr = _centroid_arrays(embeddings, ["label"], "centroid")
+    glob_arr = persist(_centroid_arrays(embeddings, [], "global_centroid"))
+    gnorm = norm("global_centroid")
     member = embeddings.join(F.broadcast(glob_arr)).select(
         "label",
         ratio(
-            _dot("embedding", "global_centroid")
-            / (_norm("embedding") * gnorm)
+            cosine(dot("embedding", "global_centroid"), norm("embedding"), gnorm)
         ).alias("cos"),
     )
     micro = F.round(F.col("cos") * 1e6, 0)
@@ -1876,10 +1679,9 @@ def embedding_drift_report(embeddings: DataFrame) -> DataFrame:
     )
     cent_vs_glob = cent_arr.join(F.broadcast(glob_arr)).select(
         "label",
-        ratio(_norm("centroid")).alias("centroid_norm"),
+        ratio(norm("centroid")).alias("centroid_norm"),
         ratio(
-            _dot("centroid", "global_centroid")
-            / (_norm("centroid") * gnorm)
+            cosine(dot("centroid", "global_centroid"), norm("centroid"), gnorm)
         ).alias("centroid_cos_to_global"),
     )
     totals = per.agg(F.sum("n_vecs").alias("t_vecs"))
@@ -1931,31 +1733,10 @@ def hard_negative_mining(
     100 TB the bruteforce scan is the recall baseline; the banded
     IVF/LSH variants generate candidates for the same window). The
     ceiling compares against the 6-dp-rounded cosine, so the boundary
-    verdict is engine-exact.
+    verdict is engine-exact. A NULL cosine (zero-norm anchor or
+    candidate) fails the ceiling, so zero vectors are never mined.
     """
-    queries = F.broadcast(
-        embeddings.where(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_norm"),
-        )
-    )
-    cand = spread(embeddings).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-    )
-    cos = ratio(
-        _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    )
-    scored = (
-        cand.join(queries)
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", cos.alias("cosine"))
-        .where(F.col("cosine") < hi)
-    )
-    from pyspark.sql import Window
-
+    scored = _bruteforce_scored(embeddings, n_queries).where(F.col("cosine") < hi)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.col("cand_id")
     )
@@ -2013,7 +1794,6 @@ def hybrid_rrf_topk(
     ``bm25_topk`` / ``ann_topk_bruteforce`` (or any banded ANN/ppjoin
     variant swapped in as the candidate generator at corpus scale).
     """
-    from forest_open_data_pipelines_spark.functions.columns import micro_div
     from forest_open_data_pipelines_spark.operators.textops import bm25_topk
 
     spark = documents.sparkSession
@@ -2038,8 +1818,6 @@ def hybrid_rrf_topk(
             F.col("rank").alias("dense_rank"),
         )
     )
-    from pyspark.sql import Window
-
     fused = sparse.join(dense, ["query_id", "doc_id"], "full_outer")
     rrf = F.coalesce(
         micro_div("1", f"{rrf_k} + sparse_rank"), F.lit(0)
@@ -2115,10 +1893,7 @@ def bitext_mining(
     )
     sb = banded_signatures(src, "src_id", "s_emb", n_planes, bands, dim)
     tb = banded_signatures(tgt, "tgt_id", "t_emb", n_planes, bands, dim)
-    cos = ratio(
-        _dot(F.col("s_emb"), F.col("t_emb"))
-        / (F.col("s_norm") * F.col("t_norm"))
-    )
+    cos = ratio(cosine(dot("s_emb", "t_emb"), F.col("s_norm"), F.col("t_norm")))
     # Distinct-then-verify (the dedup_embedding_lsh-adjudicated shape):
     # at this recall-first geometry (2-bit band keys) a candidate pair
     # collides in ~2.25 bands on average (measured at sf0.1: 490,858
@@ -2131,19 +1906,13 @@ def bitext_mining(
     cand = (
         sb.join(tb, ["band", "key"]).select("src_id", "tgt_id").distinct()
     )
-    se = src.select(
-        "src_id", "s_emb", _norm(F.col("s_emb")).alias("s_norm")
-    )
-    te = tgt.select(
-        "tgt_id", "t_emb", _norm(F.col("t_emb")).alias("t_norm")
-    )
+    se = src.select("src_id", "s_emb", norm(F.col("s_emb")).alias("s_norm"))
+    te = tgt.select("tgt_id", "t_emb", norm(F.col("t_emb")).alias("t_norm"))
     pairs = persist(
         cand.join(se, "src_id")
         .join(te, "tgt_id")
         .select("src_id", "tgt_id", cos.alias("cosine"))
     )
-    from pyspark.sql import Window
-
     micro = F.round(F.col("cosine") * 1e6, 0).cast("long")
     w_src = Window.partitionBy("src_id").orderBy(
         F.desc("cosine"), F.asc("tgt_id")
@@ -2205,7 +1974,9 @@ def embedding_outlier_report(
     GLOBAL centroid with global z-scores for both, flagging |z| >
     ``z_threshold`` — the corrupt-embedding gate (zero/truncated/
     mis-scaled vectors, encoder glitches) a pipeline runs before
-    trusting embeddings for dedup or ANN. Complements
+    trusting embeddings for dedup or ANN. A zero vector has norm 0.0
+    and a NULL ``cos_to_global`` (``columns.cosine``); its norm z-score
+    flags it. Complements
     ``embedding_drift_report`` (per-label shift) and
     ``embedding_label_stats`` (cluster cohesion) at the per-vector
     grain.
@@ -2222,54 +1993,33 @@ def embedding_outlier_report(
     over the persisted per-vector stats frame, nothing corpus-sized
     shuffles.
     """
-    ex = embeddings.select(F.posexplode("embedding").alias("pos", "v"))
-    glob = ex.groupBy("pos").agg(
-        ratio(F.avg(F.col("v").cast("double"))).alias("g")
-    )
-    glob_arr = glob.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "g"))), lambda s: s["g"]
-        ).alias("gcent")
-    )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def _norm(a):
-        return F.sqrt(
-            F.aggregate(
-                a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-            )
-        )
-
-    gnorm = _norm("gcent")
-    vnorm = _norm("embedding")
+    glob_arr = _centroid_arrays(embeddings, [], "gcent")
+    vnorm = norm("embedding")
     stats = persist(
         embeddings.join(F.broadcast(glob_arr)).select(
             "vec_id",
             "label",
             ratio(vnorm).alias("norm"),
-            ratio(_dot("embedding", "gcent") / (vnorm * gnorm)).alias(
+            ratio(cosine(dot("embedding", "gcent"), vnorm, norm("gcent"))).alias(
                 "cos_to_global"
             ),
         )
     )
     nm = F.round(F.col("norm") * 1e6, 0).cast("decimal(38,0)")
     cm = F.round(F.col("cos_to_global") * 1e6, 0).cast("decimal(38,0)")
+    # the cos axis counts only defined cosines: a zero vector's NULL
+    # cos_to_global is left out of Σ, so it must not enter n either
     mom = stats.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(nm).alias("sn"),
         F.sum(nm * nm).alias("snn"),
+        F.count(cm).cast("decimal(38,0)").alias("nc"),
         F.sum(cm).alias("sc"),
         F.sum(cm * cm).alias("scc"),
     )
 
-    def _z(x_micro, s, ss):
-        n = F.col("n").cast("double")
+    def _z(x_micro, cnt, s, ss):
+        n = F.col(cnt).cast("double")
         mean = F.col(s).cast("double") / n
         var = (
             n * F.col(ss).cast("double")
@@ -2280,8 +2030,8 @@ def embedding_outlier_report(
             / F.nullif(F.sqrt(var), F.lit(0.0))
         )
 
-    z_norm = _z(F.round(F.col("norm") * 1e6, 0), "sn", "snn")
-    z_cos = _z(F.round(F.col("cos_to_global") * 1e6, 0), "sc", "scc")
+    z_norm = _z(F.round(F.col("norm") * 1e6, 0), "n", "sn", "snn")
+    z_cos = _z(F.round(F.col("cos_to_global") * 1e6, 0), "nc", "sc", "scc")
     return (
         stats.join(F.broadcast(mom))
         .select(
@@ -2420,7 +2170,7 @@ def ann_topk_ivfpq_residual(
     centroids = train_ivf_centroids(embeddings, n_cells, 0)
     cell_scored = _cell_scored(_centroid_literal(centroids))
     e = spread(embeddings).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("v_norm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
     )
     cells_frame = e.select(
         "vec_id",
@@ -2495,31 +2245,14 @@ def ann_topk_ivfpq_residual(
             F.broadcast(luts), "query_id"
         )
     )
-    adc_r = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("c_codes"), s + 1) + 1,
-        ),
-    )
     cos = ratio(
-        (F.col("qc_dot") + adc_r) / (F.col("q_norm") * F.sqrt(F.col("c_nsq")))
+        cosine(F.col("qc_dot") + _adc(m), F.col("q_norm"), F.sqrt(F.col("c_nsq")))
     )
     scored = (
         cands.join(queries, "cell_id")
         .where(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", cos.alias("cosine_pq"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_pq"), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine_pq")
-        .orderBy("query_id", "rank")
+    return _rank_topk(scored, "cosine_pq", k).select(
+        "query_id", "rank", "cand_id", "cosine_pq"
     )

@@ -435,12 +435,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "monthly_series": lambda s, d: timeseries.monthly_series(_enriched(s, d)),
     "dedup_exact": lambda s, d: dedup.dedup_exact(load_table(s, d, "documents")),
     "dedup_minhash": lambda s, d: dedup.dedup_minhash(load_table(s, d, "documents")),
-    # method="prefix": the catalog's EXECUTED plan is the ppjoin
-    # prefix-filter path — the 100× plan (x8 probe ratio 2.35 vs the
-    # count-verify baseline's 20.3). Same pair set (equality asserted
-    # in tests); the oracle is the stop-list-free exact twin.
-    "dedup_ngram_jaccard": lambda s, d: dedup.dedup_ngram_jaccard(
-        load_table(s, d, "documents"), method="prefix"
+    # The catalog's EXECUTED plan is the ppjoin prefix-filter path —
+    # the 100× plan (x8 probe ratio 2.35 vs the count-verify
+    # dedup_ngram_jaccard's 20.3). Same pair set (equality asserted in
+    # tests); the oracle is the stop-list-free exact twin.
+    "dedup_ngram_jaccard": lambda s, d: dedup.dedup_ngram_ppjoin(
+        load_table(s, d, "documents")
     ),
     "dedup_embedding_lsh": lambda s, d: dedup.dedup_embedding_lsh(
         load_table(s, d, "embeddings")

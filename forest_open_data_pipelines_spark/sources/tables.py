@@ -140,8 +140,6 @@ def spread(df: DataFrame, max_target: int | None = None) -> DataFrame:
     partitioning-independent (no cross-row float accumulation order is
     exposed).
     """
-    if not SPREAD_ENABLED:
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if max_target is not None:
@@ -175,11 +173,6 @@ def spread(df: DataFrame, max_target: int | None = None) -> DataFrame:
 #: count only changes if the files are rewritten, which the test/bench
 #: processes never do mid-run.
 _SPREAD_PROBE_CACHE: dict[tuple[str, ...], int] = {}
-
-
-#: A/B escape hatch (and test hook): disables the scan fan-out in
-#: ``spread`` process-wide.
-SPREAD_ENABLED = os.environ.get("SPARK_GRAFT_NO_SPREAD", "") == ""
 
 
 def ntz_as_utc_instant(spark: SparkSession, ntz: F.Column) -> F.Column:

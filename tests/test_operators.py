@@ -4318,44 +4318,6 @@ def test_threshold_sweep_emits_zero_pair_cutoffs(spark):
     assert rows[0.5].n_pairs >= 1
 
 
-def test_route_arrow_parity_with_literal(spark):
-    """The Arrow routing kernel must be BIT-identical to the literal
-    Catalyst folds (sequential dim order + repr-HALF_UP rounding), so
-    switching strategies can never move a driver hash."""
-    from forest_open_data_pipelines_spark.operators.similarity import (
-        route_nearest_query,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    lit_rows = route_nearest_query(emb, strategy="literal").collect()
-    arrow_rows = route_nearest_query(emb, strategy="arrow").collect()
-    assert len(lit_rows) > 0
-    assert [tuple(r) for r in lit_rows] == [tuple(r) for r in arrow_rows]
-
-
-def test_route_auto_switches_to_arrow_past_literal_bound(spark):
-    """Past ROUTE_LITERAL_MAX_QUERIES frozen queries, strategy='auto'
-    must route through the mapInPandas kernel (one Arrow pass instead
-    of one interpreted 64-step fold per query per row — the ckan
-    plan-blowup class) and still match the forced-literal plan
-    value-for-value."""
-    from forest_open_data_pipelines_spark.operators.similarity import (
-        ROUTE_LITERAL_MAX_QUERIES,
-        route_nearest_query,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    nq = ROUTE_LITERAL_MAX_QUERIES + 8
-    auto = route_nearest_query(emb, n_queries=nq)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    small = route_nearest_query(emb, n_queries=8)
-    small_plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in small_plan  # default stays literal
-    lit = route_nearest_query(emb, n_queries=nq, strategy="literal")
-    assert [tuple(r) for r in auto.collect()] == [tuple(r) for r in lit.collect()]
-
-
 def test_duplicate_spans_extracts_maximal_merged_ranges(spark):
     """duplicate_spans must merge overlapping duplicated windows into
     maximal token ranges: two separated copied blocks yield two spans
@@ -4498,30 +4460,6 @@ def test_dedup_winnowing_pairs_and_detection_floor(spark):
         assert (1, 4) in loose  # the >= w+k-1 verbatim-run floor
     finally:
         release_persisted()
-
-
-def test_route_strategy_validation_and_nonfinite_guard(spark):
-    """Unknown strategy strings must fail loudly (a typo silently
-    falling back to the literal tree at 200 queries IS the plan
-    blowup the knob exists to avoid); and the Arrow kernel must
-    reject zero-norm embeddings with a named error, mirroring the
-    literal path's ANSI DIVIDE_BY_ZERO instead of dying on a cryptic
-    decimal.InvalidOperation."""
-    from forest_open_data_pipelines_spark.operators.similarity import (
-        route_nearest_query,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        route_nearest_query(emb, strategy="Arrow")
-
-    zero = spark.createDataFrame(
-        [(int(1e6), [0.0] * 64, 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    poisoned = emb.unionByName(zero)
-    with pytest.raises(Exception, match="non-finite cosine"):
-        route_nearest_query(poisoned, strategy="arrow").collect()
 
 
 def test_event_transitions_bigram_counts_and_micro_probs(spark):
@@ -5047,6 +4985,186 @@ def test_dedup_embedding_lsh_zero_and_wrong_length_vectors(spark):
     assert not any({a, b} & zero for a, b in exact)
     for pair, cos in lsh.items():
         assert cos == exact[pair]
+
+
+#: Zero vectors planted in the sf0.001 embeddings: id 3 is one of the
+#: frozen queries (vec_id < 8), id 20 an ordinary candidate.
+ZERO_VEC_IDS = (3, 20)
+
+#: ANN top-k entries → their score column; the first five score the
+#: vectors themselves, the PQ family a candidate's reconstruction.
+_ZERO_TOPK = {
+    "ann_topk_bruteforce": "cosine",
+    "ann_topk_lsh": "cosine",
+    "ann_topk_ivf": "cosine",
+    "ann_topk_ivf_trained": "cosine",
+    "ann_topk_sq8": "cosine_q",
+    "ann_topk_pq": "cosine_pq",
+    "ann_topk_ivfpq": "cosine_pq",
+    "ann_topk_ivfpq_residual": "cosine_pq",
+}
+
+
+@pytest.fixture(scope="module")
+def zero_vec_dir(tmp_path_factory):
+    """sf0.001 with ZERO_VEC_IDS' embeddings set to 64 zeros; every
+    other table is a link to the original file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("zero_vectors")
+    for f in os.listdir(SF_DIR):
+        if f != "embeddings.parquet":
+            os.symlink(os.path.join(SF_DIR, f), out / f)
+    t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+    embs = [
+        [0.0] * 64 if vid in ZERO_VEC_IDS else e
+        for vid, e in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    ]
+    col = t.schema.get_field_index("embedding")
+    t = t.set_column(
+        col, t.schema.field(col), pa.array(embs, type=t.schema.field(col).type)
+    )
+    pq.write_table(t, out / "embeddings.parquet")
+    return str(out)
+
+
+@pytest.fixture(scope="module")
+def zero_vec_oracle(zero_vec_dir):
+    import duckdb
+
+    from forest_open_data_pipelines_spark.sources.tables import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{zero_vec_dir}/{t}.parquet'"
+        )
+    return con
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        *_ZERO_TOPK,
+        "route_nearest_query",
+        "hard_negative_mining",
+        "bitext_mining",
+        "embedding_label_stats",
+        "embedding_drift_report",
+        "embedding_outlier_report",
+        "embedding_cluster_report",
+        "dedup_embedding",
+        "dedup_embedding_lsh",
+        "dedup_semantic",
+        "corpus_curation",
+        "decontaminate_embedding",
+    ],
+)
+def test_vector_entries_score_zero_vectors_null(
+    spark, zero_vec_dir, zero_vec_oracle, name
+):
+    """Every vector entry runs on embeddings holding zero vectors and
+    scores each cosine that touches one NULL (``columns.cosine``),
+    instead of raising DIVIDE_BY_ZERO: a NULL fails every threshold,
+    ranks after every real score and never names a nearest vector. The
+    output equals the DuckDB oracle's on the same input."""
+    import __spark_entry__ as entry_mod
+    from forest_open_data_pipelines_spark.runtime import release_persisted
+    from tools.frame_compare import pandas_signature
+
+    z = set(ZERO_VEC_IDS)
+    df = entry_mod.queries()[name](spark, zero_vec_dir)
+    try:
+        collected = df.collect()
+    finally:
+        release_persisted()
+    got = spark.createDataFrame(collected, df.schema).toPandas()
+    want = zero_vec_oracle.execute(entry_mod.oracle_sql()[name]).df()
+    assert pandas_signature(got) == pandas_signature(want)
+    rows = [r.asDict() for r in collected]
+    assert rows
+    if name in _ZERO_TOPK:
+        col = _ZERO_TOPK[name]
+        exact = col != "cosine_pq"
+        assert any(r["query_id"] == 3 for r in rows)
+        for r in rows:
+            if r["query_id"] in z or (exact and r["cand_id"] in z):
+                assert r[col] is None, r
+            elif r["cand_id"] not in z:
+                assert r[col] is not None, r
+    elif name == "route_nearest_query":
+        by_id = {r["vec_id"]: r for r in rows}
+        assert by_id[20]["best_query_id"] is None
+        assert by_id[20]["best_cosine"] is None
+        assert by_id[20]["n_above_threshold"] == 0
+        others = [r for v, r in by_id.items() if v != 20]
+        assert all(r["best_cosine"] is not None for r in others)
+        assert all(r["best_query_id"] != 3 for r in others)
+    elif name == "hard_negative_mining":
+        assert not any({r["query_id"], r["cand_id"]} & z for r in rows)
+        assert all(r["cosine"] is not None for r in rows)
+    elif name == "bitext_mining":
+        assert not any({r["src_id"], r["tgt_id"]} & z for r in rows)
+        assert all(r["cosine"] is not None for r in rows)
+    elif name in ("dedup_embedding", "dedup_embedding_lsh"):
+        assert not any({r["vec_a"], r["vec_b"]} & z for r in rows)
+    elif name == "embedding_outlier_report":
+        for r in rows:
+            if r["vec_id"] in z:
+                assert r["norm"] == 0.0 and r["cos_to_global"] is None, r
+                assert r["is_outlier"] and abs(r["z_norm"]) > 15, r
+                assert r["z_cos"] is None, r
+            else:
+                assert r["cos_to_global"] is not None, r
+    elif name == "dedup_semantic":
+        for r in rows:
+            assert (r["cent_cos"] is None) == (r["vec_id"] in z), r
+            if r["vec_id"] in z:
+                assert not r["is_dup"], r
+    elif name == "corpus_curation":
+        status = {r["doc_id"]: r["status"] for r in rows}
+        assert all(status[v] != "near_dup" for v in z)
+    elif name == "decontaminate_embedding":
+        for r in rows:
+            if r["vec_id"] in z:
+                assert r["n_bench_hits"] == 0 and not r["contaminated"], r
+                assert r["max_cosine"] is None, r
+                assert r["nearest_bench_id"] is None, r
+            else:
+                assert r["max_cosine"] is not None, r
+    else:
+        # the per-group reports keep every vector in their counts and
+        # average only the defined cosines
+        n = "n_vectors" if name == "embedding_cluster_report" else "n_vecs"
+        assert sum(r[n] for r in rows) == 500
+        assert all(v is not None for r in rows for v in r.values())
+
+
+def test_eval_arm_jobs_carry_the_callers_job_group(spark):
+    """The eval arm threads inherit the caller's job group: running
+    retrieval_rank_eval under a group adds no job without one (Spark
+    job groups are thread-local, so bare pool threads dropped it)."""
+    from forest_open_data_pipelines_spark.runtime import release_persisted
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    emb = load_table(spark, SF_DIR, "embeddings")
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("retrieval-rank-eval-test", "arm job groups")
+    try:
+        similarity.retrieval_rank_eval(emb).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_persisted()
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("retrieval-rank-eval-test")
 
 
 def test_approx_percentile_variants_error_bounds(spark):
@@ -5835,11 +5953,8 @@ def test_bitext_mining_margin_recount(spark):
 
 
 def test_jaccard_method_prefix_is_ppjoin(spark):
-    """method='prefix' makes the entry's own 100x plan selectable in
-    place: identical rows to both the count-verify default and
-    dedup_ngram_ppjoin; an unknown method raises."""
-    import pytest as _pytest
-
+    """The dedup_ngram_jaccard catalog entry runs dedup_ngram_ppjoin:
+    its rows must equal the count-verify dedup_ngram_jaccard's."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_ngram_jaccard,
         dedup_ngram_ppjoin,
@@ -5849,15 +5964,10 @@ def test_jaccard_method_prefix_is_ppjoin(spark):
     docs = load_table(spark, SF_DIR, "documents")
     try:
         count_rows = sorted(map(tuple, dedup_ngram_jaccard(docs).collect()))
-        prefix_rows = sorted(
-            map(tuple, dedup_ngram_jaccard(docs, method="prefix").collect())
-        )
         ppjoin_rows = sorted(map(tuple, dedup_ngram_ppjoin(docs).collect()))
     finally:
         release_persisted()
-    assert prefix_rows == ppjoin_rows == count_rows
-    with _pytest.raises(ValueError, match="method"):
-        dedup_ngram_jaccard(docs, method="bogus")
+    assert ppjoin_rows == count_rows
 
 
 def test_shard_curriculum_reconciles_with_shard_plan(spark):
