@@ -1925,6 +1925,16 @@ def _social_text_normalize_sql() -> str:
     )
 
 
+def _ivf_seed_cte(n_cells: int, name: str = "cent") -> str:
+    """The IVF seed-centroid CTE every IVF twin shares: the first
+    ``n_cells`` non-zero vectors by vec_id as cells keyed by their
+    vec_id (similarity._train_ivf_centroids). Reads ``e(vec_id, emb)``."""
+    return (
+        f"{name} AS (SELECT vec_id AS cell_id, emb AS cent FROM e"
+        f" WHERE list_dot_product(emb, emb) > 0 ORDER BY vec_id LIMIT {n_cells})"
+    )
+
+
 def _ann_ivf_sql(
     n_queries: int = 8,
     k: int = 10,
@@ -1973,7 +1983,7 @@ v{i} AS (SELECT cell_id, list(m ORDER BY pos) AS cent FROM m{i} GROUP BY cell_id
     final = f"cent{kmeans_iters}"
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cent0 AS (SELECT vec_id AS cell_id, emb AS cent FROM e WHERE vec_id < {n_cells}){"," + ",".join(iters) + "," if iters else ","}
+{_ivf_seed_cte(n_cells, "cent0")}{"," + ",".join(iters) + "," if iters else ","}
 assign AS (
   SELECT vec_id, emb, cell_id,
          row_number() OVER (PARTITION BY vec_id
@@ -5484,7 +5494,7 @@ def _ann_topk_ivfpq_residual_sql(
     lloyd, final = _pq_lloyd_iter_ctes("res", PQ_M, PQ_KS, sub, PQ_KMEANS_ITERS)
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cent AS (SELECT vec_id AS cell_id, emb AS cent FROM e WHERE vec_id < {n_cells}),
+{_ivf_seed_cte(n_cells)},
 assign AS (
   SELECT vec_id, emb, cell_id,
          row_number() OVER (PARTITION BY vec_id
@@ -5681,7 +5691,7 @@ def _dedup_semantic_sql(threshold: float = 0.45, n_cells: int = 16) -> str:
 
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cent AS (SELECT vec_id AS cell_id, emb AS cent FROM e WHERE vec_id < {n_cells}),
+{_ivf_seed_cte(n_cells)},
 assign AS (
   SELECT vec_id, emb, cell_id, round({cos("emb", "cent")}, 9) AS ccos,
          row_number() OVER (PARTITION BY vec_id
@@ -5767,7 +5777,7 @@ cnsq AS (
            (x, y) -> x + y) AS nsq
   FROM asgn GROUP BY vec_id
 ),
-cent AS (SELECT vec_id AS cell_id, emb AS cent FROM e WHERE vec_id < {n_cells}),
+{_ivf_seed_cte(n_cells)},
 assign AS (
   SELECT vec_id, emb, cell_id,
          row_number() OVER (PARTITION BY vec_id
@@ -5826,7 +5836,7 @@ def _embedding_cluster_report_sql(n_cells: int = 16) -> str:
 
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cent AS (SELECT vec_id AS cell_id, emb AS cent FROM e WHERE vec_id < {n_cells}),
+{_ivf_seed_cte(n_cells)},
 assign AS (
   SELECT vec_id, cell_id,
          round({cos("emb", "cent")} * 1000000000.0, 0)::BIGINT AS cos_nano,

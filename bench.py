@@ -1,9 +1,15 @@
 """Headline-query benchmark.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+Usage:
+    python bench.py               # every HEADLINE query, the drains, the artifact
+    python bench.py <query> ...   # the named catalog queries only
+
+Runs the queries at $SPARK_GRAFT_SF_DIR (default
+``sources.tables.DEFAULT_SF_DIR``) on local[$SPARK_GRAFT_CPUS] and
+prints ONE JSON line: {"metric": ..., "value": total_sec, "unit":
+"sec", "queries": {name: sec, ...}, "sf": ...}. A named run uses the
+same floor row and reps but skips the streaming drains and writes no
+artifact file (its ``streaming_total_sec`` and ``artifact`` are null).
 
 Each query runs REPS times; the reported per-query number is the MIN
 (steady-state engine cost — the statistic least polluted by GC pauses,
@@ -12,7 +18,9 @@ attributable to a plan change rather than single-run variance.
 
 Timing counts full query execution (plan + shuffle + collect-to-count)
 but not Spark session startup — startup is fixed overhead that
-amortizes to zero on a real cluster run.
+amortizes to zero on a real cluster run. Every rep and drain runs in
+its own ``runtime.query_scope``: its jobs carry the query's name as
+job group, and its blocks are freed, outside the timing, when it ends.
 """
 
 from __future__ import annotations
@@ -26,10 +34,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from forest_open_data_pipelines_spark.plans.catalog import QUERIES
-from forest_open_data_pipelines_spark.runtime import release_persisted
+from forest_open_data_pipelines_spark.runtime import clear_memos, query_scope
 from forest_open_data_pipelines_spark.session import get_spark
+from forest_open_data_pipelines_spark.sources.tables import DEFAULT_SF_DIR
 
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+COLD_INDEX = os.environ.get("SPARK_GRAFT_COLD_INDEX", "") != ""
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -241,8 +251,8 @@ HEADLINE = [
 # the training/seed scans, later reps measure the steady-state
 # encode/probe cost — the production contract where codebooks persist
 # as index metadata. Machine-readable per VERDICT r12 item 7; set
-# SPARK_GRAFT_COLD_INDEX=1 to clear the memos between reps and measure
-# cold train+encode instead.
+# SPARK_GRAFT_COLD_INDEX=1 to clear every memo (runtime.clear_memos)
+# between reps and measure cold reads and train+encode instead.
 STEADY_STATE = [
     "ann_topk_ivf",
     "ann_topk_pq",
@@ -308,35 +318,23 @@ NOTES = {
         "the separate fail-fast action is the cheaper correct shape."
     ),
     "perplexity_buckets": (
-        "r9 VERDICT flagged 1.19s (r8) -> ~3.1s as a real regression; "
-        "round-10 bisect: the UNMODIFIED r8 tree measures 2.35s min "
-        "today at a q1 floor of 0.31s (FASTER than r8's 0.43s floor), "
-        "so the r8 artifact number is not reproducible with the r8 "
-        "code and the delta is session-VM, not a code change. True "
         "cost = one full charlm scoring pass (model train + broadcast "
         "join + per-doc agg, ~10 stages of local[32] scheduling "
         "overhead); charlm_perplexity's own bench row is cheaper only "
         "because count() prunes the scoring join (unique-key left "
-        "join elimination). r10 keeps it one corpus pass at scale: "
+        "join elimination). It stays one corpus pass at scale: "
         "the per-doc scores frame is lazily checkpointed so the "
         "tertile aggregate and the bucket projection share it, and "
         "the model's vocab explode is per-doc array_distinct."
-    ),
-    "q5_region_volume": (
-        "r4 flagged a +10% drift; 5-rep check shows rep-to-rep variance "
-        "of +/-15% on this query (samples 1.37-1.61s steady-state) with "
-        "an unchanged textbook plan (broadcast dims + AQE shuffle "
-        "joins) - the drift is run noise, not a plan change."
     ),
 }
 
 
 def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
-    """§I wall-time rows (VERDICT r11 item 6): drain six
-    representative stateful streaming operators over the events/
-    documents feeds —
-    one micro-batch each (the sf parquet is a single file) through a
-    memory sink with a throwaway checkpoint — timing source-to-drain.
+    """Drain six representative stateful streaming operators over the
+    events/documents feeds, one micro-batch each (the sf parquet is a
+    single file) through a memory sink with a throwaway checkpoint,
+    timing source-to-drain.
     The batch headline rows measure Catalyst plans; these make
     state-store kernel cost drift visible round-over-round. Kept
     OUTSIDE the headline total so cross-round batch ratios stay
@@ -398,20 +396,21 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
                 else "events.parquet"
             )
             tmp = tempfile.mkdtemp(prefix=f"bench_{name}_")
-            start = time.perf_counter()
-            query = (
-                build(stream_events_from_parquet(spark, sf_dir, glob=glob))
-                .writeStream.format("memory")
-                .queryName(f"bench_{name}")
-                .outputMode(mode)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-            out[name] = round(time.perf_counter() - start, 4)
+            with query_scope(spark, name):
+                start = time.perf_counter()
+                query = (
+                    build(stream_events_from_parquet(spark, sf_dir, glob=glob))
+                    .writeStream.format("memory")
+                    .queryName(f"bench_{name}")
+                    .outputMode(mode)
+                    .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                    .start()
+                )
+                try:
+                    query.processAllAvailable()
+                finally:
+                    query.stop()
+                out[name] = round(time.perf_counter() - start, 4)
             spark.catalog.dropTempView(f"bench_{name}")
             shutil.rmtree(tmp, ignore_errors=True)
             print(f"# {name}: {out[name]:.3f}s", file=sys.stderr)
@@ -420,55 +419,51 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def _samples(
+    spark, sf_dir: str, name: str, reps: int, scope: str | None = None
+) -> tuple[list[float], int]:
+    """``reps`` timed ``count()`` runs of catalog entry ``name``, each
+    in its own query scope (named ``scope``, default ``name``); returns
+    the seconds and the row count."""
+    samples: list[float] = []
+    rows = 0
+    for _ in range(reps):
+        if COLD_INDEX:
+            clear_memos()
+        with query_scope(spark, scope or name):
+            start = time.perf_counter()
+            rows = QUERIES[name](spark, sf_dir).count()
+            samples.append(time.perf_counter() - start)
+    return samples, rows
+
+
+def main(names: list[str]) -> None:
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    sf_dir = DEFAULT_SF_DIR
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("forest-pipelines-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM/codegen paths so per-query numbers measure the
-    # engine, not first-call JIT (the driver compares steady-state
-    # throughput with the reference). Three warm passes, not one: the
-    # r13 round-start run showed a single pass leaves the floor
-    # samples still declining (3.9 → 2.4 → 1.6 s) on a cold VM, which
-    # poisons the cross-round deflator the floor row exists for.
-    for _ in range(3):
-        QUERIES["q1_pricing_summary"](spark, sf_dir).count()
+    # engine, not first-call JIT. Three passes: after one, floor samples
+    # on a cold VM were still falling (3.9 → 2.4 → 1.6 s).
+    with query_scope(spark, "warm"):
+        for _ in range(3):
+            QUERIES["q1_pricing_summary"](spark, sf_dir).count()
 
-    # q1 session-floor calibration row (VERDICT r9 item 3): the same
-    # fixed query measured the same way as every headline entry, taken
-    # BEFORE the sweep. Cross-round per-query ratios divide by the
-    # floor ratio first — session VMs have shown 1.2-1.4x wall-clock
-    # drift with zero code diff, and this row deflates it mechanically.
-    floor_samples = []
-    for _ in range(3):
-        f0 = time.perf_counter()
-        QUERIES["q1_pricing_summary"](spark, sf_dir).count()
-        floor_samples.append(time.perf_counter() - f0)
-        release_persisted()
+    # q1 session-floor calibration row, measured like every headline
+    # entry before the sweep. Cross-session per-query ratios divide by
+    # the floor ratio first: VMs drift 1.2-1.4x with no code change.
+    floor_samples, _ = _samples(spark, sf_dir, "q1_pricing_summary", 3, "q1_floor")
     q1_floor = round(min(floor_samples), 4)
     print(f"# q1_floor: {q1_floor:.3f}s {floor_samples}", file=sys.stderr)
 
-    cold_index = os.environ.get("SPARK_GRAFT_COLD_INDEX", "") != ""
-    if cold_index:
-        from forest_open_data_pipelines_spark.operators.similarity import (
-            clear_centroid_cache,
-        )
-
     mins: dict[str, float] = {}
     medians: dict[str, float] = {}
-    for name in HEADLINE:
-        samples: list[float] = []
-        rows = 0
-        for _ in range(REPS):
-            if cold_index:
-                clear_centroid_cache()
-            start = time.perf_counter()
-            rows = QUERIES[name](spark, sf_dir).count()
-            samples.append(time.perf_counter() - start)
-            # drop LSH signature caches so reps (and later queries)
-            # measure cold plans, not leftover cached blocks
-            release_persisted()
+    for name in names or HEADLINE:
+        samples, rows = _samples(spark, sf_dir, name, REPS)
         mins[name] = round(min(samples), 4)
         medians[name] = round(statistics.median(samples), 4)
         print(
@@ -478,48 +473,44 @@ def main() -> None:
         )
 
     total = round(sum(mins.values()), 4)
-    streaming = _streaming_bench(spark, sf_dir)
-    streaming_total = round(sum(streaming.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Full per-query map + caveats go to an artifact FILE; stdout gets
-    # ONE COMPACT line. The driver captures only a short stdout tail,
-    # and 146 queries of per-query timings blew past it (the BENCH_rN
-    # artifact has been "parsed": null since ~r5) — the headline number
-    # must survive truncation, the detail lives in the committed file.
-    artifact = os.environ.get(
-        "SPARK_GRAFT_BENCH_ARTIFACT",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_local_full.json"
-        ),
-    )
-    with open(artifact, "w") as fh:
-        json.dump(
-            {
-                "metric": "headline_queries_total_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": mins,
-                "queries_median": medians,
-                "q1_floor_sec": q1_floor,
-                "streaming": streaming,
-                "streaming_total_sec": streaming_total,
-                "steady_state": STEADY_STATE if not cold_index else [],
-                "cold_index": cold_index,
-                "notes": NOTES,
-                "reps": REPS,
-                "sf": sf_val,
-            },
-            fh,
-            indent=1,
+    streaming_total = artifact = None
+    if not names:
+        streaming = _streaming_bench(spark, sf_dir)
+        streaming_total = round(sum(streaming.values()), 4)
+        # Medians, drains and caveats go to an artifact FILE; stdout
+        # gets one compact line that survives a short tail capture.
+        artifact = os.environ.get(
+            "SPARK_GRAFT_BENCH_ARTIFACT",
+            os.path.join(
+                os.path.dirname(os.path.abspath(__file__)), "BENCH_local_full.json"
+            ),
         )
-        fh.write("\n")
-    # The one stdout line carries the FULL per-query map again
-    # (VERDICT r12 item 4/r13 item 2: the driver's round-over-round
-    # PERF comparison reads parsed["queries"] and came back empty with
-    # the artifact-pointer form). Centisecond rounding + compact
-    # separators keep the 184-entry line ≈4 KB; medians/notes stay in
-    # the artifact file. Printed LAST, after all stderr progress, so
-    # tail capture gets one clean parseable line.
+        with open(artifact, "w") as fh:
+            json.dump(
+                {
+                    "metric": "headline_queries_total_wall_sec",
+                    "value": total,
+                    "unit": "sec",
+                    "queries": mins,
+                    "queries_median": medians,
+                    "q1_floor_sec": q1_floor,
+                    "streaming": streaming,
+                    "streaming_total_sec": streaming_total,
+                    "steady_state": STEADY_STATE if not COLD_INDEX else [],
+                    "cold_index": COLD_INDEX,
+                    "notes": NOTES,
+                    "reps": REPS,
+                    "sf": sf_val,
+                },
+                fh,
+                indent=1,
+            )
+            fh.write("\n")
+    # The stdout line carries the per-query map (cross-round
+    # comparisons read ``queries``); centisecond rounding and compact
+    # separators keep 184 entries near 4 KB. Printed LAST, after all
+    # stderr progress, so a tail capture gets one parseable line.
     sys.stderr.flush()
     print(
         json.dumps(
@@ -543,4 +534,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

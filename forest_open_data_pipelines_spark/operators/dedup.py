@@ -449,8 +449,8 @@ def build_winnowing_index(
     # against hot — so materializing them ran the full fingerprint
     # projection (the per-char md5 transform, the expensive part since
     # the r12 zero-shuffle rewrite) TWICE per index build. One pinned
-    # (doc_id, fp) pass serves both; released by release_persisted()
-    # like every other signature table.
+    # (doc_id, fp) pass serves both; freed with the query scope like
+    # every other signature table.
     fp_base = persist(winnowing_fingerprint_frame(cleaned, k, w))
     n_base = F.broadcast(
         base_docs.select("doc_id").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1166,7 +1166,7 @@ def dedup_semantic(
 
     1. **Cell assignment** — the IVF coarse-quantizer projection from
        ``similarity.train_ivf_centroids`` (seed centroids = first
-       ``n_cells`` vectors, argmax of the 9-dp-rounded cosine, ties to
+       ``n_cells`` non-zero vectors, argmax of the 9-dp-rounded cosine, ties to
        the lowest cell id). A pure in-codegen projection: no join, no
        shuffle between the scan and the assignment. ``cent_cos`` (the
        winning cosine) rides along as the keep-priority signal.
@@ -1493,8 +1493,8 @@ def connected_components(
     ``dedup_clusters`` for the scale argument); each intermediate
     labels table is checkpointed for the pass and freed once the next
     pass's label-mass check has materialized its successor — only the
-    final table stays cached (tracked by ``runtime`` until
-    ``release_persisted``).
+    final table stays cached (tracked by ``runtime`` until the query
+    scope ends).
 
     MEGA-CLUSTER HARDENING (the large-star/small-star concern): every
     member of a viral duplicate cluster carries the SAME label, so the

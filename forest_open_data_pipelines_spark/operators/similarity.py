@@ -20,7 +20,6 @@ every threshold and ranks after every real score, never raises.
 from __future__ import annotations
 
 import hashlib
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
@@ -35,7 +34,7 @@ from forest_open_data_pipelines_spark.functions.columns import (
     norm,
     ratio,
 )
-from forest_open_data_pipelines_spark.runtime import persist
+from forest_open_data_pipelines_spark.runtime import Memo, clear_memos, memo, persist
 from forest_open_data_pipelines_spark.sources.tables import spread
 
 
@@ -263,31 +262,17 @@ IVF_KMEANS_ITERS = 2
 # catalog entry) pay the two training scans once per corpus instead of
 # per invocation. Keyed on the DataFrame's semantic hash — two plans
 # reading the same data hash alike, a different corpus misses.
-_CENTROID_CACHE: dict[tuple[int, int, int], list[tuple[int, list[float]]]] = {}
-
-# Guards every check-then-fill of the three trained-index memos, so
-# concurrent ANN arm threads train a missing entry once. Reentrant:
-# the PQ trainer fills the seed memo while holding it.
-_MEMO_LOCK = threading.RLock()
-
-
-def _memo(cache: dict, key: tuple, train):
-    with _MEMO_LOCK:
-        if key not in cache:
-            cache[key] = train()
-        return cache[key]
+# Filled through ``runtime.memo``, whose one lock makes concurrent ANN
+# arm threads train a missing entry once.
+_CENTROID_CACHE: dict[tuple[int, int, int], list[tuple[int, list[float]]]] = Memo()
 
 
 def clear_centroid_cache() -> int:
     """Drop all cached trained quantizers — IVF centroids AND PQ
     codebooks (tests / corpus swaps); returns how many entries were
-    released."""
-    with _MEMO_LOCK:
-        n = len(_CENTROID_CACHE) + len(_PQ_CB_CACHE) + len(_PQ_SEED_CACHE)
-        _CENTROID_CACHE.clear()
-        _PQ_CB_CACHE.clear()
-        _PQ_SEED_CACHE.clear()
-    return n
+    released. ``runtime.clear_memos()`` drops these and every other
+    memo."""
+    return clear_memos(_CENTROID_CACHE, _PQ_CB_CACHE, _PQ_SEED_CACHE)
 
 
 def _dlit(x: float) -> str:
@@ -310,7 +295,7 @@ def _centroid_literal(centroids: list[tuple[int, list[float]]]):
     ``F.array(F.struct(F.lit(...)))`` columns: the n_cells·dim
     ``F.lit`` calls were ~1 000 py4j round-trips ≈ 0.8–1.0 s of pure
     driver time PER PLAN BUILD at the default geometry (optimization
-    r12, guide §1.2 step 2 — measured with tools/qtime-style timers);
+    r12, guide §1.2 step 2 — measured with bench.py's per-query timer);
     the single ``F.expr`` parse is milliseconds and yields the
     identical literal tree (integer cell ids, exact double arrays via
     ``_dlit``, same field names/order)."""
@@ -366,8 +351,10 @@ def train_ivf_centroids(
     iters: int = IVF_KMEANS_ITERS,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic spherical-k-means centroids for the IVF coarse
-    quantizer: seeds = the first ``n_cells`` vectors, then ``iters``
-    fixed Lloyd passes (cosine assignment, per-dimension mean).
+    quantizer: seeds = the first ``n_cells`` non-zero vectors by
+    ``vec_id`` (a zero seed would be a cell no vector can join), then
+    ``iters`` fixed Lloyd passes (cosine assignment, per-dimension
+    mean).
 
     Oracle-reproducible by construction: the iteration count is fixed,
     assignment ties break to the lowest cell id, and every per-dimension
@@ -387,7 +374,7 @@ def train_ivf_centroids(
     ``_CENTROID_CACHE`` — train once, reuse as index metadata.
     """
     key = (embeddings.semanticHash(), n_cells, iters)
-    return _memo(
+    return memo(
         _CENTROID_CACHE, key, lambda: _train_ivf_centroids(embeddings, n_cells, iters)
     )
 
@@ -395,20 +382,21 @@ def train_ivf_centroids(
 def _train_ivf_centroids(
     embeddings: DataFrame, n_cells: int, iters: int
 ) -> list[tuple[int, list[float]]]:
-    seed_rows = sorted(
-        embeddings.where(F.col("vec_id") < n_cells)
+    # A zero seed would be a dead cell: every cosine to it is NULL, so
+    # it never wins an assignment. Seed from non-zero vectors only.
+    seed_rows = (
+        embeddings.where(norm(F.col("embedding")) > 0)
+        .orderBy("vec_id")
+        .limit(n_cells)
         .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+        .collect()
     )
     if not seed_rows:
-        # A non-contiguous vec_id space would otherwise degenerate the
-        # centroid literal, NULL every cell assignment, and silently
-        # return zero rows.
+        # An empty centroid literal would NULL every cell assignment
+        # and silently return zero rows.
         raise ValueError(
-            f"ann_topk_ivf: no rows with vec_id < n_cells={n_cells}; "
-            "seed centroids require vec_ids starting at 0 (got none). "
-            "Re-key the table or train centroids explicitly."
+            f"ann_topk_ivf: no non-zero embedding to seed the "
+            f"n_cells={n_cells} centroids from"
         )
     centroids = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in seed_rows]
     for _ in range(iters):
@@ -456,7 +444,7 @@ def ann_topk_ivf(
     quantizer; score queries only against vectors in their ``n_probe``
     nearest cells.
 
-    The default quantizer is the first ``n_cells`` seed vectors;
+    The default quantizer is the first ``n_cells`` non-zero vectors;
     ``kmeans_iters > 0`` runs that many deterministic Lloyd passes
     first (``train_ivf_centroids`` — the catalog exposes this as
     ``ann_topk_ivf_trained``). Seeds stay the default because training
@@ -745,7 +733,7 @@ PQ_KS = 64        # codewords per subspace (6-bit codes)
 #: retrieval_rank_eval each re-collected it per invocation
 #: (optimization r12 — the _CENTROID_CACHE pattern applied to the
 #: seed path; cleared by clear_centroid_cache with the others).
-_PQ_SEED_CACHE: dict[tuple[int, int, int, int], list[list[list[float]]]] = {}
+_PQ_SEED_CACHE: dict[tuple[int, int, int, int], list[list[list[float]]]] = Memo()
 
 
 def _pq_codebook(
@@ -758,7 +746,7 @@ def _pq_codebook(
     collect: ks rows, once per corpus (memoized per corpus like the
     IVF centroids)."""
     key = (embeddings.semanticHash(), m, ks, dim)
-    return _memo(_PQ_SEED_CACHE, key, lambda: _seed_pq_codebook(embeddings, m, ks, dim))
+    return memo(_PQ_SEED_CACHE, key, lambda: _seed_pq_codebook(embeddings, m, ks, dim))
 
 
 def _seed_pq_codebook(
@@ -793,7 +781,7 @@ PQ_KMEANS_ITERS = 3
 #: the wrong sub-vector length.
 _PQ_CB_CACHE: dict[
     tuple[int, int, int, int, int], list[list[list[float]]]
-] = {}
+] = Memo()
 
 
 def train_pq_codebook(
@@ -824,7 +812,7 @@ def train_pq_codebook(
     collect. Training cost stays out of the bench via the memo cache.
     """
     key = (embeddings.semanticHash(), m, ks, dim, iters)
-    return _memo(
+    return memo(
         _PQ_CB_CACHE, key, lambda: _train_pq_codebook(embeddings, m, ks, dim, iters)
     )
 
@@ -1305,7 +1293,8 @@ def _eval_arms(
     (optimization r12; without it the Arrow encode pass runs once per
     arm). Their threads race to fill it; BlockManager's per-partition
     cache locking makes one compute and the other wait. Everything
-    persisted here is freed by ``runtime.release_persisted()``.
+    persisted here is freed when the caller's ``runtime.query_scope``
+    ends: the arm threads inherit its job group.
     """
     truth = persist(
         ann_topk_bruteforce(embeddings, n_queries, k).select("query_id", "cand_id")

@@ -746,8 +746,8 @@ def nation_month_matrix_augmented(
     enrichment joins / events aggregation once per reference (plan
     audit: 42 parquet scans → 8). Both frames are post-aggregation
     bounded (≤ |nation|·|month| and ≤ |nation| rows), so caching them
-    is metadata-sized at any fact scale; lifecycle via
-    ``runtime.release_persisted`` like the LSH signature tables.
+    is metadata-sized at any fact scale; freed when the caller's
+    ``runtime.query_scope`` ends, like the LSH signature tables.
     """
     return augment_with_mensal(
         persist(nation_month_matrix(enriched)),

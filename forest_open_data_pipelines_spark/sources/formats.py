@@ -142,7 +142,7 @@ def _quarantine_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     # persist() is that materialization; at 100 TB land the parsed
     # frame to parquet once and split from there (same two predicates).
     # Callers only receive the derived good/bad children, so the parent
-    # is tracked by runtime and freed by release_persisted().
+    # is tracked by runtime and freed when the query scope ends.
     parsed = persist(parsed)
     good = parsed.where(corrupt.isNull()).drop("_corrupt_record")
     bad = parsed.where(corrupt.isNotNull()).select(

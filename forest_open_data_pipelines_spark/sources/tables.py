@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from forest_open_data_pipelines_spark.runtime import Memo, clear_memos
+
 TABLES = (
     "region",
     "nation",
@@ -54,10 +56,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # hundreds of calls of pure fixed cost. The memo hands back the same
     # immutable plan object; every action still scans the parquet files
     # (no data or results are cached). Keyed on the session object (a
-    # dict stored ON the session, so lifetime tracks it — a newSession()
-    # twin resolves its own entry) plus the session time zone, because
-    # the events NTZ retag below bakes the zone into the plan. The
-    # source files are never rewritten mid-process (the
+    # ``Memo`` stored ON the session, so lifetime tracks it — a
+    # newSession() twin resolves its own entry) plus the session time
+    # zone, because the events NTZ retag below bakes the zone into the
+    # plan. The source files are never rewritten mid-process (the
     # _SPREAD_PROBE_CACHE contract).
     # events.parquet stores ts as INT64 TIMESTAMP(NANOS), which vanilla
     # Spark rejects (PARQUET_TYPE_ILLEGAL). The legacy conf is
@@ -74,7 +76,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except AnalysisException:
         pass  # conf marked non-modifiable on this deployment
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    cache = spark.__dict__.setdefault("_fodp_table_cache", {})
+    cache = spark.__dict__.get("_fodp_table_cache")
+    if cache is None:
+        cache = spark.__dict__["_fodp_table_cache"] = Memo()
     key = (_memo_dir(sf_dir), name, tz)
     hit = cache.get(key)
     if hit is not None:
@@ -114,11 +118,7 @@ def _memo_dir(sf_dir: str) -> str:
 def clear_table_cache(spark: SparkSession) -> int:
     """Drop the session's load_table memo (for harnesses that rewrite
     the parquet directories mid-process); returns entries released."""
-    cache = spark.__dict__.get("_fodp_table_cache")
-    n = len(cache) if cache else 0
-    if cache:
-        cache.clear()
-    return n
+    return clear_memos(spark.__dict__.get("_fodp_table_cache", {}))
 
 
 def spread(df: DataFrame, max_target: int | None = None) -> DataFrame:
@@ -171,8 +171,8 @@ def spread(df: DataFrame, max_target: int | None = None) -> DataFrame:
 #: spread()'s memoized per-source partition probe (file set → scan
 #: split count). Process-lifetime is correct: a parquet path's split
 #: count only changes if the files are rewritten, which the test/bench
-#: processes never do mid-run.
-_SPREAD_PROBE_CACHE: dict[tuple[str, ...], int] = {}
+#: processes never do mid-run (``runtime.clear_memos`` empties it).
+_SPREAD_PROBE_CACHE: dict[tuple[str, ...], int] = Memo()
 
 
 def ntz_as_utc_instant(spark: SparkSession, ntz: F.Column) -> F.Column:

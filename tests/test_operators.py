@@ -716,12 +716,14 @@ def test_dedup_semantic_matches_numpy_twin(spark):
 
 
 def test_ann_topk_ivf_rejects_missing_seed_centroids(spark):
+    """Seeds are the first non-zero vectors; with none there is no
+    centroid, and the build raises instead of returning zero rows."""
     from forest_open_data_pipelines_spark.operators.similarity import ann_topk_ivf
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    shifted = emb.withColumn("vec_id", F.col("vec_id") + 1_000_000)
-    with pytest.raises(ValueError, match="no rows with vec_id"):
-        ann_topk_ivf(shifted)
+    zeros = emb.withColumn("embedding", F.transform("embedding", lambda x: x * 0))
+    with pytest.raises(ValueError, match="no non-zero embedding"):
+        ann_topk_ivf(zeros)
 
 
 def test_dedup_release_persisted_unpersists_signature_tables(spark):
@@ -803,6 +805,91 @@ def test_release_persisted_frees_every_block(spark, monkeypatch, case):
     finally:
         release_persisted()
     assert _persistent_rdds(spark) - before == set()
+
+
+def test_query_scope_frees_its_blocks_and_restores_job_group_on_raise(spark):
+    """A query that raises after persisting and checkpointing leaves
+    the block registry and the thread's job group and description as
+    they were before its scope."""
+    from forest_open_data_pipelines_spark.runtime import query_scope
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    prior = [sc.getLocalProperty(k) for k in props]
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="mid-query"):
+        with query_scope(spark, "raises-mid-query"):
+            assert [sc.getLocalProperty(k) for k in props] == ["raises-mid-query"] * 2
+            _chain_clusters(spark)
+            assert _persistent_rdds(spark) - before
+            raise RuntimeError("mid-query")
+    assert _persistent_rdds(spark) == before
+    assert [sc.getLocalProperty(k) for k in props] == prior
+
+
+def test_query_scope_exit_keeps_another_threads_frames(spark):
+    """Two queries share the session on two threads: the one that ends
+    first frees only its own checkpoint, so the other's stays readable
+    (a global release fails the read with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    import threading
+
+    from forest_open_data_pipelines_spark.runtime import checkpoint, query_scope
+
+    errors = []
+
+    def other_query():
+        try:
+            with query_scope(spark, "scope-b"):
+                checkpoint(spark.range(10), eager=True).count()
+        except Exception as e:  # noqa: BLE001 - asserted on the test thread
+            errors.append(e)
+
+    with query_scope(spark, "scope-a"):
+        mine = checkpoint(spark.range(100).selectExpr("id * id AS sq"), eager=True)
+        before = _persistent_rdds(spark)
+        t = threading.Thread(target=other_query)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive() and not errors, errors
+        assert _persistent_rdds(spark) == before
+        assert mine.agg(F.sum("sq")).first()[0] == sum(i * i for i in range(100))
+
+
+def test_clear_memos_empties_every_memo(spark):
+    """``clear_memos`` empties the three trained-index memos, the
+    session's ``load_table`` memo and ``spread``'s probe memo; the two
+    older clears keep their counts and reach."""
+    from forest_open_data_pipelines_spark.runtime import clear_memos
+    from forest_open_data_pipelines_spark.sources import tables
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    table_memo = spark.__dict__["_fodp_table_cache"]
+    probe_memo = tables._SPREAD_PROBE_CACHE
+    ann = (
+        similarity._CENTROID_CACHE,
+        similarity._PQ_SEED_CACHE,
+        similarity._PQ_CB_CACHE,
+    )
+
+    def fill():
+        load_table(spark, SF_DIR, "embeddings")
+        similarity.train_ivf_centroids(emb, 16, 0)
+        similarity.train_pq_codebook(emb, iters=0)  # fills the seed memo too
+        tables.spread(emb)
+        assert all(ann) and table_memo and probe_memo
+
+    fill()
+    clear_memos()
+    assert not any((*ann, table_memo, probe_memo))
+    fill()
+    n_ann = sum(map(len, ann))
+    n_tables, n_probes = len(table_memo), len(probe_memo)
+    assert similarity.clear_centroid_cache() == n_ann
+    assert not any(ann)
+    assert (len(table_memo), len(probe_memo)) == (n_tables, n_probes)
+    assert tables.clear_table_cache(spark) == n_tables
+    assert not table_memo and len(probe_memo) == n_probes
 
 
 def test_memoized_trainers_train_once_under_concurrent_arms(spark, monkeypatch):
@@ -1473,18 +1560,14 @@ def test_ngram_jaccard_hot_shingle_cap_preserves_recall(spark, sf_dir):
     the uncapped run, max_df=1.0)."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_ngram_jaccard,
-        release_persisted,
     )
     from forest_open_data_pipelines_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    try:
-        capped = [tuple(r) for r in dedup_ngram_jaccard(docs).collect()]
-        uncapped = [
-            tuple(r) for r in dedup_ngram_jaccard(docs, max_df=1.0).collect()
-        ]
-    finally:
-        release_persisted()
+    capped = [tuple(r) for r in dedup_ngram_jaccard(docs).collect()]
+    uncapped = [
+        tuple(r) for r in dedup_ngram_jaccard(docs, max_df=1.0).collect()
+    ]
     assert capped == uncapped
     assert len(capped) > 0
 
@@ -1843,19 +1926,15 @@ def test_corpus_curation_lsh_default_no_cross_join(spark):
     cartesian in its plan — the judge-flagged scale killer. The exact
     baseline keeps its (audited) inequality join."""
     from forest_open_data_pipelines_spark.operators import curation
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        plan = (
-            curation.corpus_curation(docs, emb)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-    finally:
-        release_persisted()
+    plan = (
+        curation.corpus_curation(docs, emb)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_corpus_curation_lsh_subset_of_exact(spark):
@@ -1864,23 +1943,19 @@ def test_corpus_curation_lsh_subset_of_exact(spark):
     lsh run drops must also be dropped by exact, and all other statuses
     must be IDENTICAL (quality/lang/exact_dup don't touch embeddings)."""
     from forest_open_data_pipelines_spark.operators import curation
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        lsh = {
-            r.doc_id: r.status
-            for r in curation.corpus_curation(docs, emb).collect()
-        }
-        exact = {
-            r.doc_id: r.status
-            for r in curation.corpus_curation(
-                docs, emb, near_dup_strategy="exact"
-            ).collect()
-        }
-    finally:
-        release_persisted()
+    lsh = {
+        r.doc_id: r.status
+        for r in curation.corpus_curation(docs, emb).collect()
+    }
+    exact = {
+        r.doc_id: r.status
+        for r in curation.corpus_curation(
+            docs, emb, near_dup_strategy="exact"
+        ).collect()
+    }
     lsh_near = {d for d, s in lsh.items() if s == "near_dup"}
     exact_near = {d for d, s in exact.items() if s == "near_dup"}
     assert lsh_near <= exact_near
@@ -1947,7 +2022,6 @@ def test_connected_components_hot_label_broadcast_path(spark):
     change."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         connected_components,
-        release_persisted,
     )
 
     n = 400
@@ -1959,17 +2033,14 @@ def test_connected_components_hot_label_broadcast_path(spark):
         + [(i, i + 1) for i in range(300, 400, 2)],
         ["doc_a", "doc_b"],
     )
-    try:
-        hot = {
-            r["doc_id"]: r["label"]
-            for r in connected_components(nodes, pairs, hot_label_min=10).collect()
-        }
-        cold = {
-            r["doc_id"]: r["label"]
-            for r in connected_components(nodes, pairs).collect()
-        }
-    finally:
-        release_persisted()
+    hot = {
+        r["doc_id"]: r["label"]
+        for r in connected_components(nodes, pairs, hot_label_min=10).collect()
+    }
+    cold = {
+        r["doc_id"]: r["label"]
+        for r in connected_components(nodes, pairs).collect()
+    }
     assert hot == cold
     assert all(hot[i] == 0 for i in range(300))
     assert all(hot[i] == i - (i % 2 == 1) for i in range(300, 400))
@@ -2166,9 +2237,6 @@ def test_retrieval_rank_eval_matches_direct_recomputation(spark):
     three (definition sanity)."""
     import math
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.similarity import (
         RETRIEVAL_EVAL_K,
         RETRIEVAL_EVAL_QUERIES,
@@ -2205,31 +2273,28 @@ def test_retrieval_rank_eval_matches_direct_recomputation(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     nq, k = RETRIEVAL_EVAL_QUERIES, RETRIEVAL_EVAL_K
-    try:
-        report = {r["method"]: r for r in retrieval_rank_eval(emb).collect()}
-        bf = ann_topk_bruteforce(emb).collect()
-        truth = {(r["query_id"], r["cand_id"]) for r in bf}
-        # definition sanity: truth scored against itself is perfect
-        assert metrics(bf, truth, nq, k) == (nq, 1.0, 1.0, 1.0)
-        variants = {
-            "ivf": ann_topk_ivf,
-            "ivfpq": ann_topk_ivfpq,
-            "lsh": ann_topk_lsh,
-            "pq": ann_topk_pq,
-            "sq8": ann_topk_sq8,
-        }
-        assert set(report) == set(variants)
-        for name, fn in variants.items():
-            got = metrics(fn(emb).collect(), truth, nq, k)
-            row = report[name]
-            assert (
-                row["n_hit_queries"], row["mrr"], row["ndcg_at_k"],
-                row["map_at_k"],
-            ) == got, name
-            for col in ("mrr", "ndcg_at_k", "map_at_k"):
-                assert 0.0 <= row[col] <= 1.0, (name, col)
-    finally:
-        release_persisted()
+    report = {r["method"]: r for r in retrieval_rank_eval(emb).collect()}
+    bf = ann_topk_bruteforce(emb).collect()
+    truth = {(r["query_id"], r["cand_id"]) for r in bf}
+    # definition sanity: truth scored against itself is perfect
+    assert metrics(bf, truth, nq, k) == (nq, 1.0, 1.0, 1.0)
+    variants = {
+        "ivf": ann_topk_ivf,
+        "ivfpq": ann_topk_ivfpq,
+        "lsh": ann_topk_lsh,
+        "pq": ann_topk_pq,
+        "sq8": ann_topk_sq8,
+    }
+    assert set(report) == set(variants)
+    for name, fn in variants.items():
+        got = metrics(fn(emb).collect(), truth, nq, k)
+        row = report[name]
+        assert (
+            row["n_hit_queries"], row["mrr"], row["ndcg_at_k"],
+            row["map_at_k"],
+        ) == got, name
+        for col in ("mrr", "ndcg_at_k", "map_at_k"):
+            assert 0.0 <= row[col] <= 1.0, (name, col)
 
 
 def test_ann_method_eval_matches_direct_recomputation(spark):
@@ -3476,25 +3541,21 @@ def test_canonical_by_quality_keeps_best_not_first(spark):
     highest-quality member even when it has the larger doc_id."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_canonical_by_quality,
-        release_persisted,
     )
 
     base = " ".join(f"w{i}" for i in range(50))
     # doc 1: one token carries punctuation noise -> only 3 trigrams
     # differ (Jaccard ~0.88, over threshold) but quality drops
     noisy = base.replace("w4 ", "!!!w4??? ")  # exactly one token changed
-    try:
-        docs = _docs(
-            spark,
-            [
-                (1, noisy, "en", "s", 0),
-                (2, base, "en", "s", 0),
-                (3, "unrelated singleton doc", "en", "s", 0),
-            ],
-        )
-        out = {r["doc_id"]: r for r in dedup_canonical_by_quality(docs).collect()}
-    finally:
-        release_persisted()
+    docs = _docs(
+        spark,
+        [
+            (1, noisy, "en", "s", 0),
+            (2, base, "en", "s", 0),
+            (3, "unrelated singleton doc", "en", "s", 0),
+        ],
+    )
+    out = {r["doc_id"]: r for r in dedup_canonical_by_quality(docs).collect()}
     assert out[1]["cluster_id"] == out[2]["cluster_id"] == 1
     assert out[2]["is_kept"] and not out[1]["is_kept"]   # best, not min-id
     assert out[3]["is_kept"] and out[3]["cluster_size"] == 1
@@ -3534,29 +3595,25 @@ def test_edit_distance_pairs_exact_semantics(spark):
     over-threshold pair; verified values come from the bounded DP."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         edit_distance_pairs,
-        release_persisted,
     )
 
     base = "abcdefghij" * 12                    # 120 chars
     sub3 = "XYZ" + base[3:]                     # distance 3
     ins5 = base[:50] + "12345" + base[50:]      # distance 5
     far = "q" * 120                             # distance >> 20
-    try:
-        docs = _docs(
-            spark,
-            [
-                (1, base, "en", "s", 0),
-                (2, sub3, "en", "s", 0),
-                (3, ins5, "en", "s", 0),
-                (4, far, "en", "s", 0),
-            ],
-        )
-        got = {
-            (r["doc_a"], r["doc_b"]): r["edit_distance"]
-            for r in edit_distance_pairs(docs).collect()
-        }
-    finally:
-        release_persisted()
+    docs = _docs(
+        spark,
+        [
+            (1, base, "en", "s", 0),
+            (2, sub3, "en", "s", 0),
+            (3, ins5, "en", "s", 0),
+            (4, far, "en", "s", 0),
+        ],
+    )
+    got = {
+        (r["doc_a"], r["doc_b"]): r["edit_distance"]
+        for r in edit_distance_pairs(docs).collect()
+    }
     assert got[(1, 2)] == 3
     assert got[(1, 3)] == 5
     assert got[(2, 3)] == 8                     # both edits stack
@@ -4291,7 +4348,6 @@ def test_threshold_sweep_emits_zero_pair_cutoffs(spark):
     from forest_open_data_pipelines_spark.operators.dedup import (
         SWEEP_THRESHOLDS,
         dedup_threshold_sweep,
-        release_persisted,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -4303,10 +4359,7 @@ def test_threshold_sweep_emits_zero_pair_cutoffs(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    try:
-        rows = {r.threshold: r for r in dedup_threshold_sweep(docs).collect()}
-    finally:
-        release_persisted()
+    rows = {r.threshold: r for r in dedup_threshold_sweep(docs).collect()}
     assert set(rows) == set(SWEEP_THRESHOLDS)
     for t, r in rows.items():
         if r.n_pairs == 0:
@@ -4409,7 +4462,6 @@ def test_edit_distance_pairs_short_doc_guard(spark):
 
     from forest_open_data_pipelines_spark.operators.dedup import (
         edit_distance_pairs,
-        release_persisted,
     )
 
     docs = _docs(
@@ -4417,16 +4469,13 @@ def test_edit_distance_pairs_short_doc_guard(spark):
         [(i, f"tiny doc {i}", "en", "s", 10) for i in range(6)]
         + [(100, " ".join(f"w{j}" for j in range(80)), "en", "s", 0)],
     )
-    try:
-        with _pytest.raises(ValueError, match="max_short_docs"):
-            edit_distance_pairs(docs, max_short_docs=3).count()
-        # under the bound the guard is silent and results are intact
-        assert (
-            edit_distance_pairs(docs, max_short_docs=1000).count()
-            == edit_distance_pairs(docs).count()
-        )
-    finally:
-        release_persisted()
+    with _pytest.raises(ValueError, match="max_short_docs"):
+        edit_distance_pairs(docs, max_short_docs=3).count()
+    # under the bound the guard is silent and results are intact
+    assert (
+        edit_distance_pairs(docs, max_short_docs=1000).count()
+        == edit_distance_pairs(docs).count()
+    )
 
 
 def test_dedup_winnowing_pairs_and_detection_floor(spark):
@@ -4437,7 +4486,6 @@ def test_dedup_winnowing_pairs_and_detection_floor(spark):
     unfiltered thresholds."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_winnowing,
-        release_persisted,
     )
 
     d1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo"
@@ -4449,17 +4497,14 @@ def test_dedup_winnowing_pairs_and_detection_floor(spark):
         [(1, d1, "en", "s", 0), (2, d2, "en", "s", 0),
          (3, d3, "en", "s", 0), (4, d4, "en", "s", 0)],
     )
-    try:
-        strict = {(r.doc_a, r.doc_b) for r in dedup_winnowing(docs).collect()}
-        assert (1, 2) in strict
-        assert not any(3 in p for p in strict)
-        loose = {
-            (r.doc_a, r.doc_b)
-            for r in dedup_winnowing(docs, tau_micro=0, min_shared=1).collect()
-        }
-        assert (1, 4) in loose  # the >= w+k-1 verbatim-run floor
-    finally:
-        release_persisted()
+    strict = {(r.doc_a, r.doc_b) for r in dedup_winnowing(docs).collect()}
+    assert (1, 2) in strict
+    assert not any(3 in p for p in strict)
+    loose = {
+        (r.doc_a, r.doc_b)
+        for r in dedup_winnowing(docs, tau_micro=0, min_shared=1).collect()
+    }
+    assert (1, 4) in loose  # the >= w+k-1 verbatim-run floor
 
 
 def test_event_transitions_bigram_counts_and_micro_probs(spark):
@@ -4498,7 +4543,6 @@ def test_winnowing_incremental_classifies_against_base(spark):
     with the right best_base_id; a genuinely new doc stays 'new'; and
     every new doc gets exactly one row."""
     from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
         winnowing_incremental,
     )
 
@@ -4512,10 +4556,7 @@ def test_winnowing_incremental_classifies_against_base(spark):
             (2, "mike november oscar lima xray echoes of nothing", "en", "s", 0),
         ],
     )
-    try:
-        rows = {r.doc_id: r for r in winnowing_incremental(new, base).collect()}
-    finally:
-        release_persisted()
+    rows = {r.doc_id: r for r in winnowing_incremental(new, base).collect()}
     assert set(rows) == {1, 2}
     assert rows[1].status == "dup" and rows[1].best_base_id == 10
     assert rows[1].containment_micro >= 700000
@@ -5072,15 +5113,11 @@ def test_vector_entries_score_zero_vectors_null(
     ranks after every real score and never names a nearest vector. The
     output equals the DuckDB oracle's on the same input."""
     import __spark_entry__ as entry_mod
-    from forest_open_data_pipelines_spark.runtime import release_persisted
     from tools.frame_compare import pandas_signature
 
     z = set(ZERO_VEC_IDS)
     df = entry_mod.queries()[name](spark, zero_vec_dir)
-    try:
-        collected = df.collect()
-    finally:
-        release_persisted()
+    collected = df.collect()
     got = spark.createDataFrame(collected, df.schema).toPandas()
     want = zero_vec_oracle.execute(entry_mod.oracle_sql()[name]).df()
     assert pandas_signature(got) == pandas_signature(want)
@@ -5140,6 +5177,9 @@ def test_vector_entries_score_zero_vectors_null(
         # average only the defined cosines
         n = "n_vectors" if name == "embedding_cluster_report" else "n_vecs"
         assert sum(r[n] for r in rows) == 500
+        if name == "embedding_cluster_report":
+            # seeds skip the zero vectors, so no cell is dead
+            assert len(rows) == 16
         assert all(v is not None for r in rows for v in r.values())
 
 
@@ -5147,7 +5187,7 @@ def test_eval_arm_jobs_carry_the_callers_job_group(spark):
     """The eval arm threads inherit the caller's job group: running
     retrieval_rank_eval under a group adds no job without one (Spark
     job groups are thread-local, so bare pool threads dropped it)."""
-    from forest_open_data_pipelines_spark.runtime import release_persisted
+    from forest_open_data_pipelines_spark.runtime import query_scope
 
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
@@ -5155,13 +5195,8 @@ def test_eval_arm_jobs_carry_the_callers_job_group(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     bus.waitUntilEmpty()
     before = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup("retrieval-rank-eval-test", "arm job groups")
-    try:
+    with query_scope(spark, "retrieval-rank-eval-test"):
         similarity.retrieval_rank_eval(emb).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        release_persisted()
     bus.waitUntilEmpty()
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
     assert tracker.getJobIdsForGroup("retrieval-rank-eval-test")
@@ -5505,15 +5540,11 @@ def test_cluster_size_histogram_reconciles_with_clusters(spark):
     from forest_open_data_pipelines_spark.operators.dedup import (
         cluster_size_histogram,
         dedup_clusters,
-        release_persisted,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
-    try:
-        rows = cluster_size_histogram(docs).collect()
-        labels = dedup_clusters(docs).collect()
-    finally:
-        release_persisted()
+    rows = cluster_size_histogram(docs).collect()
+    labels = dedup_clusters(docs).collect()
     sizes: dict = {}
     for r in labels:
         if r["is_canonical"]:
@@ -5539,15 +5570,9 @@ def test_embedding_drift_report_numpy_recount(spark):
     from forest_open_data_pipelines_spark.operators.similarity import (
         embedding_drift_report,
     )
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        rows = {r["label"]: r for r in embedding_drift_report(emb).collect()}
-    finally:
-        release_persisted()
+    rows = {r["label"]: r for r in embedding_drift_report(emb).collect()}
     data = emb.select("label", "embedding").collect()
     vecs = np.array([r["embedding"] for r in data], dtype=np.float64)
     labels = np.array([r["label"] for r in data])
@@ -5590,9 +5615,6 @@ def test_bm25_topk_python_recount(spark):
     are dense from 1."""
     import math
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.textops import (
         BM25_B,
         BM25_K1,
@@ -5603,10 +5625,7 @@ def test_bm25_topk_python_recount(spark):
     )
 
     docs = load_table(spark, SF_DIR, "documents")
-    try:
-        rows = bm25_topk(docs).collect()
-    finally:
-        release_persisted()
+    rows = bm25_topk(docs).collect()
     toks = {
         r["doc_id"]: [
             t for t in r["t"].lower().split(" ") if t
@@ -5709,9 +5728,6 @@ def test_hybrid_rrf_topk_fusion_recount(spark):
     (sparse_rank, dense_rank) pair matches bm25_topk /
     ann_topk_bruteforce, rrf_micro is the sum of the half-up micro
     reciprocals, and the top-k ordering is (rrf desc, doc_id)."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.similarity import (
         HYBRID_QUERY_ANCHORS,
         RRF_K,
@@ -5722,20 +5738,17 @@ def test_hybrid_rrf_topk_fusion_recount(spark):
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        rows = hybrid_rrf_topk(docs, emb).collect()
-        sparse = {
-            (r["query_id"], r["doc_id"]): r["rank"]
-            for r in bm25_topk(docs).collect()
-        }
-        anchor_of = dict((v, q) for q, v in HYBRID_QUERY_ANCHORS)
-        dense = {
-            (anchor_of[r["query_id"]], r["cand_id"]): r["rank"]
-            for r in ann_topk_bruteforce(emb).collect()
-            if r["query_id"] in anchor_of
-        }
-    finally:
-        release_persisted()
+    rows = hybrid_rrf_topk(docs, emb).collect()
+    sparse = {
+        (r["query_id"], r["doc_id"]): r["rank"]
+        for r in bm25_topk(docs).collect()
+    }
+    anchor_of = dict((v, q) for q, v in HYBRID_QUERY_ANCHORS)
+    dense = {
+        (anchor_of[r["query_id"]], r["cand_id"]): r["rank"]
+        for r in ann_topk_bruteforce(emb).collect()
+        if r["query_id"] in anchor_of
+    }
 
     def md(a: int, b: int) -> int:
         return a * 1_000_000 // b + (1 if (a * 1_000_000 % b) * 2 >= b else 0)
@@ -5779,18 +5792,14 @@ def test_dataset_card_reconciles_with_components(spark):
     )
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_exact,
-        release_persisted,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
-    try:
-        card = dataset_card(docs).collect()
-        assert len(card) == 1
-        card = card[0]
-        m = curation_gate_matrix(docs).collect()
-        n_fp = dedup_exact(docs).count()
-    finally:
-        release_persisted()
+    card = dataset_card(docs).collect()
+    assert len(card) == 1
+    card = card[0]
+    m = curation_gate_matrix(docs).collect()
+    n_fp = dedup_exact(docs).count()
 
     def md(a: int, b: int) -> int:
         return a * 1_000_000 // b + (1 if (a * 1_000_000 % b) * 2 >= b else 0)
@@ -5861,9 +5870,6 @@ def test_bitext_mining_margin_recount(spark):
     unique src_ids, unique tgt_ids, correct language slices, margins
     above threshold — and cosine/margin values reconcile with a Python
     recount of the kNN-margin over the SAME banded candidate pairs."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.similarity import (
         ANN_LSH_BANDS,
         ANN_LSH_PLANES,
@@ -5875,41 +5881,38 @@ def test_bitext_mining_margin_recount(spark):
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        rows = bitext_mining(docs, emb).collect()
-        langs = {
-            r["doc_id"]: r["lang"]
-            for r in docs.select("doc_id", "lang").collect()
-        }
-        tagged = emb.join(
-            docs.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id"
-        )
-        sb = banded_signatures(
-            tagged.where(F.col("lang") == "en").select(
-                F.col("vec_id").alias("src_id"),
-                F.col("embedding").alias("s_emb"),
-            ),
-            "src_id", "s_emb", ANN_LSH_PLANES, ANN_LSH_BANDS,
-            carry_embedding=True,
-        )
-        tb = banded_signatures(
-            tagged.where(F.col("lang") == "es").select(
-                F.col("vec_id").alias("tgt_id"),
-                F.col("embedding").alias("t_emb"),
-            ),
-            "tgt_id", "t_emb", ANN_LSH_PLANES, ANN_LSH_BANDS,
-            carry_embedding=True,
-        )
-        import numpy as np
+    rows = bitext_mining(docs, emb).collect()
+    langs = {
+        r["doc_id"]: r["lang"]
+        for r in docs.select("doc_id", "lang").collect()
+    }
+    tagged = emb.join(
+        docs.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id"
+    )
+    sb = banded_signatures(
+        tagged.where(F.col("lang") == "en").select(
+            F.col("vec_id").alias("src_id"),
+            F.col("embedding").alias("s_emb"),
+        ),
+        "src_id", "s_emb", ANN_LSH_PLANES, ANN_LSH_BANDS,
+        carry_embedding=True,
+    )
+    tb = banded_signatures(
+        tagged.where(F.col("lang") == "es").select(
+            F.col("vec_id").alias("tgt_id"),
+            F.col("embedding").alias("t_emb"),
+        ),
+        "tgt_id", "t_emb", ANN_LSH_PLANES, ANN_LSH_BANDS,
+        carry_embedding=True,
+    )
+    import numpy as np
 
-        cand = (
-            sb.join(tb, ["band", "key"])
-            .select("src_id", "tgt_id", "s_emb", "t_emb")
-            .dropDuplicates(["src_id", "tgt_id"])
-            .collect()
-        )
-    finally:
-        release_persisted()
+    cand = (
+        sb.join(tb, ["band", "key"])
+        .select("src_id", "tgt_id", "s_emb", "t_emb")
+        .dropDuplicates(["src_id", "tgt_id"])
+        .collect()
+    )
     assert rows, "no bitext pairs mined"
     srcs = [r["src_id"] for r in rows]
     tgts = [r["tgt_id"] for r in rows]
@@ -5958,15 +5961,11 @@ def test_jaccard_method_prefix_is_ppjoin(spark):
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_ngram_jaccard,
         dedup_ngram_ppjoin,
-        release_persisted,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
-    try:
-        count_rows = sorted(map(tuple, dedup_ngram_jaccard(docs).collect()))
-        ppjoin_rows = sorted(map(tuple, dedup_ngram_ppjoin(docs).collect()))
-    finally:
-        release_persisted()
+    count_rows = sorted(map(tuple, dedup_ngram_jaccard(docs).collect()))
+    ppjoin_rows = sorted(map(tuple, dedup_ngram_ppjoin(docs).collect()))
     assert ppjoin_rows == count_rows
 
 
@@ -6000,19 +5999,13 @@ def test_embedding_outlier_report_numpy_recount(spark):
     near-orthogonal synthetic corpus yields few-but-some outliers."""
     import numpy as np
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.similarity import (
         EMB_OUTLIER_Z,
         embedding_outlier_report,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    try:
-        rows = {r["vec_id"]: r for r in embedding_outlier_report(emb).collect()}
-    finally:
-        release_persisted()
+    rows = {r["vec_id"]: r for r in embedding_outlier_report(emb).collect()}
     data = emb.select("vec_id", "embedding").collect()
     vecs = np.array([r["embedding"] for r in data], dtype=np.float64)
     ids = [r["vec_id"] for r in data]
@@ -6058,15 +6051,12 @@ def test_embedding_outlier_report_numpy_recount(spark):
         F.transform("embedding", lambda x: x * 25.0).alias("embedding"),
         F.lit(999).alias("label"),
     )
-    try:
-        flagged = {
-            r["vec_id"]: r["is_outlier"]
-            for r in embedding_outlier_report(
-                emb.select("vec_id", "embedding", "label").unionByName(corrupt)
-            ).collect()
-        }
-    finally:
-        release_persisted()
+    flagged = {
+        r["vec_id"]: r["is_outlier"]
+        for r in embedding_outlier_report(
+            emb.select("vec_id", "embedding", "label").unionByName(corrupt)
+        ).collect()
+    }
     assert flagged[10**9] is True
     assert sum(flagged.values()) < len(flagged) * 0.05
 
@@ -6080,7 +6070,6 @@ def test_edit_distance_pairs_candidate_bound_guard(spark):
 
     from forest_open_data_pipelines_spark.operators.dedup import (
         edit_distance_pairs,
-        release_persisted,
     )
 
     # long docs drawn from a 3-word vocabulary: every prefix collides
@@ -6091,37 +6080,28 @@ def test_edit_distance_pairs_candidate_bound_guard(spark):
             for i in range(12)
         ],
     )
-    try:
-        with _pytest.raises(ValueError, match="max_candidate_pairs"):
-            edit_distance_pairs(docs, max_candidate_pairs=5).count()
-        base = edit_distance_pairs(docs).collect()
-        guarded = edit_distance_pairs(
-            docs, max_candidate_pairs=10**9
-        ).collect()
-        assert sorted(map(tuple, base)) == sorted(map(tuple, guarded))
-    finally:
-        release_persisted()
+    with _pytest.raises(ValueError, match="max_candidate_pairs"):
+        edit_distance_pairs(docs, max_candidate_pairs=5).count()
+    base = edit_distance_pairs(docs).collect()
+    guarded = edit_distance_pairs(
+        docs, max_candidate_pairs=10**9
+    ).collect()
+    assert sorted(map(tuple, base)) == sorted(map(tuple, guarded))
 
 
 def test_bm25_route_empty_index(spark):
     """An index with zero corpus hits is in-domain, not an error: every
     doc routes to NULL best_query_id with score 0.0 and 0 matches
     (previously array_max(array()) raised an AnalysisException)."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.textops import bm25_route
 
     docs = _docs(
         spark,
         [(i, f"plain words only row {i}", "en", "s", 0) for i in range(5)],
     )
-    try:
-        rows = bm25_route(
-            docs, queries=(("q0", ("zzzznohit", "qqqqnohit")),)
-        ).collect()
-    finally:
-        release_persisted()
+    rows = bm25_route(
+        docs, queries=(("q0", ("zzzznohit", "qqqqnohit")),)
+    ).collect()
     assert len(rows) == 5
     for r in rows:
         assert r["best_query_id"] is None
@@ -6153,9 +6133,6 @@ def test_report_prompts_match_reference_build_prompts(spark):
     ns = {"json": _json}
     exec(compile(ast.Module(body=wanted, type_ignores=[]), ref, "exec"), ns)
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.timeseries import (
         REPORT_MAX_CHARS_PER_BLOCK,
         REPORT_PROMPT_ID,
@@ -6171,12 +6148,9 @@ def test_report_prompts_match_reference_build_prompts(spark):
         load_table(spark, SF_DIR, "nation"),
         load_table(spark, SF_DIR, "region"),
     )
-    try:
-        got = {
-            r["locale"]: r for r in report_prompts(monthly_series(enriched)).collect()
-        }
-    finally:
-        release_persisted()
+    got = {
+        r["locale"]: r for r in report_prompts(monthly_series(enriched)).collect()
+    }
     assert set(got) == {"pt", "en"}
 
     for locale in ("pt", "en"):
@@ -6461,9 +6435,6 @@ def test_report_surfaces_empty_series_oracle_parity(spark):
     import duckdb
 
     import __spark_entry__ as entry
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.timeseries import (
         monthly_series,
         orders_enriched,
@@ -6492,7 +6463,6 @@ def test_report_surfaces_empty_series_oracle_parity(spark):
             assert len(got) == (8 if name == "report_fallback_blocks" else 2), name
             assert got == want, name
     finally:
-        release_persisted()
         con.close()
 
 
@@ -6618,21 +6588,14 @@ def test_ann_recall_vs_dim_full_prefix_is_exact(spark):
     top-k IS the ground truth — recall must be exactly 1.0 (pins the
     sweep harness itself); every truncated recall stays in [0, 1] and
     result-set sizes equal the truth size (both are n_queries × k)."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        emb = load_table(spark, SF_DIR, "embeddings")
-        rows = {
-            r["dim"]: r for r in similarity.ann_recall_vs_dim(emb).collect()
-        }
-        assert rows[64]["recall"] == 1.0
-        for r in rows.values():
-            assert 0.0 <= r["recall"] <= 1.0
-            assert r["n_results"] == r["n_truth"]
-    finally:
-        release_persisted()
+    emb = load_table(spark, SF_DIR, "embeddings")
+    rows = {
+        r["dim"]: r for r in similarity.ann_recall_vs_dim(emb).collect()
+    }
+    assert rows[64]["recall"] == 1.0
+    for r in rows.values():
+        assert 0.0 <= r["recall"] <= 1.0
+        assert r["n_results"] == r["n_truth"]
 
 
 def test_vocab_coverage_monotone_and_bounded(spark):
@@ -6734,54 +6697,42 @@ def test_part_pagerank_mass_and_floor(spark):
     Σ rank_pico ≤ 10¹² with loss bounded by #edges + N·iters), every
     node keeps at least the teleport base, and the graph is the
     support-2 co-order fabric (every node has degree ≥ 1)."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.relational import (
         PAGERANK_SCALE,
         part_pagerank,
     )
 
-    try:
-        rows = part_pagerank(load_table(spark, SF_DIR, "lineitem")).collect()
-        assert rows, "support-2 graph must be non-empty at sf0.001"
-        n = len(rows)
-        base = (PAGERANK_SCALE * 15) // (100 * n)
-        total = sum(r["rank_pico"] for r in rows)
-        assert total <= PAGERANK_SCALE
-        assert total >= PAGERANK_SCALE * 97 // 100
-        for r in rows:
-            assert r["rank_pico"] >= base
-            assert r["degree"] >= 1
-            assert abs(r["rank"] - r["rank_pico"] / PAGERANK_SCALE) < 1e-6
-    finally:
-        release_persisted()
+    rows = part_pagerank(load_table(spark, SF_DIR, "lineitem")).collect()
+    assert rows, "support-2 graph must be non-empty at sf0.001"
+    n = len(rows)
+    base = (PAGERANK_SCALE * 15) // (100 * n)
+    total = sum(r["rank_pico"] for r in rows)
+    assert total <= PAGERANK_SCALE
+    assert total >= PAGERANK_SCALE * 97 // 100
+    for r in rows:
+        assert r["rank_pico"] >= base
+        assert r["degree"] >= 1
+        assert abs(r["rank"] - r["rank_pico"] / PAGERANK_SCALE) < 1e-6
 
 
 def test_part_communities_partition_invariants(spark):
     """LPA output partitions the node set: every graph node gets
     exactly one community, community labels are themselves node ids,
     sizes sum to N and match the actual label multiplicity."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.relational import (
         part_communities,
     )
 
-    try:
-        rows = part_communities(load_table(spark, SF_DIR, "lineitem")).collect()
-        assert rows
-        nodes = {r["part_id"] for r in rows}
-        assert len(nodes) == len(rows)  # one row per node
-        by_label: dict = {}
-        for r in rows:
-            by_label.setdefault(r["community"], []).append(r)
-        assert set(by_label) <= nodes  # labels are node ids
-        for label, rs in by_label.items():
-            assert all(r["community_size"] == len(rs) for r in rs)
-    finally:
-        release_persisted()
+    rows = part_communities(load_table(spark, SF_DIR, "lineitem")).collect()
+    assert rows
+    nodes = {r["part_id"] for r in rows}
+    assert len(nodes) == len(rows)  # one row per node
+    by_label: dict = {}
+    for r in rows:
+        by_label.setdefault(r["community"], []).append(r)
+    assert set(by_label) <= nodes  # labels are node ids
+    for label, rs in by_label.items():
+        assert all(r["community_size"] == len(rs) for r in rs)
 
 
 def test_quality_classifier_prep_labels_and_split(spark):
@@ -6793,29 +6744,23 @@ def test_quality_classifier_prep_labels_and_split(spark):
     from forest_open_data_pipelines_spark.operators.curation import (
         quality_classifier_prep,
     )
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
 
-    try:
-        rows = quality_classifier_prep(
-            load_table(spark, SF_DIR, "documents"),
-            load_table(spark, SF_DIR, "embeddings"),
-        ).collect()
-        assert rows
-        splits = {r["split"] for r in rows}
-        assert splits == {"train", "valid"}
-        for r in rows:
-            assert (r["label"] == "keep") == (r["status"] == "kept")
-            assert r["ft_line"].startswith(f"__label__{r['label']} ")
-            assert "\n" not in r["ft_line"] and "\t" not in r["ft_line"]
-            residue = (
-                int(hashlib.md5(f"qcp-{r['doc_id']}".encode()).hexdigest()[:15], 16)
-                % 100
-            )
-            assert r["split"] == ("valid" if residue < 10 else "train")
-    finally:
-        release_persisted()
+    rows = quality_classifier_prep(
+        load_table(spark, SF_DIR, "documents"),
+        load_table(spark, SF_DIR, "embeddings"),
+    ).collect()
+    assert rows
+    splits = {r["split"] for r in rows}
+    assert splits == {"train", "valid"}
+    for r in rows:
+        assert (r["label"] == "keep") == (r["status"] == "kept")
+        assert r["ft_line"].startswith(f"__label__{r['label']} ")
+        assert "\n" not in r["ft_line"] and "\t" not in r["ft_line"]
+        residue = (
+            int(hashlib.md5(f"qcp-{r['doc_id']}".encode()).hexdigest()[:15], 16)
+            % 100
+        )
+        assert r["split"] == ("valid" if residue < 10 else "train")
 
 
 def test_purchase_state_attribution_exactly_one_state(spark):
@@ -7722,9 +7667,6 @@ def test_kn_bigram_perplexity_stdlib_twin_and_gate(spark):
     import math
     from collections import Counter, defaultdict
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.textops import (
         KN_DISCOUNT,
         kn_bigram_perplexity,
@@ -7741,10 +7683,7 @@ def test_kn_bigram_perplexity_stdlib_twin_and_gate(spark):
         [(i, t, "en", "test", len(t)) for i, t in texts.items()],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    try:
-        got = {r["doc_id"]: r for r in kn_bigram_perplexity(docs).collect()}
-    finally:
-        release_persisted()
+    got = {r["doc_id"]: r for r in kn_bigram_perplexity(docs).collect()}
 
     bgs = {
         i: [
@@ -7790,15 +7729,12 @@ def test_kn_bigram_perplexity_stdlib_twin_and_gate(spark):
         assert got[i]["n_bigrams"] == len(lst)
         assert got[i]["entropy_bits"] == h, (i, got[i]["entropy_bits"], h)
 
-    try:
-        flags = {
-            r["passes_kn"]
-            for r in kn_bigram_perplexity(
-                load_table(spark, SF_DIR, "documents")
-            ).collect()
-        }
-    finally:
-        release_persisted()
+    flags = {
+        r["passes_kn"]
+        for r in kn_bigram_perplexity(
+            load_table(spark, SF_DIR, "documents")
+        ).collect()
+    }
     assert flags == {True, False}
 
 
@@ -7813,9 +7749,6 @@ def test_markov_next_event_eval_stdlib_twin(spark):
     from collections import Counter
     from datetime import datetime
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.sessionize import (
         MARKOV_TEST_DAYS,
         markov_next_event_eval,
@@ -7846,10 +7779,7 @@ def test_markov_next_event_eval_stdlib_twin(spark):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    try:
-        got = {r["cur_type"]: r for r in markov_next_event_eval(ev_df).collect()}
-    finally:
-        release_persisted()
+    got = {r["cur_type"]: r for r in markov_next_event_eval(ev_df).collect()}
 
     # stdlib replay
     by_user: dict[int, list] = {}
@@ -7971,41 +7901,35 @@ def test_entity_resolution_semantics(spark):
     surfaces as a LABELLED false positive (ck 0 'Ana Silva0' vs ck
     240 'Ana Silvas0'), and the eval reports recall 1.0 on both
     corruption channels with precision < 1 on the FP-carrying one."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.entities import (
         entity_resolution,
         entity_resolution_eval,
     )
 
     cust = spark.range(300).selectExpr("id AS c_custkey")
-    try:
-        pairs = entity_resolution(cust).collect()
-        by_pair = {(r["left_rec_id"], r["right_rec_id"]): r for r in pairs}
-        for ck in range(300):
-            if ck % 3 == 0:
-                r = by_pair[(ck * 10, ck * 10 + 1)]
-                assert r["edit_distance"] == 1 and r["is_true_match"], r
-            if ck % 5 == 0:
-                r = by_pair[(ck * 10, ck * 10 + 2)]
-                assert r["edit_distance"] == 0 and r["is_true_match"], r
-        fp = by_pair[(0, 2400)]
-        assert fp["left_name"] == "Ana Silva0", fp
-        assert fp["right_name"] == "Ana Silvas0", fp
-        assert fp["edit_distance"] == 1 and not fp["is_true_match"], fp
+    pairs = entity_resolution(cust).collect()
+    by_pair = {(r["left_rec_id"], r["right_rec_id"]): r for r in pairs}
+    for ck in range(300):
+        if ck % 3 == 0:
+            r = by_pair[(ck * 10, ck * 10 + 1)]
+            assert r["edit_distance"] == 1 and r["is_true_match"], r
+        if ck % 5 == 0:
+            r = by_pair[(ck * 10, ck * 10 + 2)]
+            assert r["edit_distance"] == 0 and r["is_true_match"], r
+    fp = by_pair[(0, 2400)]
+    assert fp["left_name"] == "Ana Silva0", fp
+    assert fp["right_name"] == "Ana Silvas0", fp
+    assert fp["edit_distance"] == 1 and not fp["is_true_match"], fp
 
-        ev = {
-            (r["left_kind"], r["right_kind"]): r
-            for r in entity_resolution_eval(cust).collect()
-        }
-        assert ev[("canonical", "typo")]["recall"] == 1.0
-        assert ev[("canonical", "case")]["recall"] == 1.0
-        assert ev[("typo", "case")]["recall"] == 1.0
-        assert ev[("canonical", "canonical")]["precision"] == 0.0
-        assert ev[("canonical", "canonical")]["n_pairs"] > 0
-    finally:
-        release_persisted()
+    ev = {
+        (r["left_kind"], r["right_kind"]): r
+        for r in entity_resolution_eval(cust).collect()
+    }
+    assert ev[("canonical", "typo")]["recall"] == 1.0
+    assert ev[("canonical", "case")]["recall"] == 1.0
+    assert ev[("typo", "case")]["recall"] == 1.0
+    assert ev[("canonical", "canonical")]["precision"] == 0.0
+    assert ev[("canonical", "canonical")]["n_pairs"] > 0
 
 
 def test_entity_clusters_purity_and_canonical(spark):
@@ -8015,18 +7939,12 @@ def test_entity_clusters_purity_and_canonical(spark):
     the closure); the Silva/Silvas over-merge chain surfaces as
     n_entities > 1 (ck 0 and ck 240 land in one cluster); and pure
     single-entity clusters exist too."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.entities import (
         entity_clusters,
     )
 
     cust = spark.range(300).selectExpr("id AS c_custkey")
-    try:
-        rows = entity_clusters(cust).collect()
-    finally:
-        release_persisted()
+    rows = entity_clusters(cust).collect()
 
     assert len(rows) == len({r["rec_id"] for r in rows})
     by_cluster: dict[int, list] = {}
@@ -8058,23 +7976,17 @@ def test_entity_clusters_match_union_find_over_accepted_pairs(spark, lo, hi):
     rec_id), size and entity count for every record, on the
     Silva/Silvas chain range and on an offset range whose custkeys
     cross a ``div 256`` suffix boundary."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.entities import (
         entity_clusters,
         entity_resolution,
     )
 
     cust = spark.range(lo, hi).selectExpr("id AS c_custkey")
-    try:
-        rows = entity_clusters(cust).collect()
-        pairs = [
-            (r["left_rec_id"], r["right_rec_id"])
-            for r in entity_resolution(cust).collect()
-        ]
-    finally:
-        release_persisted()
+    rows = entity_clusters(cust).collect()
+    pairs = [
+        (r["left_rec_id"], r["right_rec_id"])
+        for r in entity_resolution(cust).collect()
+    ]
 
     parent = {r["rec_id"]: r["rec_id"] for r in rows}
 
@@ -8142,9 +8054,6 @@ def test_overlapping_session_pairs_semantics(spark):
     n_overlaps=2."""
     from datetime import datetime
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.sessionize import (
         overlapping_session_pairs,
     )
@@ -8171,13 +8080,10 @@ def test_overlapping_session_pairs_semantics(spark):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    try:
-        got = {
-            (r["user_a"], r["user_b"]): (r["n_overlaps"], r["overlap_minutes"])
-            for r in overlapping_session_pairs(events).collect()
-        }
-    finally:
-        release_persisted()
+    got = {
+        (r["user_a"], r["user_b"]): (r["n_overlaps"], r["overlap_minutes"])
+        for r in overlapping_session_pairs(events).collect()
+    }
     assert got[(1, 2)] == (2, 55.0)  # 50 min day-1 + 5 min day-2
     assert got[(1, 3)] == (1, 0.0)   # touching instant
     assert (1, 4) not in got and (2, 3) not in got
@@ -8280,9 +8186,6 @@ def test_part_bfs_hops_known_graph(spark):
     (degree 3), hops fan out B=0 / {A,C,F}=1 / D=2 / E=3, and the
     max_hops cap truncates the frontier without dropping closer
     nodes."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.relational import (
         part_bfs_hops,
     )
@@ -8295,13 +8198,10 @@ def test_part_bfs_hops_known_graph(spark):
             oid = 1000 * rep + i
             rows += [(oid, u), (oid, v)]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    try:
-        got = {r["part_id"]: r["hop"] for r in part_bfs_hops(li).collect()}
-        assert got == {B: 0, A: 1, C: 1, Fp: 1, D: 2, E: 3}
-        capped = {
-            r["part_id"]: r["hop"]
-            for r in part_bfs_hops(li, max_hops=2).collect()
-        }
-        assert capped == {B: 0, A: 1, C: 1, Fp: 1, D: 2}
-    finally:
-        release_persisted()
+    got = {r["part_id"]: r["hop"] for r in part_bfs_hops(li).collect()}
+    assert got == {B: 0, A: 1, C: 1, Fp: 1, D: 2, E: 3}
+    capped = {
+        r["part_id"]: r["hop"]
+        for r in part_bfs_hops(li, max_hops=2).collect()
+    }
+    assert capped == {B: 0, A: 1, C: 1, Fp: 1, D: 2}

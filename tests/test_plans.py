@@ -162,13 +162,8 @@ def test_mensal_augmentation_reuses_cached_inputs(spark):
     """The matrix and mensal frames feed the guards AND the union
     branches; both must come from the cache, not re-run enrichment
     joins per reference (r4 plan audit: 42 scans without the persist)."""
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
-
-    try:
-        plan = _plan(spark, "nation_month_matrix_augmented")
-        assert plan.count("InMemoryTableScan") >= 4
-    finally:
-        release_persisted()
+    plan = _plan(spark, "nation_month_matrix_augmented")
+    assert plan.count("InMemoryTableScan") >= 4
 
 
 @pytest.mark.parametrize(
@@ -188,14 +183,9 @@ def test_mensal_augmentation_reuses_cached_inputs(spark):
 def test_round5_ops_no_python_row_eval(spark, name):
     """Round-5 operators stay JVM-side (the one sanctioned Python
     stage is simhash64's Arrow kernel, excluded here)."""
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
-
-    try:
-        plan = _plan(spark, name)
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
-    finally:
-        release_persisted()
+    plan = _plan(spark, name)
+    assert "BatchEvalPython" not in plan, name
+    assert "ArrowEvalPython" not in plan, name
 
 
 def test_mensal_links_and_govbr_are_pure_projections(spark):
@@ -241,14 +231,10 @@ def test_chart_spec_scoped_single_fact_aggregation(spark):
 
 
 def test_ppjoin_prefix_join_no_cartesian(spark):
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
 
-    try:
-        plan = _plan(spark, "dedup_ngram_ppjoin")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-    finally:
-        release_persisted()
+    plan = _plan(spark, "dedup_ngram_ppjoin")
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 @pytest.mark.parametrize(
@@ -291,17 +277,13 @@ def test_dedup_clusters_output_reads_checkpoint_not_replay(spark, sf_dir):
     label-propagation join tree."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_clusters,
-        release_persisted,
     )
     from forest_open_data_pipelines_spark.sources import load_table
 
-    try:
-        df = dedup_clusters(load_table(spark, sf_dir, "documents"))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" in plan
-        assert "hashes" not in plan  # the shingle pipeline is fully absent
-    finally:
-        release_persisted()
+    df = dedup_clusters(load_table(spark, sf_dir, "documents"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
+    assert "hashes" not in plan  # the shingle pipeline is fully absent
 
 
 def test_order_priority_semijoin_is_left_semi_with_pushed_filters(spark):
@@ -473,15 +455,10 @@ def test_round6_ops_no_python_row_eval(spark, name):
     the brace-depth fold and the payload math are all Catalyst
     expressions (corpus_curation's banded default keeps its one
     sanctioned Arrow signature kernel, covered separately)."""
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
-
-    try:
-        plan = _plan(spark, name)
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-    finally:
-        release_persisted()
+    plan = _plan(spark, name)
+    assert "BatchEvalPython" not in plan, name
+    assert "ArrowEvalPython" not in plan, name
+    assert "CartesianProduct" not in plan, name
 
 
 def test_q9_dims_broadcast_single_fact_agg(spark):
@@ -524,22 +501,17 @@ def test_q20_totals_reduce_aggregate_not_fact(spark):
     per-(part, supplier) aggregate — the lineitem fact is scanned once
     (both the totals branch and the threshold probe read the cache);
     totals broadcast back (bounded by |parts|)."""
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
-
-    try:
-        plan = _plan(spark, "q20_dominant_suppliers")
-        # both consumers (totals + threshold probe) read the cache; the
-        # plan string prints the cached subtree once PER CONSUMER, so
-        # count consumers, and require all lineitem scans to be the one
-        # cached-aggregate feed (identical pruned schema)
-        assert plan.count("InMemoryTableScan") >= 2
-        lineitem_scans = {s for s in _read_schemas(plan) if "l_quantity" in s}
-        assert len(lineitem_scans) == 1, lineitem_scans
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-        assert "BatchEvalPython" not in plan
-    finally:
-        release_persisted()
+    plan = _plan(spark, "q20_dominant_suppliers")
+    # both consumers (totals + threshold probe) read the cache; the
+    # plan string prints the cached subtree once PER CONSUMER, so
+    # count consumers, and require all lineitem scans to be the one
+    # cached-aggregate feed (identical pruned schema)
+    assert plan.count("InMemoryTableScan") >= 2
+    lineitem_scans = {s for s in _read_schemas(plan) if "l_quantity" in s}
+    assert len(lineitem_scans) == 1, lineitem_scans
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_q21_windows_reuse_aggregate_exchange(spark):
@@ -712,14 +684,9 @@ def test_part_affinity_joins_on_order_key(spark):
     bounded by lines-per-order), never a part-level join — and the
     five branches over the distinct lines frame must read the persisted
     cache, not re-scan the fact (unpersisted: 5 lineitem scans)."""
-    from forest_open_data_pipelines_spark.operators.dedup import release_persisted
-
-    try:
-        plan = _plan(spark, "part_affinity_pairs")
-        assert "hashpartitioning(l_orderkey" in plan
-        assert plan.count("InMemoryTableScan") >= 4
-    finally:
-        release_persisted()
+    plan = _plan(spark, "part_affinity_pairs")
+    assert "hashpartitioning(l_orderkey" in plan
+    assert plan.count("InMemoryTableScan") >= 4
 
 
 def test_hhi_dims_broadcast(spark):
@@ -761,34 +728,20 @@ def test_bm25_topk_no_term_shuffle_join(spark):
     """The query-term match must be a broadcast join (df/idf attached
     on the tiny literal side) — never a sort-merge/shuffle join on
     term — and no cartesian anywhere."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        plan = _plan(spark, "bm25_topk")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan or "doc_id" in plan.split(
-            "SortMergeJoin"
-        )[1][:200], "term-keyed SMJ crept into the match path"
-    finally:
-        release_persisted()
+    plan = _plan(spark, "bm25_topk")
+    assert "CartesianProduct" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan or "doc_id" in plan.split(
+        "SortMergeJoin"
+    )[1][:200], "term-keyed SMJ crept into the match path"
 
 
 def test_bm25_route_is_joinless_projection(spark):
     """The route scores against frozen literal index metadata: zero
     joins, a single documents scan, no shuffle except the final sort."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        plan = _plan(spark, "bm25_route")
-        assert "Join" not in plan
-        assert plan.count("Scan parquet") == 1
-    finally:
-        release_persisted()
+    plan = _plan(spark, "bm25_route")
+    assert "Join" not in plan
+    assert plan.count("Scan parquet") == 1
 
 
 def test_retrieval_diagnostics_single_live_fact_scan(spark):
@@ -797,14 +750,12 @@ def test_retrieval_diagnostics_single_live_fact_scan(spark):
     scans under InMemoryRelation materialize once)."""
     import re as _re
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
+    from forest_open_data_pipelines_spark.runtime import query_scope
 
     for name in (
         "token_zipf_fit", "tokenizer_fertility", "embedding_drift_report"
     ):
-        try:
+        with query_scope(spark, name):
             plan = _plan(spark, name)
             live = 0
             for ln in plan.splitlines():
@@ -813,36 +764,27 @@ def test_retrieval_diagnostics_single_live_fact_scan(spark):
                 if "InMemoryRelation" in ln:
                     break  # everything below the first cache is cached lineage
             assert live <= 2, (name, live)
-        finally:
-            release_persisted()
 
 
 def test_incremental_cache_plan_scans_orders_once(spark):
     """Both decision sides read the persisted years-sized fingerprint
     frame: exactly one orders scan (InMemoryTableScan covers the other
     consumer) and the decision join broadcasts the manifests side."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
+    plan = _plan(spark, "incremental_cache_plan")
+    live = 0
+    for ln in plan.splitlines():
+        if re.search(r"(?:File)?Scan parquet\b", ln):
+            live += 1
+        if "InMemoryRelation" in ln:
+            break  # below the first cache is cached lineage
+    assert live == 0, plan  # both sides read the cached fingerprints
+    assert plan.count("InMemoryTableScan") >= 2
+    assert "BroadcastHashJoin" in plan
+    # the scan reads only the two needed order columns
+    assert all(
+        "o_orderkey" not in s and "o_custkey" not in s
+        for s in _read_schemas(plan)
     )
-
-    try:
-        plan = _plan(spark, "incremental_cache_plan")
-        live = 0
-        for ln in plan.splitlines():
-            if re.search(r"(?:File)?Scan parquet\b", ln):
-                live += 1
-            if "InMemoryRelation" in ln:
-                break  # below the first cache is cached lineage
-        assert live == 0, plan  # both sides read the cached fingerprints
-        assert plan.count("InMemoryTableScan") >= 2
-        assert "BroadcastHashJoin" in plan
-        # the scan reads only the two needed order columns
-        assert all(
-            "o_orderkey" not in s and "o_custkey" not in s
-            for s in _read_schemas(plan)
-        )
-    finally:
-        release_persisted()
 
 
 def test_freshness_observations_append_single_shuffle_window(spark):
@@ -859,39 +801,25 @@ def test_freshness_observations_append_single_shuffle_window(spark):
 def test_reports_catalog_scans_documents_once(spark):
     """The envelope-status scalar reads the persisted reports-sized
     frame, not a second documents scan."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        plan = _plan(spark, "reports_catalog")
-        live = 0
-        for ln in plan.splitlines():
-            if re.search(r"(?:File)?Scan parquet\b", ln):
-                live += 1
-            if "InMemoryRelation" in ln:
-                break  # below the first cache is cached lineage
-        assert live == 0, plan  # both consumers read the shaped cache
-        assert plan.count("InMemoryTableScan") >= 2
-    finally:
-        release_persisted()
+    plan = _plan(spark, "reports_catalog")
+    live = 0
+    for ln in plan.splitlines():
+        if re.search(r"(?:File)?Scan parquet\b", ln):
+            live += 1
+        if "InMemoryRelation" in ln:
+            break  # below the first cache is cached lineage
+    assert live == 0, plan  # both consumers read the shaped cache
+    assert plan.count("InMemoryTableScan") >= 2
 
 
 def test_report_prompts_is_metric_frame_projection(spark):
     """The prompt pair renders off the one-row metric frame: no
     Python row evaluation, dims broadcast in the enrichment, and the
     orders scan column-pruned like the monthly chain's."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        plan = _plan(spark, "report_prompts")
-        assert "PythonUDF" not in plan
-        assert "BroadcastHashJoin" in plan
-        assert all("o_comment" not in s for s in _read_schemas(plan))
-    finally:
-        release_persisted()
+    plan = _plan(spark, "report_prompts")
+    assert "PythonUDF" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert all("o_comment" not in s for s in _read_schemas(plan))
 
 
 def test_scd2_single_fact_exchange(spark):
@@ -968,17 +896,10 @@ def test_effective_overview_metrics_rides_persisted_series(spark):
     metadata-weight at any fact scale."""
     from tools.scan_audit import live_scans
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
-
-    try:
-        plan = _plan(spark, "effective_overview_metrics")
-        assert "InMemoryTableScan" in plan
-        assert "CartesianProduct" not in plan
-        assert not live_scans(plan), live_scans(plan)
-    finally:
-        release_persisted()
+    plan = _plan(spark, "effective_overview_metrics")
+    assert "InMemoryTableScan" in plan
+    assert "CartesianProduct" not in plan
+    assert not live_scans(plan), live_scans(plan)
 
 
 def test_rule_gate_entries_single_scan_no_shuffle(spark):
@@ -1148,17 +1069,10 @@ def test_part_skyline_two_scans_broadcast_frontier(spark):
     df = QUERIES["part_skyline"](spark, SF_DIR)
     df.collect()  # materialize so the cached groups frame pins
     plan = df._jdf.queryExecution().executedPlan().toString()
-    try:
-        assert live_scans(plan) == {"part": 2}, live_scans(plan)
-        assert "SortMergeJoin" not in plan
-        assert "BroadcastHashJoin" in plan
-        assert "InMemoryTableScan" in plan  # shared groups frame
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    assert live_scans(plan) == {"part": 2}, live_scans(plan)
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "InMemoryTableScan" in plan  # shared groups frame
 
 
 def test_cusum_one_scan_broadcast_stats(spark):
@@ -1173,18 +1087,11 @@ def test_cusum_one_scan_broadcast_stats(spark):
     from tools.scan_audit import live_scans
 
     plan = _plan(spark, "cusum_change_points")
-    try:
-        assert live_scans(plan) == {}, live_scans(plan)  # all cached
-        assert "InMemoryRelation" in plan
-        assert "SortMergeJoin" not in plan
-        assert "BroadcastHashJoin" in plan
-        assert "PythonUDF" not in plan
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    assert live_scans(plan) == {}, live_scans(plan)  # all cached
+    assert "InMemoryRelation" in plan
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "PythonUDF" not in plan
 
 
 def test_distinct_rollup_sketch_mapside_combinable(spark):
@@ -1212,18 +1119,11 @@ def test_overlapping_pairs_grid_equi_join_no_cartesian(spark):
     from tools.scan_audit import live_scans
 
     plan = _plan(spark, "overlapping_session_pairs")
-    try:
-        assert live_scans(plan) == {}, live_scans(plan)
-        assert "InMemoryRelation" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "PythonUDF" not in plan
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    assert live_scans(plan) == {}, live_scans(plan)
+    assert "InMemoryRelation" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "PythonUDF" not in plan
 
 
 def test_entity_resolution_block_equi_join_no_cartesian(spark):
@@ -1235,19 +1135,12 @@ def test_entity_resolution_block_equi_join_no_cartesian(spark):
     from tools.scan_audit import live_scans
 
     plan = _plan(spark, "entity_resolution")
-    try:
-        assert live_scans(plan) == {}, live_scans(plan)
-        assert "InMemoryRelation" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "PythonUDF" not in plan
-        assert "levenshtein" in plan
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    assert live_scans(plan) == {}, live_scans(plan)
+    assert "InMemoryRelation" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "PythonUDF" not in plan
+    assert "levenshtein" in plan
 
 
 def test_cuped_one_scan_scalar_broadcast(spark):
@@ -1258,19 +1151,12 @@ def test_cuped_one_scan_scalar_broadcast(spark):
     from tools.scan_audit import live_scans
 
     plan = _plan(spark, "cuped_ab_metrics")
-    try:
-        # per-user cents frame persisted: both moment branches read
-        # the cache, zero live scans pre-materialization
-        assert live_scans(plan) == {}, live_scans(plan)
-        assert "InMemoryRelation" in plan
-        assert "SortMergeJoin" not in plan
-        assert "PythonUDF" not in plan
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    # per-user cents frame persisted: both moment branches read
+    # the cache, zero live scans pre-materialization
+    assert live_scans(plan) == {}, live_scans(plan)
+    assert "InMemoryRelation" in plan
+    assert "SortMergeJoin" not in plan
+    assert "PythonUDF" not in plan
 
 
 def test_survival_curve_one_scan_day_frame_windows(spark):
@@ -1281,20 +1167,13 @@ def test_survival_curve_one_scan_day_frame_windows(spark):
     from tools.scan_audit import live_scans
 
     plan = _plan(spark, "survival_churn_curve")
-    try:
-        # per-user and per-day frames persisted: all consumers read
-        # the caches, zero live scans pre-materialization
-        assert live_scans(plan) == {}, live_scans(plan)
-        assert "InMemoryRelation" in plan
-        assert "PythonUDF" not in plan
-        single = plan.index("Exchange SinglePartition")
-        assert "HashAggregate" in plan[single:]
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    # per-user and per-day frames persisted: all consumers read
+    # the caches, zero live scans pre-materialization
+    assert live_scans(plan) == {}, live_scans(plan)
+    assert "InMemoryRelation" in plan
+    assert "PythonUDF" not in plan
+    single = plan.index("Exchange SinglePartition")
+    assert "HashAggregate" in plan[single:]
 
 
 def test_part_bfs_bounded_supersteps(spark):
@@ -1303,14 +1182,7 @@ def test_part_bfs_bounded_supersteps(spark):
     roots, no parquet rescans in the result plan), every expansion
     join keyed (no Cartesian), no Python."""
     plan = _plan(spark, "part_bfs_hops")
-    try:
-        assert "Scan ExistingRDD" in plan
-        assert "Scan parquet" not in plan  # all supersteps checkpointed
-        assert "CartesianProduct" not in plan
-        assert "PythonUDF" not in plan
-    finally:
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+    assert "Scan ExistingRDD" in plan
+    assert "Scan parquet" not in plan  # all supersteps checkpointed
+    assert "CartesianProduct" not in plan
+    assert "PythonUDF" not in plan

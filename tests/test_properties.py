@@ -270,23 +270,19 @@ def test_edit_distance_pairs_matches_python_dp(spark, texts, k):
     must emit exactly the pairs a pure-Python DP finds within k."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         edit_distance_pairs,
-        release_persisted,
     )
 
     def clean(t):
         return " ".join(t.split()).lower()
 
-    try:
-        docs = spark.createDataFrame(
-            [(i, t, "en", "s", 0) for i, t in enumerate(texts)],
-            ["doc_id", "text", "lang", "source", "n_chars"],
-        )
-        got = {
-            (r["doc_a"], r["doc_b"]): r["edit_distance"]
-            for r in edit_distance_pairs(docs, max_dist=k).collect()
-        }
-    finally:
-        release_persisted()
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s", 0) for i, t in enumerate(texts)],
+        ["doc_id", "text", "lang", "source", "n_chars"],
+    )
+    got = {
+        (r["doc_a"], r["doc_b"]): r["edit_distance"]
+        for r in edit_distance_pairs(docs, max_dist=k).collect()
+    }
     expected = {}
     for i in range(len(texts)):
         for j in range(i + 1, len(texts)):
@@ -574,7 +570,6 @@ def test_winnowing_detection_floor_property(spark, a_text, b_text, planted, pos)
     unfiltered thresholds no matter what surrounds the run."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_winnowing,
-        release_persisted,
     )
 
     cut = min(pos, len(a_text))
@@ -585,11 +580,8 @@ def test_winnowing_detection_floor_property(spark, a_text, b_text, planted, pos)
         [(1, d1, "en", "s", len(d1)), (2, d2, "en", "s", len(d2))],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    try:
-        pairs = {
-            (r.doc_a, r.doc_b)
-            for r in dedup_winnowing(docs, tau_micro=0, min_shared=1).collect()
-        }
-    finally:
-        release_persisted()
+    pairs = {
+        (r.doc_a, r.doc_b)
+        for r in dedup_winnowing(docs, tau_micro=0, min_shared=1).collect()
+    }
     assert (1, 2) in pairs

@@ -1034,7 +1034,6 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
 
     from forest_open_data_pipelines_spark.operators.dedup import (
         dedup_incremental,
-        release_persisted,
     )
     from forest_open_data_pipelines_spark.streaming.incremental_dedup import (
         build_dedup_index,
@@ -1065,10 +1064,7 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
         query.processAllAvailable()
     finally:
         query.stop()
-    try:
-        batch = dedup_incremental(new, base).collect()
-    finally:
-        release_persisted()
+    batch = dedup_incremental(new, base).collect()
     key = lambda r: tuple(r)
     assert sorted(map(key, collected)) == sorted(map(key, batch))
     assert any(r["status"] != "new" for r in collected)
@@ -1082,9 +1078,6 @@ def test_er_gate_stream_matches_batch(spark, tmp_path):
     the same verdicts) — with all three outcome channels firing."""
     from pyspark.sql import functions as F2
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.entities import (
         ER_HOLDOUT_MOD,
         ER_HOLDOUT_RESIDUE,
@@ -1097,44 +1090,41 @@ def test_er_gate_stream_matches_batch(spark, tmp_path):
     from tests.conftest import SF_DIR_MID
 
     cust = load_table(spark, SF_DIR_MID, "customer")
-    try:
-        recs = _keyed_records(cust)
-        held = (
-            F2.pmod(F2.col("entity_id"), F2.lit(ER_HOLDOUT_MOD))
-            == ER_HOLDOUT_RESIDUE
-        )
-        index = recs.where((F2.col("kind") == "canonical") & ~held).cache()
-        incoming = recs.where((F2.col("kind") != "canonical") | held)
+    recs = _keyed_records(cust)
+    held = (
+        F2.pmod(F2.col("entity_id"), F2.lit(ER_HOLDOUT_MOD))
+        == ER_HOLDOUT_RESIDUE
+    )
+    index = recs.where((F2.col("kind") == "canonical") & ~held).cache()
+    incoming = recs.where((F2.col("kind") != "canonical") | held)
 
-        src = tmp_path / "er_src"
-        src.mkdir()
-        incoming.where("rec_id % 2 = 0").coalesce(1).write.parquet(
-            str(src / "a.parquet")
-        )
-        incoming.where("rec_id % 2 = 1").coalesce(1).write.parquet(
-            str(src / "b.parquet")
-        )
-        stream = (
-            spark.readStream.schema(incoming.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(str(src))
-        )
-        collected = []
-        query = er_gate_stream(
-            stream,
-            index,
-            sink=lambda df, bid: collected.extend(df.collect()),
-            checkpoint=str(tmp_path / "ckpt_er_gate"),
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        batch = er_incremental_classify(cust).collect()
+    src = tmp_path / "er_src"
+    src.mkdir()
+    incoming.where("rec_id % 2 = 0").coalesce(1).write.parquet(
+        str(src / "a.parquet")
+    )
+    incoming.where("rec_id % 2 = 1").coalesce(1).write.parquet(
+        str(src / "b.parquet")
+    )
+    stream = (
+        spark.readStream.schema(incoming.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    collected = []
+    query = er_gate_stream(
+        stream,
+        index,
+        sink=lambda df, bid: collected.extend(df.collect()),
+        checkpoint=str(tmp_path / "ckpt_er_gate"),
+    )
+    try:
+        query.processAllAvailable()
     finally:
-        release_persisted()
+        query.stop()
+    batch = er_incremental_classify(cust).collect()
 
     key = lambda r: tuple(r)
     assert sorted(map(key, collected)) == sorted(map(key, batch))
@@ -1388,7 +1378,6 @@ def test_winnowing_gate_stream_matches_batch(spark, tmp_path):
 
     from forest_open_data_pipelines_spark.operators.dedup import (
         build_winnowing_index,
-        release_persisted,
         winnowing_incremental,
     )
     from forest_open_data_pipelines_spark.streaming.winnowing_gate import (
@@ -1416,10 +1405,7 @@ def test_winnowing_gate_stream_matches_batch(spark, tmp_path):
         query.processAllAvailable()
     finally:
         query.stop()
-    try:
-        batch = winnowing_incremental(new, base).collect()
-    finally:
-        release_persisted()
+    batch = winnowing_incremental(new, base).collect()
     key = lambda r: tuple(r)
     assert sorted(map(key, collected)) == sorted(map(key, batch))
     assert any(r["status"] == "dup" for r in collected)
@@ -1876,9 +1862,6 @@ def test_ahash_gate_stream_matches_batch(spark, tmp_path):
     the winnowing-gate bridge shape at the aHash granularity."""
     from pyspark.sql import functions as F2
 
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.multimodal import (
         ahash_signatures,
         as_media_table,
@@ -1916,10 +1899,7 @@ def test_ahash_gate_stream_matches_batch(spark, tmp_path):
     finally:
         query.stop()
         base_sigs.unpersist()
-    try:
-        batch = media_ahash_incremental(new, base).collect()
-    finally:
-        release_persisted()
+    batch = media_ahash_incremental(new, base).collect()
     key = lambda r: tuple(r)
     assert sorted(map(key, collected)) == sorted(map(key, batch))
     # the split must exercise both verdicts for the parity to mean much
@@ -2095,9 +2075,6 @@ def test_effective_series_stream_matches_batch(spark, tmp_path):
     zip series — the per-period deltas accumulate across micro-batches
     into exactly the batch operator's truncated feed, and the merge
     tail IS the batch operator's own."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.timeseries import (
         effective_monthly_series,
         orders_enriched,
@@ -2134,12 +2111,9 @@ def test_effective_series_stream_matches_batch(spark, tmp_path):
             query.stop()
         assert len(reports) == 3
         final = reports[max(reports)]
-        try:
-            batch = effective_monthly_series(
-                enriched, events, reference_month_mode=mode
-            ).collect()
-        finally:
-            release_persisted()
+        batch = effective_monthly_series(
+            enriched, events, reference_month_mode=mode
+        ).collect()
         key = lambda r: tuple(r)
         assert sorted(map(key, final)) == sorted(map(key, batch)), mode
         # the substitution actually fired on this corpus
@@ -2156,9 +2130,6 @@ def test_effective_series_cache_compaction_restart_convergence(
     at a NEW path, resume against the compacted cache with the SAME
     checkpoint, drain the third batch — the final series must still be
     row-identical to the batch operator over all events."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        release_persisted,
-    )
     from forest_open_data_pipelines_spark.operators.timeseries import (
         effective_monthly_series,
         orders_enriched,
@@ -2231,10 +2202,8 @@ def test_effective_series_cache_compaction_restart_convergence(
         query.processAllAvailable()
     finally:
         query.stop()
-        release_persisted()
     final = reports[max(reports)]
     batch = effective_monthly_series(enriched, events).collect()
-    release_persisted()
     assert sorted(map(tuple, final)) == sorted(map(tuple, batch))
 
 

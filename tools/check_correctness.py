@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
 from frame_compare import pandas_signature
+from forest_open_data_pipelines_spark.runtime import query_scope
 from forest_open_data_pipelines_spark.session import get_spark
 from forest_open_data_pipelines_spark.sources.tables import TABLES
 
@@ -41,7 +42,8 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            spdf = fn(spark, sf_dir).toPandas()
+            with query_scope(spark, name):
+                spdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"{name}: SPARK FAIL {type(e).__name__}: {str(e)[:200]}")

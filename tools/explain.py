@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from forest_open_data_pipelines_spark.plans.catalog import QUERIES
 from forest_open_data_pipelines_spark.session import get_spark
+from forest_open_data_pipelines_spark.sources.tables import DEFAULT_SF_DIR
 
 
 def main() -> None:
@@ -30,9 +31,7 @@ def main() -> None:
             print(f"  {name}")
         return
     name = args[0]
-    sf_dir = args[1] if len(args) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
+    sf_dir = args[1] if len(args) > 1 else DEFAULT_SF_DIR
     if name not in QUERIES:
         raise SystemExit(f"unknown query {name!r}; run with no args for the list")
     spark = get_spark("explain")

@@ -24,6 +24,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from forest_open_data_pipelines_spark.plans.catalog import QUERIES
+from forest_open_data_pipelines_spark.runtime import query_scope
 from forest_open_data_pipelines_spark.session import get_spark
 
 SCAN_RE = re.compile(r"Scan parquet\b.*?([a-z_]+)\.parquet")
@@ -59,24 +60,18 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "simple"
     )
-    from forest_open_data_pipelines_spark.runtime import release_persisted
 
     flagged = 0
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
         try:
-            # measure each entry FRESH: accumulated cache/checkpoint
-            # registrations from EARLIER entries' plan construction
-            # poison later substitution (r10 finding: building
-            # perplexity_buckets' lazily-checkpointed plan first made
-            # charlm_perplexity print 12 live scans that are 0 in a
-            # clean session — and 0 at runtime, where bench/driver
-            # call release_persisted between queries)
-            release_persisted()
-            spark.catalog.clearCache()
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
+            # One scope per entry, so each is planned fresh: cached or
+            # checkpointed frames left by an earlier entry would be
+            # substituted into later plans and change their scan count.
+            with query_scope(spark, name):
+                df = fn(spark, sf_dir)
+                plan = df._jdf.queryExecution().explainString(mode)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {type(e).__name__}: {e}")
             flagged += 1
