@@ -2008,9 +2008,10 @@ FROM scored QUALIFY rank <= {k} ORDER BY query_id, rank"""
 
 
 def _ngram_containment_sql(threshold: float = 0.9) -> str:
-    """DuckDB twin of dedup.dedup_containment: the _ngram_jaccard_sql
-    candidate construction (hot-shingle stop-list, exact verify over
-    FULL shingle sets) scored as |A∩B| / min(|A|, |B|)."""
+    """DuckDB twin of dedup.dedup_containment: candidates from shared
+    COLD shingles (the identical greatest(2, max_df·n_docs) stop-list),
+    exact verify over the FULL shingle sets, scored as
+    |A∩B| / min(|A|, |B|)."""
     from forest_open_data_pipelines_spark.operators.dedup import NGRAM_MAX_DF
 
     return f"""
@@ -2038,41 +2039,6 @@ SELECT doc_a, doc_b,
        round(common::DOUBLE / least(n_a, n_b), 6) AS containment
 FROM pairs
 WHERE round(common::DOUBLE / least(n_a, n_b), 6) >= {threshold}
-ORDER BY doc_a, doc_b"""
-
-
-def _ngram_jaccard_sql(threshold: float = 0.8) -> str:
-    """DuckDB twin of dedup.dedup_ngram_jaccard with the hot-shingle
-    document-frequency stop-list: identical greatest(2, max_df·n_docs)
-    cap on candidate generation, exact Jaccard verify over the FULL
-    shingle sets (so cap semantics match the Spark side exactly)."""
-    from forest_open_data_pipelines_spark.operators.dedup import NGRAM_MAX_DF
-
-    return f"""
-WITH {SHINGLES},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM shingled),
-nd AS (SELECT count(*) AS n_docs FROM shingled),
-cold AS (
-  SELECT s FROM ex, nd GROUP BY s, n_docs
-  HAVING count(*) <= greatest(2.0, {NGRAM_MAX_DF} * n_docs)
-),
-colded AS (SELECT doc_id, s FROM ex JOIN cold USING (s)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM colded a JOIN colded b ON a.s = b.s AND a.doc_id < b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b,
-         len(list_intersect(x.shingles, y.shingles)) AS common,
-         len(x.shingles) AS n_a, len(y.shingles) AS n_b
-  FROM cand
-  JOIN shingled x ON x.doc_id = cand.doc_a
-  JOIN shingled y ON y.doc_id = cand.doc_b
-)
-SELECT doc_a, doc_b,
-       round(common::DOUBLE / (n_a + n_b - common), 6) AS jaccard
-FROM pairs
-WHERE round(common::DOUBLE / (n_a + n_b - common), 6) >= {threshold}
 ORDER BY doc_a, doc_b"""
 
 
@@ -4680,7 +4646,7 @@ def _dedup_threshold_sweep_sql() -> str:
     lo = min(SWEEP_THRESHOLDS)
     thr = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS)
     return f"""
-WITH truth AS (SELECT * FROM ({_ngram_jaccard_sql(threshold=lo)})),
+WITH truth AS (SELECT * FROM ({_ngram_exact_sql(threshold=lo)})),
 cand AS (SELECT doc_a, doc_b, TRUE AS is_cand
          FROM ({_minhash_sql(candidates_only=True)})),
 thr(threshold) AS (VALUES {thr}),
@@ -4730,7 +4696,7 @@ def _simhash_budget_sweep_sql() -> str:
     return f"""
 WITH pairs AS (SELECT * FROM ({_simhash64_sql(max_hamming=hi)})),
 truth AS (SELECT doc_a, doc_b, TRUE AS is_truth
-          FROM ({_ngram_jaccard_sql()})),
+          FROM ({_ngram_exact_sql()})),
 thr(max_hamming) AS (VALUES {thr}),
 nt AS (SELECT count(*)::BIGINT AS n_truth FROM truth),
 tagged AS (
@@ -7018,9 +6984,9 @@ FROM keyed GROUP BY url_key ORDER BY url_key""",
 SELECT md5({lclean}) AS content_fingerprint,
        min(doc_id) AS canonical_doc_id, count(*) AS n_docs
 FROM documents GROUP BY 1 ORDER BY content_fingerprint""",
-        # the catalog entry runs dedup_ngram_ppjoin since r9 — the
-        # oracle is the stop-list-free exact twin, which IS the ppjoin
-        # output by the prefix-filter recall guarantee
+        # the catalog entry runs dedup_ngram_ppjoin — the oracle is the
+        # stop-list-free exact twin, which IS the ppjoin output by the
+        # prefix-filter recall guarantee
         "dedup_ngram_jaccard": _ngram_exact_sql(),
         "dedup_containment": _ngram_containment_sql(),
         "dedup_minhash": _minhash_sql(),
@@ -7055,7 +7021,7 @@ agg AS (SELECT pair, sum(n)::BIGINT AS freq FROM pairs GROUP BY pair)
 SELECT row_number() OVER (ORDER BY freq DESC, pair) AS rank, pair, freq
 FROM agg QUALIFY rank <= 20 ORDER BY rank""",
         "dedup_method_eval": f"""
-WITH truth AS (SELECT doc_a, doc_b FROM ({_ngram_jaccard_sql()})),
+WITH truth AS (SELECT doc_a, doc_b FROM ({_ngram_exact_sql()})),
 mh AS (SELECT doc_a, doc_b FROM ({_minhash_sql()})),
 sh AS (SELECT doc_a, doc_b FROM ({_simhash_sql()})),
 sh64 AS (SELECT doc_a, doc_b FROM ({_simhash64_sql()})),

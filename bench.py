@@ -330,11 +330,16 @@ NOTES = {
 }
 
 
-def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
+def _streaming_bench(
+    spark, sf_dir: str
+) -> tuple[dict[str, float], dict[str, str]]:
     """Drain six representative stateful streaming operators over the
     events/documents feeds, one micro-batch each (the sf parquet is a
     single file) through a memory sink with a throwaway checkpoint,
-    timing source-to-drain.
+    timing source-to-drain. Returns the seconds and the ``runId`` of
+    each drain: Spark runs a drain's micro-batch jobs under its runId
+    as job group, so the runId is what ties them to the drain in the
+    event log.
     The batch headline rows measure Catalyst plans; these make
     state-store kernel cost drift visible round-over-round. Kept
     OUTSIDE the headline total so cross-round batch ratios stay
@@ -387,6 +392,7 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
     stream_parts = "8"
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out: dict[str, float] = {}
+    run_ids: dict[str, str] = {}
     spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
     try:
         for name, (build, mode) in drains.items():
@@ -411,12 +417,13 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
                 finally:
                     query.stop()
                 out[name] = round(time.perf_counter() - start, 4)
+                run_ids[name] = str(query.runId)
             spark.catalog.dropTempView(f"bench_{name}")
             shutil.rmtree(tmp, ignore_errors=True)
             print(f"# {name}: {out[name]:.3f}s", file=sys.stderr)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
-    return out
+    return out, run_ids
 
 
 def _samples(
@@ -476,7 +483,7 @@ def main(names: list[str]) -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     streaming_total = artifact = None
     if not names:
-        streaming = _streaming_bench(spark, sf_dir)
+        streaming, streaming_run_ids = _streaming_bench(spark, sf_dir)
         streaming_total = round(sum(streaming.values()), 4)
         # Medians, drains and caveats go to an artifact FILE; stdout
         # gets one compact line that survives a short tail capture.
@@ -496,6 +503,7 @@ def main(names: list[str]) -> None:
                     "queries_median": medians,
                     "q1_floor_sec": q1_floor,
                     "streaming": streaming,
+                    "streaming_run_ids": streaming_run_ids,
                     "streaming_total_sec": streaming_total,
                     "steady_state": STEADY_STATE if not COLD_INDEX else [],
                     "cold_index": COLD_INDEX,

@@ -923,7 +923,8 @@ def media_ahash_incremental(
     the persisted index, classify the NEW batch against it. Composes
     ``ahash_signatures`` (index build) + ``classify_against_ahash_index``
     (the pure per-batch classifier) — the identical pieces the
-    streaming gate (streaming/ahash_gate.py) runs per micro-batch.
+    streaming gate (``streaming.classify.classify_stream``) runs per
+    micro-batch.
     """
     base_sigs = persist(
         ahash_signatures(

@@ -306,8 +306,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         kmeans_iters=similarity.IVF_KMEANS_ITERS,
     ),
     # ── Round-5 additions: first driver rows needed ─────────────────
-    "dedup_simhash64": lambda s, d: dedup.dedup_simhash64(
-        load_table(s, d, "documents")
+    "dedup_simhash64": lambda s, d: dedup.dedup_simhash(
+        load_table(s, d, "documents"),
+        bits=64,
+        max_hamming=dedup.SIMHASH64_MAX_HAMMING,
     ),
     "payload_merge_dedupe": lambda s, d: social.payload_merge_dedupe(
         timeseries.monthly_series(_enriched(s, d))
@@ -435,10 +437,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "monthly_series": lambda s, d: timeseries.monthly_series(_enriched(s, d)),
     "dedup_exact": lambda s, d: dedup.dedup_exact(load_table(s, d, "documents")),
     "dedup_minhash": lambda s, d: dedup.dedup_minhash(load_table(s, d, "documents")),
-    # The catalog's EXECUTED plan is the ppjoin prefix-filter path —
-    # the 100× plan (x8 probe ratio 2.35 vs the count-verify
-    # dedup_ngram_jaccard's 20.3). Same pair set (equality asserted in
-    # tests); the oracle is the stop-list-free exact twin.
+    # The exact n-gram Jaccard pair set is the ppjoin prefix-filter
+    # path; the oracle is the stop-list-free exact twin.
     "dedup_ngram_jaccard": lambda s, d: dedup.dedup_ngram_ppjoin(
         load_table(s, d, "documents")
     ),

@@ -174,9 +174,7 @@ def boilerplate_gate_stream(
     tests/test_streaming.py); on live data the frozen cut is the
     production behavior, not an approximation.
     """
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        _shingles_from_tokens,
-    )
+    from forest_open_data_pipelines_spark.operators.dedup import _word_ngrams
     from forest_open_data_pipelines_spark.operators.textops import (
         BOILER_FLAG_FRAC,
         boilerplate_gram_set,
@@ -184,7 +182,7 @@ def boilerplate_gate_stream(
 
     boiler = [r["s"] for r in boilerplate_gram_set(reference_corpus).collect()]
     toks = F.split(F.lower(clean_text(F.col("text"))), " ")
-    shingles = _shingles_from_tokens(toks)
+    shingles = F.array_distinct(_word_ngrams(toks))
     boiler_lit = (
         F.array(*[F.lit(s) for s in boiler])
         if boiler

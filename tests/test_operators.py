@@ -147,12 +147,31 @@ def test_sessionize_counts_events(spark):
     assert sessions.where(F.col("duration_minutes") < 0).count() == 0
 
 
+def _exact_jaccard_pairs(docs, threshold: float = 0.8) -> dict:
+    """Pure-Python all-pairs twin of the exact word-3-gram Jaccard pair
+    set: {(doc_a, doc_b): jaccard} over ``shingle_table``'s string
+    sets, rounded half-up at 6 dp like ``ratio`` — independent of any
+    candidate filter (prefix, band or stop-list)."""
+    import math
+
+    sets = {
+        int(r.doc_id): set(r.shingles)
+        for r in dedup.shingle_table(docs).collect()
+    }
+    ids = sorted(sets)
+    out = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            v = len(sets[a] & sets[b]) / len(sets[a] | sets[b]) * 1e6
+            j = (math.floor(v) + (v - math.floor(v) >= 0.5)) / 1e6
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
 def test_dedup_minhash_subset_of_exact_jaccard(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.dedup_ngram_jaccard(docs, threshold=0.8).collect()
-    }
+    exact = set(_exact_jaccard_pairs(docs, 0.8))
     lsh = {
         (r["doc_a"], r["doc_b"])
         for r in dedup.dedup_minhash(docs, threshold=0.8).collect()
@@ -573,7 +592,7 @@ def test_simhash64_sign_bit_exercised_and_recall_exact(spark):
     dead), and the block-LSH pair set equals a brute-force all-pairs
     hamming filter over the same signatures (perfect recall)."""
     docs = load_table(spark, SF_DIR, "documents")
-    sig_rows = dedup.simhash_signatures64(docs).collect()
+    sig_rows = dedup.simhash_signatures(docs, 64).collect()
     sigs = {r.doc_id: r.simhash for r in sig_rows}
     assert any(s < 0 for s in sigs.values()), "bit 63 never set"
     high_halves = {(s >> 32) & 0xFFFFFFFF for s in sigs.values()}
@@ -592,9 +611,31 @@ def test_simhash64_sign_bit_exercised_and_recall_exact(spark):
     )
     got = sorted(
         (r.doc_a, r.doc_b, r.hamming)
-        for r in dedup.dedup_simhash64(docs).collect()
+        for r in dedup.dedup_simhash(docs, bits=64, max_hamming=h).collect()
     )
     assert got == expected
+
+
+@pytest.mark.parametrize("bits", [16, 32, 64])
+def test_simhash_signatures_match_python_sign_fold(spark, bits):
+    """The Arrow signature kernel equals the per-shingle ±1 sign fold,
+    run here as a plain Python loop: bit j < 32 votes on bit j of h1,
+    bit j ≥ 32 on bit j-32 of h2, set iff the sum is positive."""
+    docs = load_table(spark, SF_DIR, "documents")
+    want = {}
+    for r in dedup.dual_hashed_shingle_table(docs).collect():
+        sig = 0
+        for j in range(bits):
+            hashes = r.hashes if j < 32 else r.hashes2
+            votes = sum(1 if (h >> (j % 32)) & 1 else -1 for h in hashes)
+            if votes > 0:
+                sig |= 1 << j
+        want[r.doc_id] = sig - (1 << 64) if sig >= 1 << 63 else sig
+    got = {
+        r.doc_id: r.simhash
+        for r in dedup.simhash_signatures(docs, bits).collect()
+    }
+    assert got == want
 
 
 def test_dedup_embedding_lsh_subset_and_recall(spark):
@@ -1554,24 +1595,6 @@ def test_empty_series_contract(spark):
     assert h["latest_period"].value is None
 
 
-def test_ngram_jaccard_hot_shingle_cap_preserves_recall(spark, sf_dir):
-    """r3 judge item 7: the DF stop-list must shrink candidate
-    generation without changing the verified output (ground truth =
-    the uncapped run, max_df=1.0)."""
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        dedup_ngram_jaccard,
-    )
-    from forest_open_data_pipelines_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    capped = [tuple(r) for r in dedup_ngram_jaccard(docs).collect()]
-    uncapped = [
-        tuple(r) for r in dedup_ngram_jaccard(docs, max_df=1.0).collect()
-    ]
-    assert capped == uncapped
-    assert len(capped) > 0
-
-
 def test_ann_ivf_trained_centroids_recall(spark):
     """r3 judge item 9 (stretch): the k-means-trained quantizer variant
     stays deterministic and keeps usable probe recall. Seeds remain the
@@ -1838,7 +1861,7 @@ def test_mensal_links_keep_last_and_query_rejection(spark):
 
 def test_ppjoin_equals_stoplist_ngram_and_finds_planted_pair(spark):
     """Prefix filtering is exact: ppjoin's output must equal the
-    stop-list variant's on this corpus (where the cap is inert), and a
+    pure-Python all-pairs Jaccard on this corpus, and a
     planted pair differing only in its LAST frequency-ordered shingle
     (outside the Jaccard-τ prefix of neither doc... i.e. still inside
     both prefixes by the theorem) must be found."""
@@ -1847,11 +1870,7 @@ def test_ppjoin_equals_stoplist_ngram_and_finds_planted_pair(spark):
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup.dedup_ngram_ppjoin(docs).collect()
     }
-    base = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.dedup_ngram_jaccard(docs).collect()
-    }
-    assert pp == base
+    assert pp == _exact_jaccard_pairs(docs)
     # planted near-identical pair: 20-word doc, one word changed at the
     # end → shingle overlap 17/21 ≈ 0.81 ≥ 0.8
     words = [f"w{i}" for i in range(20)]
@@ -2047,10 +2066,7 @@ def test_connected_components_hot_label_broadcast_path(spark):
 
 
 def test_dedup_clusters_partitions_and_closes_pairs(spark, sf_dir):
-    from forest_open_data_pipelines_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_ngram_jaccard,
-    )
+    from forest_open_data_pipelines_spark.operators.dedup import dedup_clusters
     from forest_open_data_pipelines_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2065,10 +2081,10 @@ def test_dedup_clusters_partitions_and_closes_pairs(spark, sf_dir):
         assert r["cluster_id"] <= r["doc_id"]
         assert r["is_canonical"] == (r["doc_id"] == r["cluster_id"])
     # every near-dup pair is closed into one cluster
-    for p in dedup_ngram_jaccard(docs).collect():
-        assert (
-            by_doc[p["doc_a"]]["cluster_id"] == by_doc[p["doc_b"]]["cluster_id"]
-        )
+    pairs = _exact_jaccard_pairs(docs)
+    assert pairs, "no near-dup pair to close on this corpus"
+    for a, b in pairs:
+        assert by_doc[a]["cluster_id"] == by_doc[b]["cluster_id"]
     # cluster_size agrees with the actual partition
     from collections import Counter
 
@@ -5252,22 +5268,6 @@ def test_approx_percentile_variants_error_bounds(spark):
             assert abs(apq[k][c] - exq[k][c]) <= 0.01 * max(abs(exq[k][c]), 0.01), (k, c)
 
 
-def test_dedup_ngram_jaccard_candidate_guard(spark):
-    """max_candidate_pairs is the jaccard twin of edit_distance_pairs'
-    max_short_docs guard: a generous cap leaves results IDENTICAL, a
-    tight cap fails fast naming the remediation (ppjoin / exact dedup
-    / max_df), and the quoted bound really is Σ C(df,2) over cold
-    shingles."""
-    docs = load_table(spark, SF_DIR, "documents")
-    base = dedup.dedup_ngram_jaccard(docs).collect()
-    guarded = dedup.dedup_ngram_jaccard(
-        docs, max_candidate_pairs=10_000_000
-    ).collect()
-    assert sorted(map(tuple, base)) == sorted(map(tuple, guarded))
-    with pytest.raises(ValueError, match="dedup_ngram_ppjoin"):
-        dedup.dedup_ngram_jaccard(docs, max_candidate_pairs=1)
-
-
 def test_corpus_shard_plan_balance_invariants(spark):
     """Shard plan: every document lands in exactly one shard (doc and
     token totals reconcile with the corpus), shares sum to ~1e6 ppm
@@ -5957,16 +5957,40 @@ def test_bitext_mining_margin_recount(spark):
 
 def test_jaccard_method_prefix_is_ppjoin(spark):
     """The dedup_ngram_jaccard catalog entry runs dedup_ngram_ppjoin:
-    its rows must equal the count-verify dedup_ngram_jaccard's."""
+    its rows must equal the pure-Python all-pairs exact Jaccard's."""
     from forest_open_data_pipelines_spark.operators.dedup import (
-        dedup_ngram_jaccard,
         dedup_ngram_ppjoin,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
-    count_rows = sorted(map(tuple, dedup_ngram_jaccard(docs).collect()))
+    exact_rows = sorted((a, b, j) for (a, b), j in _exact_jaccard_pairs(docs).items())
     ppjoin_rows = sorted(map(tuple, dedup_ngram_ppjoin(docs).collect()))
-    assert ppjoin_rows == count_rows
+    assert ppjoin_rows == exact_rows
+
+
+def test_eval_truth_pairs_every_copy_of_a_planted_cluster(spark):
+    """The evaluation entries score against the EXACT Jaccard pair set:
+    three identical copies form 3 pairs although each of their
+    shingles sits in 3 of 5 documents — above a stop-list cap of
+    greatest(2, 0.01·n_docs), which would leave the truth empty."""
+    copy = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = spark.createDataFrame(
+        [
+            (1, copy),
+            (2, copy),
+            (3, copy),
+            (4, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+            (5, "one two three four five six seven eight nine ten eleven"),
+        ],
+        "doc_id long, text string",
+    )
+    n_truth = {r.n_truth for r in dedup.dedup_method_eval(docs).collect()}
+    sweep = {
+        r.threshold: r.n_pairs
+        for r in dedup.dedup_threshold_sweep(docs).collect()
+    }
+    assert n_truth == {len(_exact_jaccard_pairs(docs, 0.8))} == {3}
+    assert sweep[0.5] == len(_exact_jaccard_pairs(docs, 0.5)) == 3
 
 
 def test_shard_curriculum_reconciles_with_shard_plan(spark):

@@ -182,7 +182,7 @@ def test_mensal_augmentation_reuses_cached_inputs(spark):
 )
 def test_round5_ops_no_python_row_eval(spark, name):
     """Round-5 operators stay JVM-side (the one sanctioned Python
-    stage is simhash64's Arrow kernel, excluded here)."""
+    stage is the simhash signature kernel, excluded here)."""
     plan = _plan(spark, name)
     assert "BatchEvalPython" not in plan, name
     assert "ArrowEvalPython" not in plan, name

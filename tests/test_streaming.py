@@ -1033,11 +1033,12 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F2
 
     from forest_open_data_pipelines_spark.operators.dedup import (
+        build_dedup_index,
+        classify_against_index,
         dedup_incremental,
     )
-    from forest_open_data_pipelines_spark.streaming.incremental_dedup import (
-        build_dedup_index,
-        incremental_dedup_stream,
+    from forest_open_data_pipelines_spark.streaming.classify import (
+        classify_stream,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -1052,11 +1053,9 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
     ).parquet(str(src))
     fps, bandrows, shingles = (df.cache() for df in build_dedup_index(base))
     collected = []
-    query = incremental_dedup_stream(
+    query = classify_stream(
         stream,
-        fps,
-        bandrows,
-        shingles,
+        lambda b: classify_against_index(b, fps, bandrows, shingles),
         sink=lambda df, bid: collected.extend(df.collect()),
         checkpoint=str(tmp_path / "ckpt_inc_dedup"),
     )
@@ -1082,10 +1081,11 @@ def test_er_gate_stream_matches_batch(spark, tmp_path):
         ER_HOLDOUT_MOD,
         ER_HOLDOUT_RESIDUE,
         _keyed_records,
+        er_classify_against_index,
         er_incremental_classify,
     )
-    from forest_open_data_pipelines_spark.streaming.entity_gate import (
-        er_gate_stream,
+    from forest_open_data_pipelines_spark.streaming.classify import (
+        classify_stream,
     )
     from tests.conftest import SF_DIR_MID
 
@@ -1114,9 +1114,9 @@ def test_er_gate_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     collected = []
-    query = er_gate_stream(
+    query = classify_stream(
         stream,
-        index,
+        lambda b: er_classify_against_index(b, index),
         sink=lambda df, bid: collected.extend(df.collect()),
         checkpoint=str(tmp_path / "ckpt_er_gate"),
     )
@@ -1378,10 +1378,11 @@ def test_winnowing_gate_stream_matches_batch(spark, tmp_path):
 
     from forest_open_data_pipelines_spark.operators.dedup import (
         build_winnowing_index,
+        classify_against_winnowing_index,
         winnowing_incremental,
     )
-    from forest_open_data_pipelines_spark.streaming.winnowing_gate import (
-        winnowing_gate_stream,
+    from forest_open_data_pipelines_spark.streaming.classify import (
+        classify_stream,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -1394,10 +1395,9 @@ def test_winnowing_gate_stream_matches_batch(spark, tmp_path):
     ).parquet(str(src))
     base_k, hot = (df.cache() for df in build_winnowing_index(base))
     collected = []
-    query = winnowing_gate_stream(
+    query = classify_stream(
         stream,
-        base_k,
-        hot,
+        lambda b: classify_against_winnowing_index(b, base_k, hot),
         sink=lambda df, bid: collected.extend(df.collect()),
         checkpoint=str(tmp_path / "ckpt_wg"),
     )
@@ -1865,10 +1865,11 @@ def test_ahash_gate_stream_matches_batch(spark, tmp_path):
     from forest_open_data_pipelines_spark.operators.multimodal import (
         ahash_signatures,
         as_media_table,
+        classify_against_ahash_index,
         media_ahash_incremental,
     )
-    from forest_open_data_pipelines_spark.streaming.ahash_gate import (
-        ahash_gate_stream,
+    from forest_open_data_pipelines_spark.streaming.classify import (
+        classify_stream,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -1888,9 +1889,9 @@ def test_ahash_gate_stream_matches_batch(spark, tmp_path):
         as_media_table(base).where(F2.length("payload") > 0)
     ).cache()
     collected = []
-    query = ahash_gate_stream(
+    query = classify_stream(
         stream,
-        base_sigs,
+        lambda b: classify_against_ahash_index(b, base_sigs, persist_new=False),
         sink=lambda df, bid: collected.extend(df.collect()),
         checkpoint=str(tmp_path / "ckpt_ag"),
     )
