@@ -16,7 +16,7 @@ aggregate down).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import ratio
@@ -31,6 +31,27 @@ def _intervals(events: DataFrame) -> DataFrame:
             (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)))
             / F.lit(86400.0 * 1_000_000)
         ).alias("interval_days"),
+    )
+
+
+def cadence_label(
+    observations: Column, changes: Column, center_days: Column, cv: Column
+) -> Column:
+    """The cadence bucket of classifier.py ``_cadence_for`` from the
+    observation/change counts, the interval centre and the CV. The
+    batch operator passes the interval median; the streaming monitor
+    passes the mean, the centre it can keep in O(1) state."""
+    return (
+        F.when((observations >= 6) & (changes < 2), F.lit("ad_hoc"))
+        .when(changes < 3, F.lit("insufficient_data"))
+        .when(cv > 0.75, F.lit("irregular"))
+        .when((observations >= 30) & (center_days <= 1.5), F.lit("daily"))
+        .when(
+            (observations >= 8) & (center_days >= 5) & (center_days <= 10),
+            F.lit("weekly"),
+        )
+        .when((center_days >= 25) & (center_days <= 35), F.lit("monthly"))
+        .otherwise(F.lit("irregular"))
     )
 
 
@@ -66,26 +87,6 @@ def freshness_cadence(events: DataFrame) -> DataFrame:
         (F.col("changes") >= 2) & (F.col("mean_interval") != 0),
         F.col("sd") / F.col("mean_interval"),
     )
-    cadence = (
-        F.when((F.col("observations") >= 6) & (F.col("changes") < 2), F.lit("ad_hoc"))
-        .when(F.col("changes") < 3, F.lit("insufficient_data"))
-        .when(cv > 0.75, F.lit("irregular"))
-        .when(
-            (F.col("observations") >= 30) & (F.col("median_interval_days") <= 1.5),
-            F.lit("daily"),
-        )
-        .when(
-            (F.col("observations") >= 8)
-            & (F.col("median_interval_days") >= 5)
-            & (F.col("median_interval_days") <= 10),
-            F.lit("weekly"),
-        )
-        .when(
-            (F.col("median_interval_days") >= 25) & (F.col("median_interval_days") <= 35),
-            F.lit("monthly"),
-        )
-        .otherwise(F.lit("irregular"))
-    )
     confidence = (
         F.when((F.col("changes") < 3) | (F.col("observations") < 6), F.lit("low"))
         .when((F.col("observations") >= 30) & (cv.isNull() | (cv <= 0.25)), F.lit("high"))
@@ -98,7 +99,9 @@ def freshness_cadence(events: DataFrame) -> DataFrame:
         "changes",
         ratio(F.col("median_interval_days")).alias("median_interval_days"),
         ratio(cv).alias("cv"),
-        cadence.alias("suggested_cadence"),
+        cadence_label(
+            F.col("observations"), F.col("changes"), F.col("median_interval_days"), cv
+        ).alias("suggested_cadence"),
         confidence.alias("confidence"),
         "last_observed_at",
     ).orderBy("user_id")
@@ -543,25 +546,32 @@ def observations_from_events(events: DataFrame) -> DataFrame:
     )
 
 
-def _folded_observations(events: DataFrame) -> DataFrame:
-    """The shared append fold: every observation row with its key's
-    previous source timestamp (lag over the full history — the
-    reference's forward-carried ``latest`` map), the precision-aware
-    ``changed`` flag, and exact integer-cents intervals (the micro_div
-    convention: no double ever touches the .xx5 boundary). Consumed by
-    the batch append (batch rows only) and the latest-snapshot view
-    (final row per key)."""
+def _lagged_observations(events: DataFrame) -> DataFrame:
+    """Every observation row with its key's previous source timestamp
+    (lag over the full history — the reference's forward-carried
+    ``latest`` map) and the previous row's timestamp when that row was
+    an OK probe (``prev_mod_ts``)."""
     obs = observations_from_events(events)
     w = Window.partitionBy("watch_id", "resource_key").orderBy(
         "ts", "event_id"
     )
     prev_str = F.lag("source_modified_at").over(w)
     prev_ts = F.lag(F.when(F.col("status") == "ok", F.col("ts"))).over(w)
-    lagged = obs.select(
+    return obs.select(
         "*",
         F.coalesce(prev_str, F.lit("")).alias("previous_source_modified_at"),
         prev_ts.alias("prev_mod_ts"),
     )
+
+
+def observation_changes(lagged: DataFrame) -> DataFrame:
+    """The append fold's tail over lagged rows (``ts``, ``status``,
+    ``precision``, ``source_modified_at``,
+    ``previous_source_modified_at``, ``prev_mod_ts``): the
+    precision-aware ``changed`` flag and exact integer-cents intervals
+    (the micro_div convention: no double ever touches the .xx5
+    boundary). The batch lag window and the streaming state fold both
+    end here, so their rows agree by construction."""
     cur_ok = (F.col("status") == "ok") & (F.col("source_modified_at") != "")
     prev_ok = F.col("previous_source_modified_at") != ""
     same = F.when(
@@ -586,6 +596,12 @@ def _folded_observations(events: DataFrame) -> DataFrame:
         F.when(changed, _cents(36_000_000)).alias("interval_hours"),
         F.when(changed, _cents(864_000_000)).alias("interval_days"),
     )
+
+
+def _folded_observations(events: DataFrame) -> DataFrame:
+    """The shared append fold, consumed by the batch append (batch
+    rows only) and the latest-snapshot view (final row per key)."""
+    return observation_changes(_lagged_observations(events))
 
 
 def freshness_observations_append(

@@ -13,13 +13,25 @@ down — no global ordering of raw events anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from forest_open_data_pipelines_spark.functions.columns import micro_div, money, ratio, scaled_round
 from forest_open_data_pipelines_spark.runtime import persist
 
 SESSION_GAP_MINUTES = 30
+
+
+def session_duration_minutes(start: Column, end: Column) -> Column:
+    """Session length in minutes at 6 dp, shared by the batch and
+    streaming sessionizers. Scale-then-round: micros/60 hits exact N.5
+    doubles at the 6-dp boundary (both engines round those
+    identically), where round(micros/6e7, 6) splits between Spark's
+    decimal-string HALF_UP and DuckDB's binary round (caught by the
+    sf0.1 sweep: 2 boundary sessions)."""
+    return F.round(
+        (F.unix_micros(end) - F.unix_micros(start)) / F.lit(60.0), 0
+    ) / F.lit(1000000.0)
 
 
 def events_sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
@@ -55,19 +67,9 @@ def events_sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES)
             F.max("ts").alias("session_end"),
             F.count("*").alias("n_events"),
             money(F.sum("value")).alias("total_value"),
-            # scale-then-round: micros/60 hits exact N.5 doubles at the
-            # 6-dp boundary (both engines round those identically),
-            # where round(micros/6e7, 6) splits between Spark's
-            # decimal-string HALF_UP and DuckDB's binary round
-            # (caught by the sf0.1 sweep: 2 boundary sessions)
-            (
-                F.round(
-                    (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts")))
-                    / F.lit(60.0),
-                    0,
-                )
-                / F.lit(1000000.0)
-            ).alias("duration_minutes"),
+            session_duration_minutes(F.min("ts"), F.max("ts")).alias(
+                "duration_minutes"
+            ),
         )
         .orderBy("user_id", "session_seq")
     )

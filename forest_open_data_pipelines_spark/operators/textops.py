@@ -2358,6 +2358,15 @@ def charlm_bigrams() -> Column:
     )
 
 
+def _lp_micro(n12: Column, n1: Column, v: Column) -> Column:
+    """Add-one-smoothed bigram log-prob log2((n12 + 1) / (n1 + V)) in
+    integer micro-bits — the quantization the batch model and the
+    streaming gate's unseen-bigram fallbacks (n12 = 0) share."""
+    return F.round(
+        F.log2((n12 + 1).cast("double") / (n1 + v)) * F.lit(1e6), 0
+    ).cast("long")
+
+
 def _charlm_model(base: DataFrame, ex: DataFrame) -> DataFrame:
     """Add-one-smoothed bigram model from a (doc_id, t) clean-text
     frame and its exploded bigram stream: (bg, lp_micro) with the
@@ -2382,17 +2391,12 @@ def _charlm_model(base: DataFrame, ex: DataFrame) -> DataFrame:
         .where(F.col("c") != "")
         .agg(F.countDistinct("c").alias("v"))
     )
-    lp_micro = F.round(
-        F.log2(
-            (F.col("n12") + 1).cast("double") / (F.col("n1") + F.col("v"))
-        )
-        * F.lit(1e6),
-        0,
-    ).cast("long")
     return (
         counts.join(prefix, F.substring("bg", 1, 1) == F.col("c1"))
         .crossJoin(F.broadcast(vocab))
-        .select("bg", lp_micro.alias("lp_micro"))
+        .select(
+            "bg", _lp_micro(F.col("n12"), F.col("n1"), F.col("v")).alias("lp_micro")
+        )
     )
 
 

@@ -1,32 +1,12 @@
 """Streaming telemetry anomaly watch — the unbounded twin of
 ``operators.sessionize.daily_anomaly_report``.
 
-The scorer needs each type's FULL trailing daily-count history, which
-no watermark-bounded state can hold — so the correct streaming shape
-is the incremental-cache bridge (the year-cache precedent in
-``streaming/windowed.py``): every micro-batch lands its per-day count
-DELTAS in a parquet cache partitioned by batch_id, then re-scores the
-accumulated counts and hands the report to the sink.
-
-Exactly-once effect under at-least-once foreachBatch: a replayed batch
-OVERWRITES its own batch_id partition (dynamic partition overwrite),
-so its counts can never double — the aggregate over deltas converges
-to the batch operator's counts, and the scores are a pure function of
-them (parity asserted in tests). The counts cache is (types × days ×
-batches) rows — metadata-weight next to the event stream.
-
-Lifecycle contract (review findings, documented deliberately):
-- The cache and the checkpoint MUST be retained or wiped TOGETHER: a
-  reset checkpoint restarts batch ids at 0, and dynamic overwrite
-  would then fold a new incarnation's deltas over a previous one's.
-- The cache grows one tiny batch_id partition per micro-batch.
-  Bounding it is the OFFLINE maintenance fold shipped below as
-  ``compact_anomaly_cache`` (pause → fold all but the newest
-  partitions into a baseline partition at a NEW path → resume
-  pointed at it); inline compaction is intentionally omitted — a
-  full-cache rewrite inside a batch that can replay has no safe
-  idempotence story, while the pause-and-fold is exactly the
-  compact_parquet-style job every lake already runs.
+The scorer needs each type's FULL trailing daily-count history, so the
+stream runs on the shared delta-cache bridge (``streaming/delta_cache.py``,
+whose docstring holds the cache-plus-checkpoint lifecycle contract):
+each micro-batch lands its per-(event_type, day) count deltas, then the
+accumulated counts are scored by the batch report's own
+``anomaly_scores`` tail (parity asserted in tests).
 """
 
 from __future__ import annotations
@@ -40,6 +20,13 @@ from forest_open_data_pipelines_spark.operators.sessionize import (
     anomaly_scores,
     spine_fill,
 )
+from forest_open_data_pipelines_spark.streaming.delta_cache import (
+    BASELINE_BATCH_ID,
+    compact_delta_cache,
+    delta_cache_stream,
+)
+
+__all__ = ["BASELINE_BATCH_ID", "anomaly_watch_stream", "compact_anomaly_cache"]
 
 
 def anomaly_watch_stream(
@@ -54,39 +41,20 @@ def anomaly_watch_stream(
     accumulated counts (identical ``anomaly_scores`` tail to the batch
     report) and call ``sink(report_df, batch_id)``."""
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            # a fresh source can fire an empty batch 0: writing it
-            # would leave a footer-less cache that the read below
-            # cannot infer a schema from — idle instead of crashing
-            return
-        deltas = (
-            batch_df.groupBy("event_type", F.to_date("ts").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .withColumn("batch_id", F.lit(batch_id))
+    def _deltas(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+            F.count(F.lit(1)).alias("n_events")
         )
-        (
-            deltas.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(cache_path)
-        )
-        counts = (
-            spark.read.parquet(cache_path)
-            .groupBy("event_type", "day")
-            .agg(F.sum("n_events").cast("long").alias("n_events"))
-        )
-        sink(anomaly_scores(spine_fill(counts), **score_kwargs), batch_id)
 
-    return (
-        events_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    def _report(acc: DataFrame) -> DataFrame:
+        counts = acc.groupBy("event_type", "day").agg(
+            F.sum("n_events").cast("long").alias("n_events")
+        )
+        return anomaly_scores(spine_fill(counts), **score_kwargs)
+
+    return delta_cache_stream(
+        events_stream, cache_path, checkpoint, _deltas, _report, sink
     )
-
-
-BASELINE_BATCH_ID = -1
 
 
 def compact_anomaly_cache(
@@ -95,58 +63,14 @@ def compact_anomaly_cache(
     dst_cache: str,
     keep_last: int = 1,
 ) -> dict[str, int]:
-    """The pause-and-fold offline compaction of the anomaly counts
-    cache — the maintenance job the module docstring promises (run it
-    while the stream is STOPPED, then resume the stream pointed at
-    ``dst_cache`` with the SAME checkpoint).
-
-    Folds every batch_id partition except the newest ``keep_last``
-    into one baseline partition (batch_id = ``BASELINE_BATCH_ID``,
-    which real micro-batch ids — monotonically increasing from 0 —
-    can never collide with; a previous baseline folds in again), and
-    copies the kept partitions verbatim. The newest partitions stay
-    un-folded so an at-least-once REPLAY of the last committed batch
-    after an unclean stop still overwrites its own live partition
-    instead of double-adding deltas the baseline already absorbed.
-
-    Writes the compacted cache to a NEW path (the ``compact_parquet``
-    crash-safety protocol: a mid-job crash leaves ``src_cache``
-    untouched and the job idempotently re-runnable); the caller swaps
-    the stream's cache_path on resume. The per-(event_type, day)
-    totals are IDENTICAL before and after by construction — asserted
-    in the restart-convergence test.
-
-    Scale: the cache is (types × days × batches) count rows —
-    metadata-weight; the fold is one groupBy over it and the rewrite
-    is one shuffle-free partitioned write.
-    """
-    cache = spark.read.parquet(src_cache)
-    ids = sorted(
-        r[0] for r in cache.select("batch_id").distinct().collect()
+    """Pause-and-fold compaction of the counts cache
+    (``delta_cache.compact_delta_cache``): per (event_type, day) the
+    ``n_events`` deltas sum."""
+    return compact_delta_cache(
+        spark,
+        src_cache,
+        dst_cache,
+        ["event_type", "day"],
+        [F.sum("n_events").cast("long").alias("n_events")],
+        keep_last,
     )
-    keep_last = max(0, keep_last)
-    # clamp the split point: keep_last > #partitions must fold NOTHING
-    # (a negative slice bound would silently fold the oldest batches,
-    # shrinking the documented replay-safety margin)
-    cut = max(0, len(ids) - keep_last) if keep_last else len(ids)
-    fold_ids = ids[:cut]
-    kept_ids = ids[cut:]
-    folded = (
-        cache.where(F.col("batch_id").isin(fold_ids))
-        .groupBy("event_type", "day")
-        .agg(F.sum("n_events").cast("long").alias("n_events"))
-        .withColumn("batch_id", F.lit(BASELINE_BATCH_ID))
-    )
-    kept = cache.where(F.col("batch_id").isin(kept_ids))
-    out = folded.unionByName(kept) if kept_ids else folded
-    (
-        out.select("event_type", "day", "n_events", "batch_id")
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(dst_cache)
-    )
-    return {
-        "partitions_before": len(ids),
-        "partitions_folded": len(fold_ids),
-        "partitions_after": (1 if fold_ids else 0) + len(kept_ids),
-    }

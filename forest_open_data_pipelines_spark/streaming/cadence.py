@@ -12,29 +12,31 @@ output mode, no unbounded buffering of raw events.
 Streaming-vs-batch semantics: the batch classifier uses the interval
 MEDIAN, which is not incrementally maintainable in O(1) state; the
 stream maintains count/mean/variance (Welford-style via sum/sumsq) and
-classifies on the mean. Fields shared with the batch operator
-(observations, changes, cv, last_observed_at) are bit-compatible and
-tested for parity once the stream drains.
+classifies on the mean. The pandas update emits only those raw sums;
+the rounding and the label are the batch operator's own columns
+(``functions.columns.ratio``, ``freshness.cadence_label``).
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from forest_open_data_pipelines_spark.functions.columns import ratio
+from forest_open_data_pipelines_spark.operators.freshness import cadence_label
 
 STATE_SCHEMA = StructType(
     [
@@ -51,42 +53,13 @@ OUTPUT_SCHEMA = StructType(
         StructField("user_id", LongType()),
         StructField("observations", LongType()),
         StructField("changes", LongType()),
-        StructField("mean_interval_days", DoubleType()),
-        StructField("cv", DoubleType()),
-        StructField("suggested_cadence", StringType()),
+        StructField("sum_intervals", DoubleType()),
+        StructField("sumsq_intervals", DoubleType()),
         StructField("last_observed_at", TimestampType()),
     ]
 )
 
 _US_PER_DAY = 86_400_000_000
-
-
-def _ratio_half_up(v: float) -> float:
-    """Python twin of ``functions.columns.ratio``: round(v·10⁶) at 0 dp
-    HALF_UP on the double's shortest decimal rendering (what Spark's
-    F.round(y, 0) computes), then /10⁶."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    y = v * 1e6
-    return float(Decimal(repr(y)).quantize(Decimal("1"), rounding=ROUND_HALF_UP)) / 1e6
-
-
-def _classify(observations: int, changes: int, mean: float | None, cv: float | None) -> str:
-    """Mean-based cadence buckets mirroring freshness/classifier.py
-    (median swapped for mean — see module docstring)."""
-    if observations >= 6 and changes < 2:
-        return "ad_hoc"
-    if changes < 3:
-        return "insufficient_data"
-    if cv is not None and cv > 0.75:
-        return "irregular"
-    if observations >= 30 and mean is not None and mean <= 1.5:
-        return "daily"
-    if observations >= 8 and mean is not None and 5 <= mean <= 10:
-        return "weekly"
-    if mean is not None and 25 <= mean <= 35:
-        return "monthly"
-    return "irregular"
 
 
 def _update_cadence(
@@ -114,25 +87,13 @@ def _update_cadence(
             last_us = ts_us
 
     state.update((observations, changes, s, s2, last_us))
-
-    mean = s / changes if changes else None
-    cv = None
-    if changes >= 2 and mean:
-        var = max(s2 / changes - mean * mean, 0.0)
-        cv = math.sqrt(var) / mean
     yield pd.DataFrame(
         {
             "user_id": [user_id],
             "observations": [observations],
             "changes": [changes],
-            # scale-then-round twin of columns.ratio (batch freshness
-            # rounds through round(x·10⁶)/10⁶ half-up; Python's bare
-            # round is banker's and diverges at exact halves)
-            "mean_interval_days": [
-                _ratio_half_up(mean) if mean is not None else None
-            ],
-            "cv": [_ratio_half_up(cv) if cv is not None else None],
-            "suggested_cadence": [_classify(observations, changes, mean, cv)],
+            "sum_intervals": [s],
+            "sumsq_intervals": [s2],
             "last_observed_at": [pd.Timestamp(last_us, unit="us")],
         }
     )
@@ -143,7 +104,7 @@ def cadence_monitor_stream(events_stream: DataFrame) -> DataFrame:
 
     Output (update mode): one row per user per micro-batch in which the
     user appeared, carrying the cumulative classification."""
-    return events_stream.select("user_id", "ts", "event_id").groupBy(
+    raw = events_stream.select("user_id", "ts", "event_id").groupBy(
         "user_id"
     ).applyInPandasWithState(
         _update_cadence,
@@ -151,4 +112,19 @@ def cadence_monitor_stream(events_stream: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    changes = F.col("changes")
+    mean = F.when(changes > 0, F.col("sum_intervals") / changes)
+    var = F.greatest(F.col("sumsq_intervals") / changes - mean * mean, F.lit(0.0))
+    cv = F.when((changes >= 2) & (mean != 0), F.sqrt(var) / mean)
+    return raw.select(
+        "user_id",
+        "observations",
+        "changes",
+        ratio(mean).alias("mean_interval_days"),
+        ratio(cv).alias("cv"),
+        cadence_label(F.col("observations"), changes, mean, cv).alias(
+            "suggested_cadence"
+        ),
+        "last_observed_at",
     )

@@ -232,6 +232,7 @@ def charlm_gate_stream(
     from forest_open_data_pipelines_spark.operators.textops import (
         CHARLM_MAX_ENTROPY_BITS,
         _charlm_model,
+        _lp_micro,
         charlm_bigrams,
         clean_text,
     )
@@ -247,26 +248,25 @@ def charlm_gate_stream(
             "stream-static broadcast join against the model table "
             "instead of the literal fold."
         )
-    # unseen-bigram fallbacks reconstruct the batch quantization with
-    # n12 = 0: per-prefix n1 from the training stream, uniform 1/V floor
-    import math
-
-    prefix_rows = (
-        ex.groupBy(F.substring("bg", 1, 1).alias("c1"))
-        .agg(F.count(F.lit(1)).alias("n1"))
-        .collect()
-    )
-    v = (
+    # unseen-bigram fallbacks: the batch quantization with n12 = 0,
+    # per-prefix n1 from the training stream, uniform 1/V floor
+    vocab = (
         base.select(F.explode(F.split("t", "")).alias("c"))
         .where(F.col("c") != "")
         .agg(F.countDistinct("c").alias("v"))
-        .collect()[0]["v"]
     )
+    zero, v = F.lit(0), F.col("v")
     prefix_lp = {
-        r["c1"]: int(round(math.log2(1.0 / (r["n1"] + v)) * 1e6))
-        for r in prefix_rows
+        r["c1"]: r["lp"]
+        for r in ex.groupBy(F.substring("bg", 1, 1).alias("c1"))
+        .agg(F.count(F.lit(1)).alias("n1"))
+        .crossJoin(vocab)
+        .select("c1", _lp_micro(zero, F.col("n1"), v).alias("lp"))
+        .collect()
     }
-    floor_lp = int(round(math.log2(1.0 / v) * 1e6)) if v else 0
+    floor_lp = vocab.select(
+        F.when(v > 0, _lp_micro(zero, zero, v)).otherwise(0)
+    ).collect()[0][0]
     m = F.create_map(
         *[
             c

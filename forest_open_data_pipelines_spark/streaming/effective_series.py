@@ -13,20 +13,10 @@ cache partitioned by batch_id, then the accumulated feed is truncated
 at the reference month and merged over the zip series by the SAME
 ``effective_series_merge`` tail the batch operator runs.
 
-Exactly-once effect under at-least-once foreachBatch: a replayed batch
-OVERWRITES its own batch_id partition (dynamic partition overwrite),
-so its deltas can never double — the accumulated aggregate converges
-to the batch operator's mensal feed. Cache and checkpoint must be
-retained or wiped TOGETHER (the anomaly_watch lifecycle contract).
-
-Cache lifecycle (r11 ADVICE): the batch_id partitioning grows one
-parquet partition per micro-batch and every batch re-reads the whole
-cache, so a long-running stream runs the periodic PAUSE-AND-FOLD
-maintenance job ``compact_effective_series_cache`` (the
-``compact_anomaly_cache`` protocol): all but the newest partitions
-fold into one per-period baseline partition, keeping the recent
-batch_ids replayable for the exactly-once overwrite; per-period
-totals are identical before and after by construction.
+The bridge, its exactly-once replay and its cache-plus-checkpoint
+lifecycle contract live in ``streaming/delta_cache.py``; this module
+binds the per-period delta aggregation, the truncate-and-merge report
+and the merge columns of ``compact_effective_series_cache``.
 
 Float note: the batch operator rounds ``money(sum(value))`` over raw
 events in one pass; the stream sums RAW per-batch partials and rounds
@@ -51,6 +41,17 @@ from forest_open_data_pipelines_spark.operators.timeseries import (
     monthly_series,
 )
 from forest_open_data_pipelines_spark.runtime import persist
+from forest_open_data_pipelines_spark.streaming.delta_cache import (
+    BASELINE_BATCH_ID,
+    compact_delta_cache,
+    delta_cache_stream,
+)
+
+__all__ = [
+    "BASELINE_BATCH_ID",
+    "compact_effective_series_cache",
+    "effective_series_stream",
+]
 
 
 def effective_series_stream(
@@ -71,29 +72,14 @@ def effective_series_stream(
 
     zip_series = persist(monthly_series(enriched))
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            # a fresh source can fire an empty batch 0: writing it
-            # would leave a footer-less cache the read below cannot
-            # infer a schema from — idle instead of crashing
-            return
-        deltas = (
-            batch_df.groupBy(period_month(F.col("ts")).alias("period"))
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("value").alias("value_sum"),
-                F.max("ts").alias("max_ts"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
+    def _deltas(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(period_month(F.col("ts")).alias("period")).agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("value").alias("value_sum"),
+            F.max("ts").alias("max_ts"),
         )
-        (
-            deltas.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(cache_path)
-        )
-        acc = spark.read.parquet(cache_path)
+
+    def _report(acc: DataFrame) -> DataFrame:
         ref = acc.agg(
             F.year(F.max("max_ts")).alias("cal_year"),
             (F.month(F.max("max_ts")) - F.lit(offset)).alias("ref_month"),
@@ -114,16 +100,11 @@ def effective_series_stream(
             )
             .select("period", "n_orders", "total_price")
         )
-        sink(effective_series_merge(zip_series, mensal, ref), batch_id)
+        return effective_series_merge(zip_series, mensal, ref)
 
-    return (
-        events_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return delta_cache_stream(
+        events_stream, cache_path, checkpoint, _deltas, _report, sink
     )
-
-
-BASELINE_BATCH_ID = -1
 
 
 def compact_effective_series_cache(
@@ -132,54 +113,20 @@ def compact_effective_series_cache(
     dst_cache: str,
     keep_last: int = 1,
 ) -> dict[str, int]:
-    """Pause-and-fold compaction of the per-period deltas cache — the
-    maintenance job bounding a long-running stream's per-batch re-read
-    cost and small-file count (r11 ADVICE; the
-    ``compact_anomaly_cache`` protocol: run while the stream is
-    STOPPED, then resume pointed at ``dst_cache`` with the SAME
-    checkpoint).
-
-    Folds every batch_id partition except the newest ``keep_last``
-    into one baseline partition (batch_id = ``BASELINE_BATCH_ID``,
-    which real micro-batch ids can never collide with; a previous
-    baseline folds in again): per period the deltas SUM (n_orders,
-    value_sum) and MAX (max_ts), so the accumulated aggregate — and
-    therefore the truncated mensal feed and the merged series — is
-    identical before and after, asserted in the parity test.  The
-    newest partitions stay un-folded so an at-least-once replay of the
-    last committed batch still overwrites its own live partition.
-
-    Writes to a NEW path (crash-safe: a mid-job crash leaves
-    ``src_cache`` untouched and the job idempotently re-runnable).
-    Scale: the cache is (periods × batches) aggregate rows —
-    metadata-weight; the fold is one groupBy over it.
-    """
-    cache = spark.read.parquet(src_cache)
-    ids = sorted(r[0] for r in cache.select("batch_id").distinct().collect())
-    keep_last = max(0, keep_last)
-    cut = max(0, len(ids) - keep_last) if keep_last else len(ids)
-    fold_ids = ids[:cut]
-    kept_ids = ids[cut:]
-    folded = (
-        cache.where(F.col("batch_id").isin(fold_ids))
-        .groupBy("period")
-        .agg(
+    """Pause-and-fold compaction of the per-period deltas cache
+    (``delta_cache.compact_delta_cache``): per period the deltas SUM
+    (n_orders, value_sum) and MAX (max_ts), so the accumulated
+    aggregate — and therefore the truncated mensal feed and the merged
+    series — is identical before and after."""
+    return compact_delta_cache(
+        spark,
+        src_cache,
+        dst_cache,
+        ["period"],
+        [
             F.sum("n_orders").cast("long").alias("n_orders"),
             F.sum("value_sum").alias("value_sum"),
             F.max("max_ts").alias("max_ts"),
-        )
-        .withColumn("batch_id", F.lit(BASELINE_BATCH_ID))
+        ],
+        keep_last,
     )
-    kept = cache.where(F.col("batch_id").isin(kept_ids))
-    out = folded.unionByName(kept) if kept_ids else folded
-    (
-        out.select("period", "n_orders", "value_sum", "max_ts", "batch_id")
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(dst_cache)
-    )
-    return {
-        "partitions_before": len(ids),
-        "partitions_folded": len(fold_ids),
-        "partitions_after": (1 if fold_ids else 0) + len(kept_ids),
-    }

@@ -5,15 +5,17 @@ The reference appends observations in nightly batches
 (``freshness/storage.py:91-151``), carrying a ``latest`` map keyed by
 (watch_id, resource_key) forward through the batch; the batch operator
 re-expresses that fold as a lag window. Here the SAME fold runs
-continuously: the latest (source timestamp string, parsed micros) pair
-per key lives in the state store via ``applyInPandasWithState`` —
-bounded state (two scalars per key), append output mode, no buffering
-of raw events. Every emitted row carries the precision-aware
-``changed`` flag and the exact integer-cents intervals, byte-compatible
-with the batch operator (parity asserted in tests once the stream
-drains, including across multiple micro-batches — state carries the
-chain over batch boundaries exactly like the reference's map carries
-it over nightly runs).
+continuously: the lag — the previous source timestamp string and the
+previous OK probe's micros — per key lives in the state store via
+``applyInPandasWithState`` — bounded state (two scalars per key),
+append output mode, no buffering of raw events. The fold emits only
+that lag; the precision-aware ``changed`` flag and the exact
+integer-cents intervals are the batch operator's own
+``observation_changes`` tail, so stream and batch rows agree by
+construction (parity asserted in tests once the stream drains,
+including across multiple micro-batches — state carries the chain
+over batch boundaries exactly like the reference's map carries it
+over nightly runs).
 
 Ordering contract (same as the reference's append loop): batches must
 arrive in source-time order per key — the fold sorts WITHIN a batch by
@@ -33,8 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -58,22 +58,9 @@ OUTPUT_SCHEMA = StructType(
         StructField("precision", StringType()),
         StructField("status", StringType()),
         StructField("previous_source_modified_at", StringType()),
-        StructField("changed", BooleanType()),
-        StructField("interval_hours", DoubleType()),
-        StructField("interval_days", DoubleType()),
+        StructField("prev_mod_ts", TimestampType()),
     ]
 )
-
-_EPOCH = pd.Timestamp(0)
-
-
-def _cents(diff_us: int, unit_us: int) -> float:
-    """Exact integer half-up at 2 dp — the micro_div convention shared
-    with the batch operator's Catalyst expression."""
-    return (
-        diff_us // unit_us + (1 if (diff_us % unit_us) * 2 >= unit_us else 0)
-    ) / 100.0
-
 
 def _append_fold(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -93,31 +80,14 @@ def _append_fold(
     # order; the batch twin's lag window orders identically
     rows.sort(key=lambda r: (r[0], r[1]))
     for ts, _eid, status, cur, precision in rows:
-        ts_us = int((ts - _EPOCH).value // 1_000)
-        changed = False
-        ih = idays = None
-        if status == "ok" and cur and prev_str:
-            if precision == "date":
-                same = ts.date() == pd.Timestamp(prev_us * 1_000).date()
-            else:
-                same = cur == prev_str
-            changed = not same
-            if changed:
-                diff = ts_us - prev_us
-                ih = _cents(diff, 36_000_000)
-                idays = _cents(diff, 864_000_000)
+        prev_ts = None if prev_us is None else pd.Timestamp(prev_us, unit="us")
         out.append(
-            (
-                watch_id, resource_key, ts, cur, precision, status,
-                prev_str, changed, ih, idays,
-            )
+            (watch_id, resource_key, ts, cur, precision, status, prev_str, prev_ts)
         )
-        prev_str, prev_us = cur, (ts_us if status == "ok" else prev_us)
-        if status != "ok":
-            # an error probe's parse is None — the next change interval
-            # must come from the last OK timestamp string the reference
-            # would re-parse, which is '' here, so clear it
-            prev_us = None
+        # an error probe carries no timestamp forward: the next change
+        # interval must come from an OK probe, as in the batch lag
+        prev_str = cur
+        prev_us = ts.value // 1_000 if status == "ok" else None  # ns → µs
     state.update((prev_str, prev_us))
     yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
 
@@ -130,14 +100,16 @@ def observations_append_stream(events_stream: DataFrame) -> DataFrame:
     construction; ``observed_at`` is omitted (the batch scalar is the
     append call's clock — a stream has no global max)."""
     from forest_open_data_pipelines_spark.operators.freshness import (
+        observation_changes,
         observations_from_events,
     )
 
     obs = observations_from_events(events_stream)
-    return obs.groupBy("watch_id", "resource_key").applyInPandasWithState(
+    lagged = obs.groupBy("watch_id", "resource_key").applyInPandasWithState(
         _append_fold,
         OUTPUT_SCHEMA,
         STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
     )
+    return observation_changes(lagged).drop("prev_mod_ts")

@@ -7,7 +7,9 @@ session (gap ≤ 30 min) or closes it — the closed session is emitted
 with the same columns and the same ``session_seq`` numbering the batch
 operator produces, so a drained stream's closed sessions are
 row-identical to the batch result minus each user's final
-(still-open) session. Tests assert exactly that.
+(still-open) session. Tests assert exactly that. The kernel emits raw
+value sums; ``total_value`` and ``duration_minutes`` are the batch
+operator's own ``money`` and ``session_duration_minutes`` columns.
 
 State is O(1) per user regardless of stream length — the shape that
 holds at 100 TB/day. Session closure here is data-driven (next event
@@ -24,6 +26,7 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -33,7 +36,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from forest_open_data_pipelines_spark.operators.sessionize import SESSION_GAP_MINUTES
+from forest_open_data_pipelines_spark.functions.columns import money
+from forest_open_data_pipelines_spark.operators.sessionize import (
+    SESSION_GAP_MINUTES,
+    session_duration_minutes,
+)
 
 STATE_SCHEMA = StructType(
     [
@@ -52,39 +59,11 @@ OUTPUT_SCHEMA = StructType(
         StructField("session_start", TimestampType()),
         StructField("session_end", TimestampType()),
         StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("duration_minutes", DoubleType()),
+        StructField("sum_value", DoubleType()),
     ]
 )
 
 _US_PER_MIN = 60 * 1_000_000
-
-
-def _round_half_up(v: float, dp: int) -> float:
-    """Spark's F.round is HALF_UP on the decimal rendering of the
-    double; Python's built-in round is banker's — they disagree one ulp
-    at exact .5 boundaries, which breaks batch-parity equality."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(v)).quantize(Decimal(f"1e-{dp}"), rounding=ROUND_HALF_UP))
-
-
-def _session_row(
-    user_id: int, seq: int, start_us: int, last_us: int, n: int, total: float
-) -> dict[str, Any]:
-    return {
-        "user_id": user_id,
-        "session_seq": seq,
-        "session_start": pd.Timestamp(start_us, unit="us"),
-        "session_end": pd.Timestamp(last_us, unit="us"),
-        "n_events": n,
-        "total_value": _round_half_up(total, 2),
-        # scale-then-round, the batch twin's exact formula
-        # (operators/sessionize.py duration_minutes): round(µs/60) at
-        # 0 dp half-up, then /10⁶ — N.5 doubles are exact so this
-        # matches F.round(µs/60.0, 0)/1e6 on every input
-        "duration_minutes": _round_half_up((last_us - start_us) / 60.0, 0) / 1e6,
-    }
 
 
 def _update_sessions(
@@ -104,9 +83,7 @@ def _update_sessions(
     # Columnar output accumulators (optimization r12: a drained sf0.1
     # stream emits ~94k closed sessions — one dict + two pd.Timestamp
     # objects per row made the OUTPUT assembly the kernel's dominant
-    # cost after the segment kernel itself was vectorized). The two
-    # HALF_UP roundings stay per-row Decimal so every emitted float is
-    # bit-identical to the former _session_row path.
+    # cost after the segment kernel itself was vectorized).
     o_seq: list[int] = []
     o_start: list[int] = []
     o_end: list[int] = []
@@ -189,25 +166,14 @@ def _update_sessions(
             total = float(seg_sums[-1])
 
     state.update((closed, start_us, last_us, n, total))
-    start_a = np.asarray(o_start, dtype="int64")
-    end_a = np.asarray(o_end, dtype="int64")
     yield pd.DataFrame(
         {
             "user_id": np.full(len(o_seq), user_id, dtype="int64"),
             "session_seq": np.asarray(o_seq, dtype="int64"),
-            "session_start": pd.to_datetime(start_a, unit="us"),
-            "session_end": pd.to_datetime(end_a, unit="us"),
+            "session_start": pd.to_datetime(np.asarray(o_start, dtype="int64"), unit="us"),
+            "session_end": pd.to_datetime(np.asarray(o_end, dtype="int64"), unit="us"),
             "n_events": np.asarray(o_n, dtype="int64"),
-            "total_value": np.asarray(
-                [_round_half_up(t, 2) for t in o_tot], dtype="float64"
-            ),
-            "duration_minutes": np.asarray(
-                [
-                    _round_half_up((e - s) / 60.0, 0) / 1e6
-                    for s, e in zip(o_start, o_end)
-                ],
-                dtype="float64",
-            ),
+            "sum_value": np.asarray(o_tot, dtype="float64"),
         }
     )
 
@@ -215,7 +181,7 @@ def _update_sessions(
 def sessionize_stream(events_stream: DataFrame) -> DataFrame:
     """Per-user gap sessionization over the event stream; emits each
     session the moment an event closes it (append semantics)."""
-    return events_stream.select("user_id", "ts", "event_id", "value").groupBy(
+    raw = events_stream.select("user_id", "ts", "event_id", "value").groupBy(
         "user_id"
     ).applyInPandasWithState(
         _update_sessions,
@@ -223,4 +189,15 @@ def sessionize_stream(events_stream: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return raw.select(
+        "user_id",
+        "session_seq",
+        "session_start",
+        "session_end",
+        "n_events",
+        money(F.col("sum_value")).alias("total_value"),
+        session_duration_minutes(F.col("session_start"), F.col("session_end")).alias(
+            "duration_minutes"
+        ),
     )

@@ -3,6 +3,8 @@ equal the batch twin (``events_windowed``) once the stream drains."""
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 import pytest
@@ -111,16 +113,27 @@ def test_sessionize_kernel_vectorized_matches_loop_reference():
     cannot isolate: carried session EXTENDED by a later chunk, carried
     session CLOSED by the gap, several sessions inside one chunk, a
     multi-chunk micro-batch, and float totals whose fold order the
-    kernel must reproduce exactly."""
+    kernel must reproduce exactly. The kernel emits raw sums (the
+    rounding is the batch columns' job, checked end to end by the
+    drain test), so the reference emits raw rows too."""
     import pandas as pd
 
     from forest_open_data_pipelines_spark.operators.sessionize import (
         SESSION_GAP_MINUTES,
     )
     from forest_open_data_pipelines_spark.streaming.sessions import (
-        _session_row,
         _update_sessions,
     )
+
+    def _session_row(user_id, seq, start_us, last_us, n, total):
+        return {
+            "user_id": user_id,
+            "session_seq": seq,
+            "session_start": pd.Timestamp(start_us, unit="us"),
+            "session_end": pd.Timestamp(last_us, unit="us"),
+            "n_events": n,
+            "sum_value": total,
+        }
 
     class FakeState:
         def __init__(self):
@@ -254,6 +267,205 @@ def test_sessionize_stream_matches_batch_closed_sessions(spark, tmp_path):
     }
     assert len(got) == len(expected)
     assert got == expected
+
+
+@contextlib.contextmanager
+def _few_state_partitions(spark, n: int = 4):
+    """Start streams with ``n`` state-store partitions (the checkpoint
+    fixes the count at its first batch): each micro-batch of a small
+    feed then runs ``n`` pandas state tasks instead of the batch
+    default's 32."""
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, prior)
+
+
+def test_cadence_stream_labels_match_batch(spark, tmp_path):
+    """Feeds with constant intervals have mean = median, so the stream's
+    mean-based label must equal batch freshness_cadence's median-based
+    one: daily, weekly, monthly and insufficient_data. The feed crosses
+    a micro-batch boundary (two time-ordered files)."""
+    import datetime as dt
+    import os
+
+    from forest_open_data_pipelines_spark.operators.freshness import (
+        freshness_cadence,
+    )
+    from forest_open_data_pipelines_spark.streaming.cadence import (
+        cadence_monitor_stream,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 6, 0)
+    feeds = {1: (35, 1), 2: (10, 7), 3: (6, 30), 4: (2, 3)}  # n, step days
+    rows = [
+        (uid * 1000 + i, t0 + dt.timedelta(days=i * step), uid, "view", 1.0, "{}")
+        for uid, (n, step) in feeds.items()
+        for i in range(n)
+    ]
+    events = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    src = tmp_path / "cad_src"
+    split = F.lit(dt.datetime(2024, 2, 15))
+    for i, part in enumerate(
+        (events.where(F.col("ts") < split), events.where(F.col("ts") >= split))
+    ):
+        part.coalesce(1).write.parquet(str(src / f"p{i}"))
+        for f in (src / f"p{i}").iterdir():
+            os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    stream = (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(str(src))
+    )
+    with _few_state_partitions(spark):
+        query = (
+            cadence_monitor_stream(stream)
+            .writeStream.format("memory")
+            .queryName("cadence_labels_test")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt_cad_labels"))
+            .start()
+        )
+    try:
+        query.processAllAvailable()
+        got = {
+            r["user_id"]: r["suggested_cadence"]
+            for r in spark.sql(
+                """SELECT * FROM (
+                     SELECT *, row_number() OVER (
+                       PARTITION BY user_id ORDER BY observations DESC) AS rn
+                     FROM cadence_labels_test) WHERE rn = 1"""
+            ).collect()
+        }
+    finally:
+        query.stop()
+    batch = {
+        r["user_id"]: r["suggested_cadence"]
+        for r in freshness_cadence(events).collect()
+    }
+    assert batch == {
+        1: "daily", 2: "weekly", 3: "monthly", 4: "insufficient_data"
+    }
+    assert got == batch
+
+
+@pytest.fixture(scope="module")
+def ordered_event_files(spark, tmp_path_factory):
+    """The sf0.01 events as three time-ordered parquet files, one per
+    micro-batch under ``maxFilesPerTrigger=1`` (the stateful streams
+    assume each key's events arrive in time order)."""
+    import os
+    import shutil
+
+    from pyspark.sql import Window
+
+    from tests.conftest import SF_DIR_MID
+
+    events = load_table(spark, SF_DIR_MID, "events")
+    staged = events.withColumn(
+        "part", F.ntile(3).over(Window.orderBy("ts", "event_id"))
+    )
+    root = tmp_path_factory.mktemp("ordered_events")
+    src = root / "src"
+    src.mkdir()
+    for i in range(3):
+        out = root / f"part{i}"
+        staged.where(F.col("part") == i + 1).drop("part").coalesce(1).write.parquet(
+            str(out)
+        )
+        f = next(p for p in out.iterdir() if p.name.endswith(".parquet"))
+        shutil.copy(f, src / f"{i}.parquet")
+        os.utime(src / f"{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
+    return str(src), events.schema
+
+
+@pytest.mark.parametrize("module", ["cadence", "sessions", "observations"])
+def test_stateful_stream_survives_sink_crash(
+    spark, tmp_path, ordered_event_files, module
+):
+    """A foreachBatch sink that raises once at batch 2, then a restart on
+    the same checkpoint: the committed rows must equal an uninterrupted
+    run's, with nothing lost or duplicated (update mode: the last row
+    per key)."""
+    from collections import Counter
+
+    from pyspark.errors import StreamingQueryException
+
+    from forest_open_data_pipelines_spark.streaming.cadence import (
+        cadence_monitor_stream,
+    )
+    from forest_open_data_pipelines_spark.streaming.observations import (
+        observations_append_stream,
+    )
+    from forest_open_data_pipelines_spark.streaming.sessions import (
+        sessionize_stream,
+    )
+
+    build, mode = {
+        "cadence": (cadence_monitor_stream, "update"),
+        "sessions": (sessionize_stream, "append"),
+        "observations": (observations_append_stream, "append"),
+    }[module]
+    src, schema = ordered_event_files
+
+    def drain(ckpt, fail_at=None):
+        committed, failed = [], []
+
+        def sink(batch_df, batch_id):
+            rows = batch_df.collect()
+            if batch_id == fail_at and not failed:
+                failed.append(batch_id)
+                raise RuntimeError("injected sink failure")
+            committed.append((batch_id, rows))
+
+        def run(expect_failure):
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            q = (
+                build(stream).writeStream.foreachBatch(sink)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                if expect_failure:
+                    with pytest.raises(StreamingQueryException):
+                        q.processAllAvailable()
+                else:
+                    q.processAllAvailable()
+            finally:
+                q.stop()
+
+        if fail_at is not None:
+            run(expect_failure=True)
+            assert failed == [fail_at]
+        run(expect_failure=False)
+        return committed
+
+    with _few_state_partitions(spark):
+        clean = drain(str(tmp_path / "ckpt_clean"))
+        crashed = drain(str(tmp_path / "ckpt_crash"), fail_at=2)
+    assert [b for b, _ in crashed] == [b for b, _ in clean] == [0, 1, 2]
+    if mode == "update":
+        last = lambda c: {r["user_id"]: r for _, rows in c for r in rows}
+        assert last(crashed) == last(clean)
+        assert last(clean)
+    else:
+        flat = lambda c: Counter(r for _, rows in c for r in rows)
+        assert flat(crashed) == flat(clean)
+        assert flat(clean)
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -975,6 +1187,24 @@ def test_charlm_gate_stream_matches_batch(spark, tmp_path):
     row = charlm_gate_stream(novel, docs).collect()[0]
     assert row["n_bigrams"] == 5
     assert row["entropy_bits"] is not None and row["entropy_bits"] > 0
+    # 'þ' never occurs in the corpus, so all five bigrams score the
+    # uniform 1/V floor: the same _lp_micro column on a one-row frame
+    from forest_open_data_pipelines_spark.functions.columns import ratio
+    from forest_open_data_pipelines_spark.operators.textops import (
+        _lp_micro,
+        clean_text,
+    )
+
+    chars = docs.select(
+        F.explode(F.split(F.lower(clean_text(F.col("text"))), "")).alias("c")
+    ).where(F.col("c") != "")
+    assert chars.where(F.col("c") == "þ").isEmpty()
+    v = chars.agg(F.countDistinct("c")).first()[0]
+    lp = _lp_micro(F.lit(0), F.lit(0), F.lit(v))
+    want = spark.range(1).select(
+        ratio(-(F.lit(5) * lp) / (F.lit(5) * F.lit(1e6)))
+    ).first()[0]
+    assert row["entropy_bits"] == want
 
 
 def test_dsir_gate_stream_matches_batch(spark, tmp_path):
