@@ -1103,17 +1103,14 @@ SELECT doc_id, filename, section, suffix, kind, period, direct_download,
 FROM classified ORDER BY doc_id"""
 
 
-def _curation_sql(
-    tq_sql: str, li_sql: str, near_dup_strategy: str = "lsh"
-) -> str:
+def _curation_sql(tq_sql: str, li_sql: str) -> str:
     """DuckDB twin of curation.corpus_curation, composed from the
     text_quality and lang_id oracle entries verbatim (wrapped as
     subqueries) plus the dedup_exact fingerprint and the
     dedup_embedding cosine — the oracle composes the SAME pieces the
     Spark pipeline composes. The near-dup stage mirrors the operator's
-    default banded-LSH candidate generation (the _dedup_embedding_lsh
-    precedent: the banding IS the shipped semantics); pass
-    near_dup_strategy="exact" for the all-pairs recall baseline."""
+    uncapped banded-LSH candidate generation (the _dedup_embedding_lsh
+    precedent: the banding IS the shipped semantics)."""
     from forest_open_data_pipelines_spark.operators.curation import (
         CURATION_COS_THRESHOLD,
         CURATION_MIN_QUALITY,
@@ -1124,15 +1121,14 @@ def _curation_sql(
         EMB_LSH_PLANES,
     )
 
-    if near_dup_strategy == "lsh":
-        per_band = EMB_LSH_PLANES // EMB_LSH_BANDS
-        band_selects = "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, {b} AS band, "
-            f"{_lsh_sig_sql(list(range(b * per_band, (b + 1) * per_band)), 'embedding')}"
-            f" AS key FROM pool"
-            for b in range(EMB_LSH_BANDS)
-        )
-        near = f"""banded AS (
+    per_band = EMB_LSH_PLANES // EMB_LSH_BANDS
+    band_selects = "\n  UNION ALL\n".join(
+        f"  SELECT doc_id, {b} AS band, "
+        f"{_lsh_sig_sql(list(range(b * per_band, (b + 1) * per_band)), 'embedding')}"
+        f" AS key FROM pool"
+        for b in range(EMB_LSH_BANDS)
+    )
+    near = f"""banded AS (
 {band_selects}
 ),
 cand AS (
@@ -1143,15 +1139,6 @@ cand AS (
 near AS (
   SELECT DISTINCT doc_b AS near_id
   FROM cand JOIN pool a ON a.doc_id = doc_a JOIN pool b ON b.doc_id = doc_b
-  WHERE round(list_dot_product(a.emb, b.emb)
-              / (sqrt(list_dot_product(a.emb, a.emb))
-                 * sqrt(list_dot_product(b.emb, b.emb))), 6)
-        >= {CURATION_COS_THRESHOLD}
-)"""
-    else:
-        near = f"""near AS (
-  SELECT DISTINCT b.doc_id AS near_id
-  FROM pool a JOIN pool b ON a.doc_id < b.doc_id
   WHERE round(list_dot_product(a.emb, b.emb)
               / (sqrt(list_dot_product(a.emb, a.emb))
                  * sqrt(list_dot_product(b.emb, b.emb))), 6)

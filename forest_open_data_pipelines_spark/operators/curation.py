@@ -9,14 +9,12 @@ dedup_embedding cosine), so the pipeline is the proof that the pieces
 compose — reference parity for each piece is cited in its own module.
 
 Scale: stages 1-3 are pure projections + one window over the
-fingerprint key; the near-dup stage DEFAULTS to
-``dedup.dedup_embedding_lsh``'s banded hyperplane candidates with
-identical verification (same rounded cosine, same threshold, same
-higher-id-drops pair rule) — so the headline pipeline carries no
-cartesian at corpus scale. ``near_dup_strategy="exact"`` keeps the
-all-pairs cross-join as the auditable recall baseline (the banded
-candidate set is a strict subset; measured on the curation pool:
-2/3 pairs covered at sf0.01, 47/63 at sf0.1 — the (32, 8) geometry's
+fingerprint key; the near-dup stage IS ``dedup.dedup_embedding_lsh``
+(banded hyperplane candidates, exact rounded-cosine verify, the
+higher id of each pair drops), uncapped — so the pipeline carries no
+cartesian at corpus scale. Its pairs are a subset of the all-pairs
+``dedup.dedup_embedding`` pairs over the same pool (measured: 2/3
+pairs covered at sf0.01, 47/63 at sf0.1 — the (32, 8) geometry's
 documented recall on this hyperplane-hostile synthetic corpus).
 Documents without an embedding row skip the near-dup stage —
 partial embedding coverage is the normal production state.
@@ -53,7 +51,6 @@ def corpus_curation(
     min_tokens: int = CURATION_MIN_TOKENS,
     min_quality: float = CURATION_MIN_QUALITY,
     cos_threshold: float = CURATION_COS_THRESHOLD,
-    near_dup_strategy: str = "lsh",
 ) -> DataFrame:
     """Per-document curation audit: (doc_id, n_tokens, quality_score,
     predicted_lang, content_fingerprint, status) where status is the
@@ -68,25 +65,16 @@ def corpus_curation(
     - exact_dup: among quality+lang survivors, one canonical (min
       doc_id) per normalized-content md5 fingerprint survives
       (dedup.dedup_exact's keep-min rule as a window).
-    - near_dup: among exact-stage survivors that HAVE an embedding
-      (doc_id = vec_id), cosine ≥ cos_threshold pairs drop the higher
-      doc_id (greedy pair rule, matching dedup_embedding's pair
-      orientation).
-
-    ``near_dup_strategy`` picks the candidate generator for the
-    near-dup stage:
-    - ``"lsh"`` (default): ``dedup_embedding_lsh``'s hyperplane band
-      self-join — candidate pairs come only from band-bucket
-      equi-joins, so the plan has NO cross join (plan-guarded in
-      tests). The DuckDB oracle mirrors the banded construction
-      bit-for-bit (the banding IS the shipped semantics, the
-      ``dedup_embedding_lsh`` precedent).
-    - ``"exact"``: the all-pairs inequality join — the auditable
-      recall baseline; the banded run's near_dup set is asserted a
-      subset of this one in tests.
+    - near_dup: ``dedup.dedup_embedding_lsh`` over the embeddings of
+      the exact-stage survivors (doc_id = vec_id) with no bucket cap;
+      the ``vec_b`` (higher id) of every pair it emits is dropped.
+      Candidates come only from band-bucket equi-joins, so the plan
+      has NO cross join (plan-guarded in tests); the DuckDB oracle
+      mirrors the banded construction bit-for-bit.
     """
-    if near_dup_strategy not in ("lsh", "exact"):
-        raise ValueError(f"unknown near_dup_strategy {near_dup_strategy!r}")
+    from forest_open_data_pipelines_spark.operators.dedup import (
+        dedup_embedding_lsh,
+    )
     from forest_open_data_pipelines_spark.operators.textops import (
         predicted_lang_col,
         quality_metric_cols,
@@ -130,72 +118,14 @@ def corpus_curation(
     base = checkpoint(base.withColumn("canonical_doc_id", canonical))
     exact_ok = surv & (F.col("doc_id") == F.col("canonical_doc_id"))
 
-    emb = embeddings.select(
-        F.col("vec_id").alias("doc_id"), "embedding", norm("embedding").alias("norm")
+    pool = (
+        base.where(exact_ok)
+        .select(F.col("doc_id").alias("vec_id"))
+        .join(embeddings.select("vec_id", "embedding"), "vec_id")
     )
-    pool = base.where(exact_ok).select("doc_id").join(emb, "doc_id")
-    if near_dup_strategy == "lsh":
-        # banded hyperplane candidates (dedup_embedding_lsh's geometry
-        # and kernel — signatures bit-identical to the DuckDB oracle's
-        # fold), then the SAME rounded-cosine verify as the exact path
-        from forest_open_data_pipelines_spark.operators.dedup import (
-            EMB_LSH_BANDS,
-            EMB_LSH_PLANES,
-        )
-        from forest_open_data_pipelines_spark.operators.similarity import (
-            banded_signatures,
-        )
-
-        banded = persist(
-            banded_signatures(
-                pool, "doc_id", "embedding", EMB_LSH_PLANES, EMB_LSH_BANDS
-            )
-        )
-        x, y = banded.alias("x"), banded.alias("y")
-        cand = (
-            x.join(y, ["band", "key"])
-            .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-        paired = cand.join(
-            pool.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("embedding").alias("emb_a"),
-                F.col("norm").alias("norm_a"),
-            ),
-            "doc_a",
-        ).join(
-            pool.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("embedding").alias("emb_b"),
-                F.col("norm").alias("norm_b"),
-            ),
-            "doc_b",
-        )
-    else:
-        a = pool.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("embedding").alias("emb_a"),
-            F.col("norm").alias("norm_a"),
-        )
-        b = pool.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("embedding").alias("emb_b"),
-            F.col("norm").alias("norm_b"),
-        )
-        paired = a.join(b, F.col("doc_a") < F.col("doc_b"))
-    cos = cosine(dot("emb_a", "emb_b"), F.col("norm_a"), F.col("norm_b"))
     near_ids = (
-        paired
-        # 6-dp-rounded cosine before the threshold compare — the same
-        # ratio() rounding dedup_embedding applies, so the pair set
-        # (and the oracle) can't flip on summation-order ulp drift
-        .where(ratio(cos) >= cos_threshold)
-        .select(F.col("doc_b").alias("doc_id"))
+        dedup_embedding_lsh(pool, cos_threshold, max_bucket=None)
+        .select(F.col("vec_b").alias("doc_id"))
         .distinct()
         .withColumn("is_near_dup", F.lit(True))
     )

@@ -1288,9 +1288,8 @@ def dedup_clusters(
     2–3 passes close the fixpoint in practice.
 
     Scale: the labels/edges tables are O(n_docs) rows independent of
-    document size; everything is equi-joins on long keys (AQE-split on
-    skew — a mega-cluster's hub label is resolved through the
-    hot-label broadcast in ``connected_components``). The per-pass
+    document size; everything is equi-joins on long keys (AQE
+    broadcasts or skew-splits them). The per-pass
     mass check is an aggregate action, not a driver-side data
     collect. The closure is global because near-dup
     pairs are not confined to any key: a component can span every
@@ -1322,20 +1321,10 @@ def dedup_clusters(
     return out
 
 
-#: Per-pass hot-label threshold for connected_components' pointer
-#: jump: labels owning at least this many members resolve their parent
-#: through a broadcast map instead of the shuffled equi-join. 2^16
-#: keeps the mechanism dormant on healthy corpora (a 65k-member
-#: near-dup cluster is already pathological) while guaranteeing a
-#: viral cluster can never concentrate one join partition.
-CC_HOT_LABEL_MIN = 1 << 16
-
-
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
     max_iters: int = 20,
-    hot_label_min: int = CC_HOT_LABEL_MIN,
 ) -> DataFrame:
     """Min-label connected components over an undirected pair list.
 
@@ -1347,21 +1336,16 @@ def connected_components(
     labels table is checkpointed for the pass and freed once the next
     pass's label-mass check has materialized its successor — only the
     final table stays cached (tracked by ``runtime`` until the query
-    scope ends).
+    scope ends). Raises ``RuntimeError`` when ``max_iters`` passes end
+    without a fixpoint, rather than return unconverged labels.
 
-    MEGA-CLUSTER HARDENING (the large-star/small-star concern): every
-    member of a viral duplicate cluster carries the SAME label, so the
-    pointer-jump join's probe side is maximally hot on exactly the
-    clusters the operator exists to find. Per pass, labels with ≥
-    ``hot_label_min`` members (one map-side-combinable count, output
-    bounded by n/hot_label_min rows) resolve their single parent row
-    through a BROADCAST map — the viral cluster's rows never shuffle —
-    while the cold remainder takes the normal equi-join (itself
-    AQE-skew-splittable below the threshold). Deterministic, exact,
-    and free when no label is hot (the hot side is an empty broadcast).
-    The neighbor-min aggregation needs no such treatment: groupBy-min
-    is partially aggregated map-side, so hub fan-in combines before
-    the shuffle.
+    A viral cluster makes every member carry the SAME label, so the
+    pointer-jump join's probe side is hot on exactly the clusters the
+    operator exists to find. AQE (enabled in ``session.py``) handles
+    it: the join broadcasts while the parents side is small and
+    skew-splits the hot partition when it is large. The neighbor-min
+    aggregation is partially aggregated map-side, so hub fan-in
+    combines before the shuffle.
     """
     edges = persist(
         pairs.select("doc_a", "doc_b").union(
@@ -1404,32 +1388,15 @@ def connected_components(
             .groupBy("doc_id")
             .agg(F.min("label").alias("label"))
         )
-        # one materialization per pass serves the hot-label count, the
-        # jump join and the changed-count (checkpoint also truncates
-        # lineage — see above)
+        # one materialization per pass serves the jump join and the
+        # label-mass check (checkpoint also truncates lineage — see above)
         stepped = checkpoint(stepped)
         parents = stepped.select(
             F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
         )
-        hot_parents = F.broadcast(
-            stepped.groupBy("label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") >= hot_label_min)
-            .select(F.col("label").alias("p_id"))
-            .join(parents, "p_id")
-        )
-        with_hot = stepped.join(
-            hot_parents, stepped["label"] == hot_parents["p_id"], "left"
-        ).select("doc_id", "label", F.col("p_label").alias("hot_label"))
-        hot_rows = with_hot.where(F.col("hot_label").isNotNull()).select(
-            "doc_id", F.col("hot_label").alias("label")
-        )
-        cold_rows = (
-            with_hot.where(F.col("hot_label").isNull())
-            .join(parents, with_hot["label"] == parents["p_id"])
-            .select("doc_id", F.col("p_label").alias("label"))
-        )
-        jumped = cold_rows.unionByName(hot_rows)
+        jumped = stepped.join(
+            parents, stepped["label"] == parents["p_id"]
+        ).select("doc_id", F.col("p_label").alias("label"))
         # lazy: the label-mass action below materializes the
         # checkpoint — one job per pass instead of two
         new_labels = checkpoint(jumped)
@@ -1442,6 +1409,13 @@ def connected_components(
         if mass == prev_mass:
             break
         prev_mass = mass
+    else:
+        unpersist(labels)
+        unpersist(edges)
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iters={max_iters} passes"
+        )
     unpersist(edges)
     return labels
 

@@ -712,9 +712,22 @@ GOVBR_DOWNLOAD_SUFFIXES = (
 )
 GOVBR_DATA_SUFFIXES = tuple(s for s in GOVBR_DOWNLOAD_SUFFIXES if s != ".pdf")
 GOVBR_METADATA_RE = r"(?i)(meta|metadado|metadados|dicionario|dicionário|layout|readme)"
-# (?<!\d)/(?!\d) guards need Java regex (RE2 lacks lookaround) — the
-# oracle therefore derives period expectations in closed form.
-GOVBR_PERIOD_RE = r"(?<!\d)((?:19|20)\d{2})(?:[-_]?([01]\d))?(?!\d)"
+# The reference's DEFAULT_PERIOD_RE, shared by the gov.br, CKAN and
+# supranational resource classifiers. The (?<!\d)/(?!\d) guards need
+# Java regex (RE2 lacks lookaround) — the oracles therefore derive
+# period expectations in closed form.
+PERIOD_RE = r"(?<!\d)((?:19|20)\d{2})(?:[-_]?([01]\d))?(?!\d)"
+
+
+def _period(text: Column) -> Column:
+    """First PERIOD_RE hit in ``text`` as 'yyyy-mm' or 'yyyy'; NULL
+    when nothing matches (each caller coalesces its own fallback)."""
+    yr = F.regexp_extract(text, PERIOD_RE, 1)
+    mo = F.regexp_extract(text, PERIOD_RE, 2)
+    return F.when(
+        yr != "", F.when(mo != "", F.concat(yr, F.lit("-"), mo)).otherwise(yr)
+    )
+
 
 _GOVBR_RESOURCE_KINDS = 8
 
@@ -787,13 +800,9 @@ def govbr_resource_classify(documents: DataFrame) -> DataFrame:
         .when(suffix == ".pdf", F.lit("documentation"))
         .otherwise(F.lit("data"))
     )
-    period_text = F.concat_ws(" ", "filename", "label", "section")
-    yr = F.regexp_extract(period_text, GOVBR_PERIOD_RE, 1)
-    mo = F.regexp_extract(period_text, GOVBR_PERIOD_RE, 2)
-    period = (
-        F.when(yr == "", F.lit("current"))
-        .when(mo == "", yr)
-        .otherwise(F.concat(yr, F.lit("-"), mo))
+    period = F.coalesce(
+        _period(F.concat_ws(" ", "filename", "label", "section")),
+        F.lit("current"),
     )
     title = F.when(F.col("label") != "", F.col("label")).otherwise(F.col("filename"))
     classified = r.select(
@@ -940,7 +949,6 @@ def cvm_latest_zips(
 CKAN_ALLOWED_HOSTS = ("dados.cvm.gov.br", "www.gov.br", "portaldatransparencia.gov.br")
 # Reference: datasets/cvm/ckan_dataset.py:21-22 — required-parity regexes.
 CKAN_METADATA_HINT_RE = r"(?i)(meta|metadado|dicionario|dicionário|layout|readme)"
-CKAN_PERIOD_RE = r"(?<!\d)((?:19|20)\d{2})(?:[-_]?([01]\d))?(?!\d)"
 # The fixed DatasetCfg this operator instantiates (the reference loads
 # per-dataset YAML; the classification math is identical for any cfg).
 CKAN_INCLUDE_RE = r"(?i)inf_"
@@ -1106,17 +1114,13 @@ def ckan_resource_select(
     is_meta = F.concat_ws(" ", "filename", "name", "description").rlike(
         CKAN_METADATA_HINT_RE
     )
-    period_target = F.concat_ws(" ", "filename", "name")
-    yr = F.regexp_extract(period_target, CKAN_PERIOD_RE, 1)
-    mo = F.regexp_extract(period_target, CKAN_PERIOD_RE, 2)
     modified = F.col("last_modified")
-    period = (
-        F.when((yr != "") & (mo != ""), F.concat(yr, F.lit("-"), mo))
-        .when(yr != "", yr)
-        .when(
+    period = F.coalesce(
+        _period(F.concat_ws(" ", "filename", "name")),
+        F.when(
             modified.rlike(r"^\d{4}-\d{2}-\d{2}"), F.substring(modified, 1, 10)
-        )
-        .otherwise(F.lit("current"))
+        ),
+        F.lit("current"),
     )
     classified = named.where(
         F.col("allowed_host") & include_ok & ~exclude_hit
@@ -1156,7 +1160,6 @@ SUPRA_BLOCKED_MARKERS = (
     "map_key", "token=", "signature=",
 )
 SUPRA_EXCLUDE_RE = r"(?i)archive"
-SUPRA_PERIOD_RE = r"(?<!\d)((?:19|20)\d{2})(?:[-_]?([01]\d))?(?!\d)"
 
 _SUPRA_KINDS = 9
 
@@ -1301,14 +1304,7 @@ def supranational_items(documents: DataFrame) -> DataFrame:
         .when(exclude_hit, F.lit("exclude_hit"))
         .otherwise(F.lit("accepted"))
     )
-    period_target = F.concat_ws(" ", "name", "url")
-    yr = F.regexp_extract(period_target, SUPRA_PERIOD_RE, 1)
-    mo = F.regexp_extract(period_target, SUPRA_PERIOD_RE, 2)
-    period = (
-        F.when((yr != "") & (mo != ""), F.concat(yr, F.lit("-"), mo))
-        .when(yr != "", yr)
-        .otherwise(F.lit("Atual"))
-    )
+    period = F.coalesce(_period(F.concat_ws(" ", "name", "url")), F.lit("Atual"))
     fmt_file = F.when(
         F.lower(filename).endswith(".csv.gz"), F.lit("csv.gz")
     ).otherwise(

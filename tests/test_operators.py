@@ -1941,9 +1941,8 @@ def test_corpus_curation_statuses_cover_corpus(spark):
 
 
 def test_corpus_curation_lsh_default_no_cross_join(spark):
-    """The shipped default (near_dup_strategy='lsh') must carry NO
-    cartesian in its plan — the judge-flagged scale killer. The exact
-    baseline keeps its (audited) inequality join."""
+    """The banded near-dup stage must carry NO cartesian in its plan —
+    an O(n²) join cannot run at corpus scale."""
     from forest_open_data_pipelines_spark.operators import curation
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -1957,29 +1956,29 @@ def test_corpus_curation_lsh_default_no_cross_join(spark):
 
 
 def test_corpus_curation_lsh_subset_of_exact(spark):
-    """Banded candidates are a strict subset of the all-pairs scan, so
-    the lsh run's near_dup set must be ⊆ the exact run's, every doc the
-    lsh run drops must also be dropped by exact, and all other statuses
-    must be IDENTICAL (quality/lang/exact_dup don't touch embeddings)."""
-    from forest_open_data_pipelines_spark.operators import curation
+    """Banded candidates are a subset of the all-pairs scan: every
+    near_dup doc must be the higher id (vec_b) of an exact
+    dedup_embedding pair over the curation pool — the embeddings of
+    the docs that reach the near-dup stage (status kept or near_dup)."""
+    from forest_open_data_pipelines_spark.operators import curation, dedup
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    lsh = {
+    status = {
         r.doc_id: r.status
         for r in curation.corpus_curation(docs, emb).collect()
     }
-    exact = {
-        r.doc_id: r.status
-        for r in curation.corpus_curation(
-            docs, emb, near_dup_strategy="exact"
+    pool_ids = [d for d, s in status.items() if s in ("kept", "near_dup")]
+    pool = emb.where(F.col("vec_id").isin(pool_ids))
+    exact_b = {
+        r.vec_b
+        for r in dedup.dedup_embedding(
+            pool, curation.CURATION_COS_THRESHOLD
         ).collect()
     }
-    lsh_near = {d for d, s in lsh.items() if s == "near_dup"}
-    exact_near = {d for d, s in exact.items() if s == "near_dup"}
-    assert lsh_near <= exact_near
-    for d in set(lsh) - exact_near:
-        assert lsh[d] == exact[d], d
+    near = {d for d, s in status.items() if s == "near_dup"}
+    assert near, "no near_dup doc on this corpus"
+    assert near <= exact_b
 
 
 def test_govbr_resource_classify_pick_and_kinds(spark):
@@ -2033,36 +2032,22 @@ def test_connected_components_chain_and_singletons(spark):
     }
 
 
-def test_connected_components_hot_label_broadcast_path(spark):
-    """Mega-cluster hardening: with hot_label_min low enough to fire,
-    a viral star cluster (every node paired to node 0) resolves through
-    the broadcast hot-parent map and the labels equal the default-path
-    run exactly — the hot/cold split is a pure execution-strategy
-    change."""
+def test_connected_components_raises_when_not_converged(spark):
+    """A 64-node chain needs ~log2(64) pointer-jump passes: two passes
+    must raise (naming max_iters) instead of returning unconverged
+    labels, and the default budget closes the chain."""
     from forest_open_data_pipelines_spark.operators.dedup import (
         connected_components,
     )
 
-    n = 400
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-    # viral cluster: 0-{1..299} star (a 300-member label is hot at
-    # threshold 10); 300..399 pair up into 50 cold two-node clusters
+    nodes = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
     pairs = spark.createDataFrame(
-        [(0, i) for i in range(1, 300)]
-        + [(i, i + 1) for i in range(300, 400, 2)],
-        ["doc_a", "doc_b"],
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
-    hot = {
-        r["doc_id"]: r["label"]
-        for r in connected_components(nodes, pairs, hot_label_min=10).collect()
-    }
-    cold = {
-        r["doc_id"]: r["label"]
-        for r in connected_components(nodes, pairs).collect()
-    }
-    assert hot == cold
-    assert all(hot[i] == 0 for i in range(300))
-    assert all(hot[i] == i - (i % 2 == 1) for i in range(300, 400))
+    with pytest.raises(RuntimeError, match="max_iters=2"):
+        connected_components(nodes, pairs, max_iters=2)
+    labels = connected_components(nodes, pairs).collect()
+    assert len(labels) == 64 and {r["label"] for r in labels} == {0}
 
 
 def test_dedup_clusters_partitions_and_closes_pairs(spark, sf_dir):
@@ -3066,10 +3051,12 @@ def test_connected_components_random_graphs_vs_union_find(spark):
     for _ in range(5):
         n = rng.randint(5, 30)
         m = rng.randint(0, 2 * n)
+        # self-loops and repeated pairs kept: a caller's pairs= frame
+        # can carry both
         edges = [
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]
-        cases.append((n, [(a, b) for a, b in edges if a != b]))
+        cases.append((n, edges))
     # viral star (hub 0) + a disjoint 20-node chain, and an edgeless graph
     cases.append((60, [(0, i) for i in range(1, 40)] + [(i, i + 1) for i in range(40, 59)]))
     cases.append((12, []))
